@@ -2,27 +2,27 @@
 """Seeded input generator for the layered benchmark.
 
 Writes a complete table directory (the ten parquet tables every
-`SparkEntry` query and its DuckDB oracle twin read) drawn only from
-`--seed`: the same seed gives identical tables.
+`SparkEntry` query and its DuckDB oracle twin read) for one workload,
+drawn only from `--seed`: the same seed gives identical tables.
 
-Two text shapes for the `documents` table:
+The workloads differ in the `documents` table:
 
-  harness  the engine's test-corpus shape: 10-100 word snippets over a
-           31-word vocabulary, 5 languages, 20 round-robin sources, with
-           a few planted exact and near duplicates (the dedup family's
-           positives);
-  urls     the reference job's input: space-separated
-           `https://xxx.com/p/N` URLs drawn from a Zipf distribution
-           (exponent 1.05) over `--urls` distinct keys. Hosts are the
-           reference's 3-letter `.com` domains; the `/p/N` path lifts the
-           key space past its 17,576-domain cap.
+  curation        the engine's test-corpus shape: 1200 snippets of 10-100
+                  words over a 31-word vocabulary, 5 languages, 20
+                  round-robin sources, with a few planted exact and near
+                  duplicates (the dedup family's positives);
+  urlcount_large  the reference job's input: about 393k space-separated
+                  `https://xxx.com/p/N` URLs in 16384 documents, drawn
+                  from a Zipf distribution (exponent 1.05) over 80k
+                  distinct keys. Hosts are the reference's 3-letter `.com`
+                  domains; the `/p/N` path lifts the key space past its
+                  17,576-domain cap.
 
 The relational, event and embedding tables keep the harness schemas and
 key layouts (dense 0-based ids, 64-dim unit embeddings, one month of
-events), scaled by the row-count arguments.
+events), at fixed sizes.
 
-Usage: gen_data.py --seed N --out DIR [--text harness|urls] [--docs N]
-                   [--urls N] [--tokens-per-doc N] [--events N] ...
+Usage: gen_data.py --workload urlcount_large|curation --seed N --out DIR
 """
 import argparse
 import os
@@ -45,6 +45,21 @@ PART_TYPES = np.array(["LARGE", "ECONOMY", "SMALL", "STANDARD", "MEDIUM", "PROMO
 PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 ROW_GROUP = 2048
+ZIPF_EXPONENT = 1.05
+
+# the documents table per workload: text shape, documents, and for URL
+# text the distinct keys and mean URLs per document
+WORKLOADS = {
+    "urlcount_large": {"text": "urls", "docs": 16384, "urls": 80_000, "tokens_per_doc": 24},
+    "curation": {"text": "harness", "docs": 1200},
+}
+EMBEDDINGS = 1000
+EVENTS = 10_000
+USERS = 300
+CUSTOMERS = 1500
+SUPPLIERS = 100
+PARTS = 2000
+ORDERS = 15_000
 
 
 def write(out, name, columns):
@@ -81,7 +96,7 @@ def zipf_ranks(rng, n_keys, n_draws, exponent):
     return np.minimum(np.searchsorted(cdf, rng.random(n_draws)), n_keys - 1)
 
 
-def url_texts(rng, n_docs, n_urls, tokens_per_doc, exponent):
+def url_texts(rng, n_docs, n_urls, tokens_per_doc):
     hosts = np.array(["https://" + a + b + c + ".com"
                       for a in string.ascii_lowercase
                       for b in string.ascii_lowercase
@@ -89,7 +104,7 @@ def url_texts(rng, n_docs, n_urls, tokens_per_doc, exponent):
     # a seeded permutation decouples a key's frequency rank from its name
     keys = rng.permutation(n_urls)
     lengths = rng.integers(tokens_per_doc // 2, tokens_per_doc * 3 // 2 + 1, n_docs)
-    ids = keys[zipf_ranks(rng, n_urls, int(lengths.sum()), exponent)]
+    ids = keys[zipf_ranks(rng, n_urls, int(lengths.sum()), ZIPF_EXPONENT)]
     urls = np.char.add(np.char.add(hosts[ids % len(hosts)], "/p/"),
                        (ids // len(hosts)).astype(str))
     texts, pos = [], 0
@@ -99,10 +114,10 @@ def url_texts(rng, n_docs, n_urls, tokens_per_doc, exponent):
     return texts
 
 
-def documents(rng, args):
-    n = args.docs
-    if args.text == "urls":
-        texts = url_texts(rng, n, args.urls, args.tokens_per_doc, args.zipf)
+def documents(rng, shape):
+    n = shape["docs"]
+    if shape["text"] == "urls":
+        texts = url_texts(rng, n, shape["urls"], shape["tokens_per_doc"])
     else:
         texts = harness_texts(rng, n)
     ids = np.arange(n, dtype=np.int64)
@@ -125,14 +140,14 @@ def embeddings(rng, n):
     }
 
 
-def events(rng, n, n_users):
+def events(rng, n):
     start = np.datetime64("2024-01-01T00:00:00", "us")
     span_us = 30 * 24 * 3600 * 10**6
     ts = start + np.sort(rng.integers(0, span_us, n)).astype("timedelta64[us]")
     return {
         "event_id": np.arange(n, dtype=np.int64),
         "ts": pa.array(ts, type=pa.timestamp("us")),
-        "user_id": rng.integers(0, n_users, n).astype(np.int64),
+        "user_id": rng.integers(0, USERS, n).astype(np.int64),
         "event_type": EVENT_TYPES[rng.integers(0, len(EVENT_TYPES), n)],
         "value": np.round(rng.exponential(50.0, n), 2),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
@@ -143,13 +158,13 @@ def money(rng, lo, hi, n):
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
-def relational(rng, out, args):
+def relational(rng, out):
     write(out, "region", {"r_regionkey": np.arange(5, dtype=np.int32),
                           "r_name": REGIONS})
     write(out, "nation", {"n_nationkey": np.arange(25, dtype=np.int32),
                           "n_name": [f"NATION_{i}" for i in range(25)],
                           "n_regionkey": (np.arange(25) % 5).astype(np.int32)})
-    nc, ns, npart, no = args.customers, args.suppliers, args.parts, args.orders
+    nc, ns, npart, no = CUSTOMERS, SUPPLIERS, PARTS, ORDERS
     write(out, "customer", {
         "c_custkey": np.arange(nc, dtype=np.int64),
         "c_name": [f"Customer#{i:09d}" for i in range(nc)],
@@ -200,30 +215,19 @@ def relational(rng, out, args):
 
 def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--out", required=True)
-    p.add_argument("--text", choices=["harness", "urls"], default="harness")
-    p.add_argument("--docs", type=int, default=2000)
-    p.add_argument("--urls", type=int, default=100_000)
-    p.add_argument("--tokens-per-doc", type=int, default=400)
-    p.add_argument("--zipf", type=float, default=1.05)
-    p.add_argument("--embeddings", type=int, default=1000)
-    p.add_argument("--events", type=int, default=20_000)
-    p.add_argument("--users", type=int, default=300)
-    p.add_argument("--customers", type=int, default=1500)
-    p.add_argument("--suppliers", type=int, default=100)
-    p.add_argument("--parts", type=int, default=2000)
-    p.add_argument("--orders", type=int, default=15_000)
     args = p.parse_args()
     os.makedirs(args.out, exist_ok=True)
     # one independent stream per table, so resizing one table leaves
     # every other table's rows unchanged
     streams = np.random.SeedSequence(args.seed % 2**64).spawn(4)
     rng = [np.random.default_rng(s) for s in streams]
-    write(args.out, "documents", documents(rng[0], args))
-    write(args.out, "embeddings", embeddings(rng[1], args.embeddings))
-    write(args.out, "events", events(rng[2], args.events, args.users))
-    relational(rng[3], args.out, args)
+    write(args.out, "documents", documents(rng[0], WORKLOADS[args.workload]))
+    write(args.out, "embeddings", embeddings(rng[1], EMBEDDINGS))
+    write(args.out, "events", events(rng[2], EVENTS))
+    relational(rng[3], args.out)
 
 
 if __name__ == "__main__":

@@ -30,50 +30,35 @@ import time
 BENCH = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, BENCH)
 import build  # noqa: E402
+import gen_data  # noqa: E402
 
 DEADLINE_S = 170
 
-# gen_data.py arguments per workload: the measured tables, and the small
-# tables of the same shape the untimed warmup runs on
-SMALL = ["--embeddings", "100", "--events", "1000", "--customers", "150",
-         "--suppliers", "10", "--parts", "200", "--orders", "1500"]
-SHAPES = {
-    "urlcount_large": (
-        ["--text", "urls", "--docs", "8192", "--urls", "40000", "--tokens-per-doc", "30"],
-        ["--text", "urls", "--docs", "64", "--urls", "1000", "--tokens-per-doc", "40"] + SMALL),
-    "curation": (
-        ["--docs", "1200", "--embeddings", "1000", "--events", "10000"],
-        ["--docs", "100"] + SMALL),
-}
-
 # The JVM options of the repository's forked runs (build.sbt javaOptions),
-# except the heap.
+# with a smaller heap cap. The heap starts small and grows with use, so
+# resident memory follows what the run allocates.
 ADD_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
              "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
              "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]
 JVM_OPTS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS] + [
     "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-    # a fixed, pre-touched heap: resident memory then varies only with what
-    # the run adds outside the heap, not with when the collector grew it
-    "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch",
+    "-Xmx2g",
     "-XX:ReservedCodeCacheSize=512m", "-XX:-UseDynamicNumberOfCompilerThreads",
     "-XX:LoopStripMiningIter=100", "-XX:+ExplicitGCInvokesConcurrent"]
 
 
 def generate(build_dir, workload, seed):
-    """Returns the (measured, warmup) table directories, each generated once
-    per seed."""
-    dirs = []
-    for extra in SHAPES[workload]:
-        shape = hashlib.sha256(" ".join(extra).encode()).hexdigest()[:10]
-        d = os.path.join(build_dir, "data", f"{shape}-{seed}")
-        if not os.path.isdir(d):
-            tmp = d + f".tmp{os.getpid()}"
-            subprocess.run([sys.executable, os.path.join(BENCH, "gen_data.py"),
-                            "--seed", str(seed), "--out", tmp] + extra, check=True)
-            os.rename(tmp, d)
-        dirs.append(d)
-    return dirs
+    """Returns the workload's table directory, generated once per seed and
+    version of the generator."""
+    with open(os.path.join(BENCH, "gen_data.py"), "rb") as f:
+        version = hashlib.sha256(f.read()).hexdigest()[:10]
+    d = os.path.join(build_dir, "data", f"{workload}-{seed}-{version}")
+    if not os.path.isdir(d):
+        tmp = d + f".tmp{os.getpid()}"
+        subprocess.run([sys.executable, os.path.join(BENCH, "gen_data.py"),
+                        "--workload", workload, "--seed", str(seed), "--out", tmp], check=True)
+        os.rename(tmp, d)
+    return d
 
 
 def oracle_check(root, data, results):
@@ -92,7 +77,7 @@ def oracle_check(root, data, results):
 
 def main():
     ap = argparse.ArgumentParser(description="layered benchmark of the graft engine")
-    ap.add_argument("--workload", required=True, choices=sorted(SHAPES))
+    ap.add_argument("--workload", required=True, choices=sorted(gen_data.WORKLOADS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -105,7 +90,7 @@ def main():
         sys.exit("layerbench: run from the repository root (tools/compare.py not found)")
     build_dir = os.path.join(root, ".bench_build")
     classes = build.ensure(root, build_dir)
-    data, warm = generate(build_dir, args.workload, args.seed)
+    data = generate(build_dir, args.workload, args.seed)
 
     run_dir = os.path.join(build_dir, "runs", f"{args.workload}-{args.seed}-{args.trace}-{os.getpid()}")
     tmp = os.path.join(run_dir, "tmp")
@@ -114,7 +99,7 @@ def main():
     cmd = ["java"] + JVM_OPTS + [
         f"-Djava.io.tmpdir={tmp}", f"-Dspark.sql.warehouse.dir={os.path.join(run_dir, 'warehouse')}",
         "-cp", build.classpath(classes), "graft.layerbench.Main",
-        "--workload", args.workload, "--data", data, "--warm", warm, "--out", run_dir,
+        "--workload", args.workload, "--data", data, "--out", run_dir,
         "--seconds", str(args.seconds), "--seed", str(args.seed), "--trace", str(args.trace)]
     budget = DEADLINE_S - (time.monotonic() - t_start)
     try:

@@ -87,34 +87,41 @@ object Json {
 
 /** The layered benchmark's JVM side.
   *
-  * One driver thread, closed loop: set up (session build plus an untimed
-  * warmup run of every workload query on a small input),
-  * then run timed passes until `--seconds` have elapsed. Every pass
-  * clears the run-lifetime stores, then runs each query once — built by
-  * its `SparkEntry.queries` constructor, forced by writing its full result
-  * — and, outside the pass, the flagship top-k query a few times. The
-  * last pass's
-  * results are left for the oracle comparison.
+  * One driver thread, closed loop. Set-up, three times: build the
+  * session (stopping the previous one) and run every workload query once,
+  * untimed, on the measured tables; the median round is `setup_s`, and
+  * the three rounds leave the JIT settled at full input size. Then timed
+  * passes until `--seconds` have elapsed. Every pass clears the
+  * run-lifetime stores, then runs each query once — built by its
+  * `SparkEntry.queries` constructor, forced by writing its full result —
+  * and, after the pass, the flagship top-k query until it has four timed
+  * runs in the pass. The last pass's results are left for the oracle
+  * comparison.
   *
   * With `--trace 1` the run attaches [[LayerListener]] and
-  * [[PhaseListener]] and alternates unrecorded and recorded passes:
-  * the recorded ones give the per-layer totals and spans, the two kinds
-  * together the tracing overhead.
+  * [[PhaseListener]] and records passes in the order unrecorded,
+  * recorded, recorded, unrecorded: the recorded ones give the per-layer
+  * totals and spans, the two kinds together the tracing overhead, with
+  * neither kind favoured by its place in the sequence.
   *
   * Writes `<out>/record.json`, and the results under `<out>/results`.
   */
 object Main {
-  final case class Opts(workload: String, data: String, warm: String, out: String,
+  final case class Opts(workload: String, data: String, out: String,
                         seconds: Double, seed: Long, trace: Boolean)
 
   private def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    Opts(m("workload"), m("data"), m("warm"), m("out"), m("seconds").toDouble,
+    Opts(m("workload"), m("data"), m("out"), m("seconds").toDouble,
       m("seed").toLong, m.getOrElse("trace", "0") == "1")
   }
 
-  /** Flagship top-k runs after each pass: their median is `topk_s`. */
-  private val topkReps = 2
+  /** Set-up rounds per run: their median is `setup_s`. */
+  private val setupRounds = 3
+  /** Timed flagship top-k runs per pass, its own run in the pass
+    * included: their median is `topk_s`.
+    */
+  private val topkReps = 4
 
   private val nano0 = System.nanoTime()
   private val epoch0 = System.currentTimeMillis().toDouble
@@ -146,6 +153,17 @@ object Main {
     "jvm.jit_s" -> ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3,
     "codegen.compile_s" -> CodeGenerator.compileTime / 1e9)
 
+  private val MB = 1024.0 * 1024.0
+
+  /** The heap's tenured pools (the ones with a usage threshold; the young
+    * pools have none): where the stores, cached blocks and anything else
+    * a run keeps across queries end up, whatever the collector's young
+    * generation sizing does.
+    */
+  private def oldGenPools =
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getType == java.lang.management.MemoryType.HEAP && p.isUsageThresholdSupported)
+
   private def rssPeakMb: Double =
     Files.readAllLines(Paths.get("/proc/self/status")).asScala
       .find(_.startsWith("VmHWM:"))
@@ -171,17 +189,24 @@ object Main {
     if (o.trace)
       System.setProperty("spark.sql.queryExecutionListeners", classOf[PhaseListener].getName)
 
-    // ---- set-up: session build + untimed warmup ----
+    // ---- set-up, three times: session build + untimed warmup ----
     val warmFailures = mutable.LinkedHashMap[String, String]()
-    val t0 = System.nanoTime()
-    val spark = GraftSession.build("layerbench", s"local[$cores]", cores)
-    val buildS = (System.nanoTime() - t0) / 1e9
-    (names :+ Workloads.flagship).distinct.foreach { q =>
-      try write(runQuery(spark, o.warm, q), s"${o.out}/warmup/$q")
-      catch { case NonFatal(e) => warmFailures(q) = message(e) }
+    var spark: SparkSession = null
+    val setups = (1 to setupRounds).map { _ =>
+      if (spark != null) spark.stop()
+      ArtifactStore.clearAll()
+      val t0 = System.nanoTime()
+      spark = GraftSession.build("layerbench", s"local[$cores]", cores)
+      val build = (System.nanoTime() - t0) / 1e9
+      (names :+ Workloads.flagship).distinct.foreach { q =>
+        try write(runQuery(spark, o.data, q), s"${o.out}/warmup/$q")
+        catch { case NonFatal(e) => warmFailures(q) = message(e) }
+      }
+      ArtifactStore.clearAll()
+      (build, (System.nanoTime() - t0) / 1e9 - build)
     }
-    ArtifactStore.clearAll()
-    val warmupS = (System.nanoTime() - t0) / 1e9 - buildS
+    val buildS = median(setups.map(_._1))
+    val warmupS = median(setups.map(_._2))
     val conf = spark.conf.getAll
 
     val listener = if (o.trace) new LayerListener else null
@@ -199,17 +224,14 @@ object Main {
     val passes = mutable.ArrayBuffer[Pass]()
     val resultDir = s"${o.out}/results"
     val failures = mutable.LinkedHashMap[String, String]()
-    // pass 0 settles what the small-input warmup left to compile at full
-    // size and is left out of every figure; `--seconds` counts from pass 1,
-    // and at least two passes follow it. A traced run records the odd
-    // passes, and its later even passes give the untraced reference for
-    // the tracing overhead.
-    val minPasses = 3
-    var measuredStart = 0L
+    // at least two untraced passes; a traced run records passes 1 and 2
+    // of every four
+    val minPasses = if (o.trace) 4 else 2
+    oldGenPools.foreach(_.resetPeakUsage())
+    val measuredStart = System.nanoTime()
     while (passes.size < minPasses || (System.nanoTime() - measuredStart) / 1e9 < o.seconds) {
       val idx = passes.size
-      if (idx == 1) measuredStart = System.nanoTime()
-      val traced = o.trace && idx % 2 == 1
+      val traced = o.trace && (idx % 4 == 1 || idx % 4 == 2)
       ArtifactStore.clearAll()
       if (o.trace) {
         LayerbenchBus.drain(spark.sparkContext)
@@ -242,8 +264,9 @@ object Main {
         listener.recording = false
         Some(ev)
       }
-      // the flagship top-k, timed on its own after the pass, a few times
-      val topk = (1 to topkReps).map { rep =>
+      // the flagship top-k: its run in the pass, then runs of its own
+      val inPass = samples.filter(_.name == Workloads.flagship).map(_.wallS)
+      val topk = inPass ++ (inPass.size + 1 to topkReps).map { rep =>
         val t0 = System.nanoTime()
         try write(runQuery(spark, o.data, Workloads.flagship), s"$resultDir/${Workloads.flagship}")
         catch { case NonFatal(e) => failures(s"${Workloads.flagship}#pass$idx.$rep") = message(e) }
@@ -260,6 +283,8 @@ object Main {
     }
     if (o.trace) listener.recording = false
     val rss = rssPeakMb
+    val oldGenPeak = oldGenPools.map(_.getPeakUsage.getUsed).sum / MB
+    val mem = ManagementFactory.getMemoryMXBean
 
     // the last pass's results are the ones the oracle checks
     val checked = (names :+ Workloads.flagship).distinct
@@ -268,14 +293,13 @@ object Main {
       Json(checked.map(q => q -> SparkEntry.oracleSql(q)).toMap))
 
     // ---- the record ----
-    val timedPasses = passes.filter(p => p.idx > 0 && !p.traced)
+    val timedPasses = passes.filter(!_.traced)
     val all = timedPasses.flatMap(_.samples).map(_.wallS).toSeq
-    // every run measures at least one untraced pass after pass 0 (two in
-    // an untraced run)
-    val (tailS, tailLevel, tailN) = tail(all, names.size * (if (o.trace) 1 else 2))
+    // every run measures at least two untraced passes
+    val (tailS, tailLevel, tailN) = tail(all, names.size * 2)
     val tracedPasses = passes.filter(_.traced).toSeq
     val endToEnd = Map(
-      "setup_s" -> (buildS + warmupS),
+      "setup_s" -> median(setups.map(s => s._1 + s._2)),
       "pass_s" -> median(timedPasses.map(_.wallS).toSeq),
       "query_p50_s" -> median(all),
       "query_tail_s" -> tailS,
@@ -288,6 +312,7 @@ object Main {
         keys.map(k => k -> median(tracedPasses.map(_.totals(k)))).toMap ++ Map(
           "session.build_s" -> buildS,
           "session.warmup_s" -> warmupS,
+          "jvm.old_gen_peak_mb" -> oldGenPeak,
           "trace.overhead_frac" ->
             (median(tracedPasses.map(_.wallS)) / median(timedPasses.map(_.wallS).toSeq) - 1))
       }
@@ -325,10 +350,15 @@ object Main {
       "queries" -> names, "passes" -> passes.size,
       "pass_s" -> passes.map(p => Map("pass" -> p.idx, "traced" -> p.traced, "wall_s" -> p.wallS,
         "topk_s" -> p.topk, "queries_s" -> p.samples.map(q => q.name -> q.wallS).toMap) ++ p.jvm),
-      "setup" -> Map("build_s" -> buildS, "warmup_s" -> warmupS),
+      "setup" -> Map("build_s" -> buildS, "warmup_s" -> warmupS,
+        "rounds" -> setups.map(s => Map("build_s" -> s._1, "warmup_s" -> s._2))),
       "end_to_end" -> endToEnd,
       "query_tail" -> Map("level_pct" -> tailLevel, "samples" -> tailN),
-      "samples_attempted" -> passes.map(p => p.samples.size + p.topk.size).sum,
+      "memory_mb" -> Map("rss_peak" -> rss, "old_gen_peak_timed" -> oldGenPeak,
+        "heap_committed" -> mem.getHeapMemoryUsage.getCommitted / MB,
+        "non_heap_committed" -> mem.getNonHeapMemoryUsage.getCommitted / MB),
+      "samples_attempted" ->
+        passes.map(p => p.samples.size + p.topk.size - p.samples.count(_.name == Workloads.flagship)).sum,
       "oracle_checked" -> checked,
       "failures" -> failures, "warmup_failures" -> warmFailures,
       "per_layer" -> perLayer,
