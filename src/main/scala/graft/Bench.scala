@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is reported in "errors" (name
@@ -29,84 +28,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same topology overrides as Verify: SPARK_GRAFT_MASTER (e.g.
-    // local-cluster[4,8,4096] for multi-process executors),
-    // SPARK_GRAFT_EXECUTOR_CLASSPATH, SPARK_GRAFT_RELIABLE
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-    // make local-cluster[n,c,mem] mean what it says: mem is only worker
-    // CAPACITY; the executor -Xmx needs spark.executor.memory (see
-    // GraftSession.executorMemoryFor)
-    GraftSession.executorMemoryFor(master)
-      .foreach(builder.config("spark.executor.memory", _))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
-      .foreach(builder.config("spark.executor.extraClassPath", _))
-    sys.env.get("SPARK_GRAFT_RELIABLE")
-      .foreach(builder.config("spark.graft.reliableCheckpoint", _))
-    // stateful-volume proxy shared by the two scale-protocol knobs
-    // below: the events table's bytes on disk
-    val eventsBytes = {
-      val evDir = new java.io.File(s"$sfDir/events.parquet")
-      Option(evDir.listFiles)
-        .map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(if (evDir.isFile) evDir.length else 0L)
-    }
-    // state-store provider: SPARK_GRAFT_STATESTORE overrides (A/B legs,
-    // VERDICT r14 #5); otherwise the measured crossover rule picks it —
-    // RocksDB iff forecast per-executor state exceeds half the executor
-    // heap (GraftSession.autoStateStoreProvider, VERDICT r16 #2 /
-    // bench/statestore_crossover_r16.json), so a small-heap scale
-    // topology no longer needs a hand-set env var to avoid the on-heap
-    // OOM cascade
-    val stateStoreProvider = sys.env.get("SPARK_GRAFT_STATESTORE")
-      .map(GraftSession.stateStoreProviderFor)
-      .getOrElse(GraftSession.autoStateStoreProvider(eventsBytes,
-        GraftSession.executorHeapBytesFor(master),
-        GraftSession.numExecutorsFor(master)))
-    builder.config("spark.sql.streaming.stateStore.providerClass",
-      stateStoreProvider)
-    // scale-protocol knob: streaming state-partition count scales with
-    // STATE VOLUME, not cores (see StreamingOps.sizeStatePartitions);
-    // the r13 100x record ran the interval joins 4-wide on 32 cores and
-    // measured a 3.0x throttle (VERDICT r13 #1), so when the env does
-    // not override, Bench derives the count from the corpus events
-    // table itself — a scale run can no longer inherit the 1x floor
-    val statePartitions = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .getOrElse(graft.streaming.StreamingOps
-        .sizeStatePartitions(eventsBytes, cpus.toInt).toString)
-    builder.config("spark.graft.streamStatePartitions", statePartitions)
-    val spark = builder
-      // keep generated methods JIT-compilable (see GraftSession)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // file-open cost modeled at 1 MB (default 4 MB floors the split
-      // size): synthetic text compresses ~10:1, so a CPU-dense scan of
-      // a small compressed file was planned 2 tasks wide regardless of
-      // its row groups — the only above-linear ratios in the 10x probe
-      // traced to exactly this. 1 MB lets a multi-row-group file split
-      // to its group count; single-row-group files (the sf0.1 harness
-      // layout) are unaffected either way.
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      // keep every warmup-compiled generated class resident through the
-      // timed region (default cache: 100 entries — the suite evicts it)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // localCheckpoint blocks are freed by the ContextCleaner only after
-      // a JVM GC notices the dropped plan references; with a large heap,
-      // GC can lag many queries behind, so checkpointed intermediates
-      // accumulate and executions get slower over a session (measured).
-      // A short periodic-GC interval bounds that drift.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same deterministic plan surface as Verify: every timed query runs
-    // with the SQL functions + token-count rewrite active
-    GraftExtensions.register(spark)
+    // optional arg: query-name filter (local iteration)
+    val only = args.headOption.map(SparkEntry.selectQueries)
+    val spark = GraftSession.build("graft-bench", corpusDir = Some(sfDir))
     def esc(s: String): String =
       s.flatMap {
         case '"' => "\\\""
@@ -114,9 +38,6 @@ object Bench {
         case c if c < ' ' => " "
         case c => c.toString
       }
-    // optional arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").toSet) else None
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // untimed warmup: session/codegen infra init first, then one tiny-scale
@@ -194,7 +115,7 @@ object Bench {
     // ran best-of-3 on these eight)
     val bimodalJson = bimodal.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"total_sec":$total,"reps":$reps,"reps_bimodal":$repsBimodal,"bimodal":$bimodalJson,"warmup":"$warmDir","sf":"$sfDir","stream_state_partitions":$statePartitions,"state_store_provider":"${stateStoreProvider.split('.').last}"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"total_sec":$total,"reps":$reps,"reps_bimodal":$repsBimodal,"bimodal":$bimodalJson,"warmup":"$warmDir","sf":"$sfDir","stream_state_partitions":${spark.conf.get("spark.graft.streamStatePartitions")},"state_store_provider":"${spark.conf.get("spark.sql.streaming.stateStore.providerClass").split('.').last}"}"""
     println(line)
     // ALSO persist the full record in the repo (VERDICT r11 #8): the
     // driver's BENCH_r{N}.json keeps only the tail of a long line, so

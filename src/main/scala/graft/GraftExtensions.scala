@@ -17,7 +17,7 @@ import graft.functions.{DotProduct, MinHashArrayExpr, MinHashSketchAgg,
   *
   * Two registration paths, same builders:
   *  - at session build (the standard public extension-point pattern):
-  *      SparkSession.builder.withExtensions(new GraftExtensions).…
+  *    `withExtensions(new GraftExtensions)`, as GraftSession.build does,
   *    or config `spark.sql.extensions=graft.GraftExtensions`;
   *  - on a live session (for sessions built elsewhere — the driver
   *    harness hands us one): `GraftExtensions.register(spark)`,

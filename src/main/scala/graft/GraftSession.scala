@@ -4,10 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + table access for the graft engine.
   *
-  * Tuned for the harness's `local[32]` single-JVM mode but written for a
-  * real cluster: AQE on (runtime re-plan, skew-join splitting, partition
-  * coalescing), shuffle partitions sized to the local core count (on a
-  * 1000-executor cluster this would be ~2-3x total cores, set per-job).
+  * [[build]] is the only place the engine constructs a SparkSession:
+  * every main and the test base call it. It runs a `local[n]` single JVM
+  * by default (n = `SPARK_GRAFT_CPUS`, else the available processors)
+  * but is written for a real cluster: Spark's default AQE (runtime
+  * re-plan, skew-join splitting, partition coalescing), shuffle
+  * partitions sized to the core count (on a 1000-executor cluster this
+  * would be ~2-3x total cores, set per-job).
   */
 object GraftSession {
 
@@ -18,10 +21,9 @@ object GraftSession {
     * local-cluster run silently launches 1 GiB executors no matter what
     * the master string says. Found when the round-15 100x combined run
     * OOM'd executors requested at "8 GiB" whose real -Xmx was 1024M
-    * (worker launch command in /opt/spark/work). Every graft main that
-    * honors SPARK_GRAFT_MASTER passes the parsed value through to
-    * `spark.executor.memory`, making the topology argument mean what it
-    * says.
+    * (worker launch command in /opt/spark/work). [[sessionConf]] passes
+    * the parsed value through to `spark.executor.memory`, making the
+    * topology argument mean what it says.
     */
   def executorMemoryFor(master: String): Option[String] =
     """^local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]$""".r
@@ -175,74 +177,109 @@ object GraftSession {
     f.delete(); ()
   }
 
+  /** Cores a session sizes its shuffle width and state-partition cap
+    * to: `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
+  def defaultCores(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `SPARK_GRAFT_MASTER`, else `local[defaultCores]`. */
+  def defaultMaster(env: Map[String, String] = sys.env): String =
+    env.getOrElse("SPARK_GRAFT_MASTER", s"local[${defaultCores(env)}]")
+
+  /** Bytes on disk of `corpusDir`'s events table (a Spark-written
+    * directory or a single file; 0 when absent): the stateful-volume
+    * proxy both state rules size from.
+    */
+  def eventsBytes(corpusDir: String): Long = {
+    val ev = new java.io.File(s"$corpusDir/events.parquet")
+    Option(ev.listFiles)
+      .map(_.filter(_.isFile).map(_.length).sum)
+      .getOrElse(if (ev.isFile) ev.length else 0L)
+  }
+
+  /** The session configuration, as a pure function of the master, the
+    * core count, the corpus's events bytes and the environment — the
+    * one place the `SPARK_GRAFT_*` contract is read:
+    *  - `SPARK_GRAFT_EXECUTOR_CLASSPATH` -> `spark.executor.extraClassPath`
+    *  - `SPARK_GRAFT_RELIABLE` -> `spark.graft.reliableCheckpoint`
+    *    (the Materialize seam checkpoints reliably for the whole run)
+    *  - `SPARK_GRAFT_STATESTORE` (`rocksdb`, `default` or a provider
+    *    class) overrides [[autoStateStoreProvider]]
+    *  - `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides
+    *    `StreamingOps.sizeStatePartitions`
+    * (`SPARK_GRAFT_MASTER` and `SPARK_GRAFT_CPUS` arrive through
+    * [[defaultMaster]] and [[defaultCores]].)
+    */
+  def sessionConf(master: String, cores: Int, eventsBytes: Long,
+                  env: Map[String, String]): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    // HotSpot refuses to JIT methods over 8000 bytecode bytes
+    // (-XX:+DontCompileHugeMethods is the default), so whole-stage
+    // codegen output beyond that runs INTERPRETED — measured 3-20x
+    // stage slowdowns with multi-minute JIT-queue stalls on this
+    // suite. Capping at 8000 makes Spark fall back to the split
+    // non-wholestage path for oversized stages: full bench went
+    // 109s -> 38s at sf0.1. (Same value Spark's own docs recommend.)
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // file-open cost modeled at 1 MB (default 4 MB floors the split
+    // size): synthetic text compresses ~10:1, so a CPU-dense scan of
+    // a small compressed file was planned 2 tasks wide regardless of
+    // its row groups — the only above-linear ratios in the 10x probe
+    // traced to exactly this. 1 MB lets a multi-row-group file split
+    // to its group count; single-row-group files (the sf0.1 harness
+    // layout) are unaffected either way.
+    "spark.sql.files.openCostInBytes" -> (1024 * 1024).toString,
+    // default generated-class cache holds 100 entries; a multi-query
+    // session churns past that, evicting warm classes so later (or
+    // re-run) queries re-Janino-compile and re-JIT them — one source
+    // of the multi-second per-query run-to-run swings. 1000 entries
+    // keeps every plan of the suite resident (entries are source-text
+    // keyed; memory cost is the generated classes themselves).
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // localCheckpoint blocks are freed by the ContextCleaner only after
+    // a JVM GC notices the dropped plan references; with a large heap,
+    // GC can lag many queries behind, so checkpointed intermediates
+    // accumulate and executions get slower over a session (measured).
+    // A short periodic-GC interval bounds that drift.
+    "spark.cleaner.periodicGC.interval" -> "30s",
+    "spark.sql.session.timeZone" -> "UTC",
+    // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    // reader rejects; read it as BIGINT nanos (EventWindows does exact
+    // integral arithmetic on it — doubles would lose precision at 1e18).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.streaming.stateStore.providerClass" ->
+      env.get("SPARK_GRAFT_STATESTORE").map(stateStoreProviderFor)
+        .getOrElse(autoStateStoreProvider(eventsBytes,
+          executorHeapBytesFor(master), numExecutorsFor(master))),
+    "spark.graft.streamStatePartitions" ->
+      env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+        graft.streaming.StreamingOps.sizeStatePartitions(eventsBytes, cores).toString)
+  ) ++ executorMemoryFor(master).map("spark.executor.memory" -> _) ++
+    env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH").map("spark.executor.extraClassPath" -> _) ++
+    env.get("SPARK_GRAFT_RELIABLE").map("spark.graft.reliableCheckpoint" -> _)
+
+  /** The engine's session: [[sessionConf]] over `corpusDir`'s events
+    * bytes (0 without a corpus), with the SQL surface (graft_*
+    * functions and the token-count rewrite) injected at build. Sessions
+    * built elsewhere call GraftExtensions.register instead.
+    */
   def build(appName: String = "graft",
-            master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-            shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
-    val spark = SparkSession.builder()
+            master: String = defaultMaster(),
+            shufflePartitions: Int = defaultCores(),
+            corpusDir: Option[String] = None): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName(appName)
-      // the SQL surface: graft_* functions usable from spark.sql
-      // (sessions built elsewhere call GraftExtensions.register instead)
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // HotSpot refuses to JIT methods over 8000 bytecode bytes
-      // (-XX:+DontCompileHugeMethods is the default), so whole-stage
-      // codegen output beyond that runs INTERPRETED — measured 3-20x
-      // stage slowdowns with multi-minute JIT-queue stalls on this
-      // suite. Capping at 8000 makes Spark fall back to the split
-      // non-wholestage path for oversized stages: full bench went
-      // 109s -> 38s at sf0.1. (Same value Spark's own docs recommend.)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // file-open cost modeled at 1 MB (default 4 MB floors the split
-      // size): synthetic text compresses ~10:1, so a CPU-dense scan of
-      // a small compressed file was planned 2 tasks wide regardless of
-      // its row groups — the only above-linear ratios in the 10x probe
-      // traced to exactly this. 1 MB lets a multi-row-group file split
-      // to its group count; single-row-group files (the sf0.1 harness
-      // layout) are unaffected either way.
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      // default generated-class cache holds 100 entries; a multi-query
-      // session churns past that, evicting warm classes so later (or
-      // re-run) queries re-Janino-compile and re-JIT them — one source
-      // of the multi-second per-query run-to-run swings. 1000 entries
-      // keeps every plan of the suite resident (entries are source-text
-      // keyed; memory cost is the generated classes themselves).
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // localCheckpoint blocks are freed by the ContextCleaner only after
-      // a JVM GC notices the dropped plan references; with a large heap,
-      // GC can lag many queries behind, so checkpointed intermediates
-      // accumulate and executions get slower over a session (measured).
-      // A short periodic-GC interval bounds that drift.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-      // reader rejects; read it as BIGINT nanos (EventWindows does exact
-      // integral arithmetic on it — doubles would lose precision at 1e18).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sessionConf(master, shufflePartitions, corpusDir.map(eventsBytes).getOrElse(0L),
+      sys.env).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Read one of the harness parquet tables under `sfDir`.
-    * Plain `spark.read.parquet` so Catalyst keeps filter pushdown /
-    * column pruning / partition-size splitting for free.
-    *
-    * `events.ts` is normalized to BIGINT epoch NANOS regardless of the
-    * physical type the harness generated: earlier rounds wrote parquet
-    * TIMESTAMP(NANOS) (read as BIGINT via nanosAsLong above), the
-    * current corpus writes TIMESTAMP(MICROS). EventWindows does exact
-    * integral arithmetic on the nanos form (doubles would lose
-    * precision at 1e18), so the micros form is widened exactly
-    * (us * 1000; under the UTC session the NTZ->LTZ cast is the
-    * identity instant). The conversion is a narrow projection over the
-    * scan — column pruning still reaches the footer, and nothing
-    * filters on raw `ts` below it.
-    */
   /** Content fingerprint of a table directory/file: md5 over the sorted
     * (path, length, mtime) listing via the Hadoop FileSystem API (so it
     * works on a distributed FS, not just local disk). Used to key the
@@ -267,6 +304,21 @@ object GraftSession {
       .map("%02x".format(_)).mkString
   }
 
+  /** Read one of the harness parquet tables under `sfDir`.
+    * Plain `spark.read.parquet` so Catalyst keeps filter pushdown /
+    * column pruning / partition-size splitting for free.
+    *
+    * `events.ts` is normalized to BIGINT epoch NANOS regardless of the
+    * physical type the harness generated: earlier rounds wrote parquet
+    * TIMESTAMP(NANOS) (read as BIGINT via nanosAsLong above), the
+    * current corpus writes TIMESTAMP(MICROS). EventWindows does exact
+    * integral arithmetic on the nanos form (doubles would lose
+    * precision at 1e18), so the micros form is widened exactly
+    * (us * 1000; under the UTC session the NTZ->LTZ cast is the
+    * identity instant). The conversion is a narrow projection over the
+    * scan — column pruning still reaches the footer, and nothing
+    * filters on raw `ts` below it.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_micros}
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Profiling/diagnostic main (never a bench record): for each named
   * query, captures
@@ -79,28 +78,14 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "plans/r17"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val names =
+      if (args.length > 1) SparkEntry.selectQueries(args(1))
+      else SparkEntry.queries.keys.toSeq.sorted
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.build("graft-plandump", corpusDir = Some(sfDir))
     val census = new JobCensus
     spark.sparkContext.addSparkListener(census)
 
-    val names: Seq[String] =
-      if (args.length > 1) args(1).split(",").toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
     // warmup pass at tiny scale so job census is not JIT noise
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.UrlCount
@@ -22,11 +21,12 @@ import graft.ops.UrlCount
   *     Amplify the reference's shipped 8-file corpus (1.28 MB) by crossJoin
   *     with a range — written by Spark as a many-file text corpus (the
   *     shape of a real crawl at this size; single files would serialize
-  *     the scan). Runs on local[32]; generation is not the measurement.
+  *     the scan). Runs on the default GraftSession; generation is not the
+  *     measurement.
   *
   *   runMain graft.RefScale run <dir>
   *     The measured pipeline over the generated corpus. Master/memory come
-  *     from SPARK_GRAFT_MASTER (e.g. local-cluster[2,8,1024]: two SEPARATE
+  *     from SPARK_GRAFT_MASTER (default local-cluster[2,8,1024]: two SEPARATE
   *     executor JVMs, 1 GiB heap each — the scan, tokenize, partial and
   *     final aggregation all execute inside that cap; the driver sees only
   *     the 17,401-key count relation and the top-100). Prints ONE JSON
@@ -55,12 +55,7 @@ object RefScale {
     (0 until 8).map(i => s"/root/reference/src/main/data$i.txt")
 
   private def gen(dir: String, gigabytes: Double): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-refscale-gen")
     val baseBytes = refFiles.map(f => new java.io.File(f).length).sum
     val k = math.ceil(gigabytes * (1L << 30).toDouble / baseBytes).toLong
     // ~128 MB per output file — the reference's own per-map-task input cap
@@ -90,21 +85,9 @@ object RefScale {
   }
 
   private def run(dir: String): Unit = {
+    // the design point's default topology: two 1 GiB executor JVMs
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,1024]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // the record's heap cap must be explicit, not the 1g default the
-    // local-cluster mem arg happens to coincide with (see
-    // GraftSession.executorMemoryFor)
-    graft.GraftSession.executorMemoryFor(master)
-      .foreach(builder.config("spark.executor.memory", _))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
-      .foreach(builder.config("spark.executor.extraClassPath", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-refscale", master)
     val bytes = Option(new java.io.File(dir).listFiles).map(
       _.filter(f => f.getName.startsWith("part-")).map(_.length).sum).getOrElse(0L)
     def timed[A](f: => A): (A, Double) = {

@@ -51,6 +51,19 @@ object SparkEntry {
     UrlCount.topK(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text", 100)
 
+  /** The query-name filter the mains take: a comma-separated list of
+    * [[queries]] names, optionally wrapped in `[...]`. Names keep their
+    * order; an unknown name fails here, before any query runs.
+    */
+  def selectQueries(list: String): Seq[String] = {
+    val names = list.stripPrefix("[").stripSuffix("]").split(",")
+      .map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    val known = queries.keySet
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    names
+  }
+
   /** One entry per implemented operator from SURVEY.md §2 (+ the
     * LLM-pipeline extensions). Keys group by module:
     * urlcount_* rel_* ev_* text_* dedup_* sim_* mm_*.

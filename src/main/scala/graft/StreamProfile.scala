@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Progress collector for StreamProfile. Registered via the
@@ -108,25 +107,16 @@ object StreamProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.streamingQueryListeners", "graft.ProfileListener")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
     val defaultSlice = Seq(
       "stream_join_outer", "stream_join", "stream_substring", "stream_transitions",
       "stream_hot_users", "stream_sessions_append", "stream_funnel", "stream_dedup",
       "stream_tumbling", "stream_json_sink", "stream_pii", "stream_bm25")
-    val names = if (args.nonEmpty) args(0).split(",").toSeq else defaultSlice
+    val names = args.headOption.map(SparkEntry.selectQueries).getOrElse(defaultSlice)
+    // a static conf, so it goes in before the session exists (see
+    // ProfileListener for why a conf and not spark.streams.addListener)
+    System.setProperty("spark.sql.streaming.streamingQueryListeners",
+      classOf[ProfileListener].getName)
+    val spark = GraftSession.build("graft-streamprofile", corpusDir = Some(sfDir))
     val queries = SparkEntry.queries
 
     // warmup: JIT the streaming machinery once at tiny scale

@@ -1,98 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query-name filter (local
-    // iteration); an optional [bracketed] wrapper is tolerated — a bare
-    // "[a,b]" otherwise silently drops exactly the two edge names
-    val only: Option[Set[String]] =
-      if (args.length > 2)
-        Some(args(2).stripPrefix("[").stripSuffix("]").split(",").toSet)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — e.g.
-    // `local-cluster[4,8,4096]` runs the same gate with four separate
-    // executor PROCESSES (real closure/aggregate-buffer serialization,
-    // broadcast transport, reliable-checkpoint recovery; needs
-    // SPARK_HOME and SPARK_GRAFT_EXECUTOR_CLASSPATH pointing at the
-    // compiled classes). SPARK_GRAFT_RELIABLE=true flips the
-    // Materialize seam to reliable checkpoints for the whole run.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    // make local-cluster[n,c,mem] mean what it says: mem is only worker
-    // CAPACITY; the executor -Xmx needs spark.executor.memory (see
-    // GraftSession.executorMemoryFor)
-    GraftSession.executorMemoryFor(master)
-      .foreach(builder.config("spark.executor.memory", _))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
-      .foreach(builder.config("spark.executor.extraClassPath", _))
-    sys.env.get("SPARK_GRAFT_RELIABLE")
-      .foreach(builder.config("spark.graft.reliableCheckpoint", _))
-    // stateful-volume proxy (events bytes on disk) for the two
-    // scale-protocol knobs below — same derivations as Bench, so the
-    // correctness gate runs the same topology rules the bench records
-    val eventsBytes = {
-      val evDir = new java.io.File(s"$sfDir/events.parquet")
-      Option(evDir.listFiles)
-        .map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(if (evDir.isFile) evDir.length else 0L)
-    }
-    // state-store provider: env override, else the measured crossover
-    // rule (see Bench / GraftSession.autoStateStoreProvider) — RocksDB
-    // iff forecast per-executor state exceeds half the executor heap
-    builder.config("spark.sql.streaming.stateStore.providerClass",
-      sys.env.get("SPARK_GRAFT_STATESTORE")
-        .map(GraftSession.stateStoreProviderFor)
-        .getOrElse(GraftSession.autoStateStoreProvider(eventsBytes,
-          GraftSession.executorHeapBytesFor(master),
-          GraftSession.numExecutorsFor(master))))
-    // scale-protocol knob: streaming state-partition count scales with
-    // state volume (see Bench / StreamingOps.sizeStatePartitions); a
-    // scale-corpus Verify run must not inherit the 1x floor either
-    builder.config("spark.graft.streamStatePartitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS",
-        graft.streaming.StreamingOps
-          .sizeStatePartitions(eventsBytes, cpus.toInt).toString))
-    val spark = builder
-      // keep generated methods JIT-compilable (see GraftSession)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // file-open cost modeled at 1 MB (default 4 MB floors the split
-      // size): synthetic text compresses ~10:1, so a CPU-dense scan of
-      // a small compressed file was planned 2 tasks wide regardless of
-      // its row groups — the only above-linear ratios in the 10x probe
-      // traced to exactly this. 1 MB lets a multi-row-group file split
-      // to its group count; single-row-group files (the sf0.1 harness
-      // layout) are unaffected either way.
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // localCheckpoint blocks are freed by the ContextCleaner only after
-      // a JVM GC notices the dropped plan references; with a large heap,
-      // GC can lag many queries behind, so checkpointed intermediates
-      // accumulate and executions get slower over a session (measured).
-      // A short periodic-GC interval bounds that drift.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // deterministic plan surface: the SQL functions + token-count rewrite
-    // are active for EVERY query, not just those after a sql_* query's
-    // own register call (map order would otherwise decide which plans
-    // the rewrite touches)
-    GraftExtensions.register(spark)
+    // optional third arg: query-name filter (local iteration)
+    val only = args.lift(2).map(SparkEntry.selectQueries)
+    val spark = GraftSession.build("graft-verify", corpusDir = Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // a query that throws before its write must leave no result behind:
+      // a previous run's parquet would otherwise be compared as this one's
+      val out = s"$outDir/$name"
+      GraftSession.deleteRecursively(new java.io.File(out))
+      try fn(spark, sfDir).coalesce(1).write.parquet(out)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -641,14 +641,14 @@ object Dedup {
     new graft.ArtifactStore[String]("dedup.minhashIndexTable")(_ => ())
   private[graft] def minHashIndexTable(spark: SparkSession, sfDir: String,
                                        mod: Int = 10, shingleN: Int = 3,
-                                       k: Int = 16, bands: Int = defaultLshBands): String =
+                                       k: Int = 16, bands: Int = defaultLshBands): String = {
+    val suffix = Integer.toHexString(
+      (sfDir, mod, shingleN, k, bands).hashCode & 0x7fffffff)
+    val name = graft.sources.Bucketed.scopedName(
+      spark, s"graft_minhash_index_$suffix")
     minHashIndexStores.getOrBuild(
       corpusSlot(spark, sfDir) + s"|$mod|$shingleN|$k|$bands",
       docsFp(spark, sfDir)) {
-      val suffix = Integer.toHexString(
-        (sfDir, mod, shingleN, k, bands).hashCode & 0x7fffffff)
-      val name = graft.sources.Bucketed.scopedName(
-        spark, s"graft_minhash_index_$suffix")
       graft.sources.Bucketed.writeBucketed(spark,
         // compact the session-wide band-key frame before the bucketed
         // write at harness scale (round 17: partitions x buckets file
@@ -659,6 +659,12 @@ object Dedup {
         name, graft.sources.Bucketed.scopedPath(name), "sig", 8)
       name
     }
+    // the relation cache is per session: a rebuild from another session
+    // sharing the catalog (the streaming twin's clone) leaves this one
+    // holding the replaced files' listing
+    spark.catalog.refreshTable(name)
+    name
+  }
 
   /** dedup_index_refresh: the fold-in half of the daily cycle — after
     * probing (dedup_incremental), the new batch's band signatures are

@@ -344,7 +344,7 @@ object StreamingOps {
     * number is per-workload, NOT per-cluster-core like batch shuffle
     * partitions. Overridable via `spark.graft.streamStatePartitions`
     * on the calling session (default 4) so a deployment sizes it to its
-    * state volume without recompiling; Bench/Verify forward the
+    * state volume without recompiling; GraftSession.build forwards the
     * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` env var into this conf so the
     * scale protocol sizes it per run — the r13 100x record ran the
     * interval joins 4-wide on a 32-core box and charged the 3.0x
@@ -352,7 +352,9 @@ object StreamingOps {
     * BASELINE.md's protocol note.
     */
   private def stateShufflePartitions(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.streamStatePartitions", "4").toInt
+    spark.conf.get("spark.graft.streamStatePartitions",
+      defaultStatePartitions.toString).toInt
+  private[graft] val defaultStatePartitions = 4
 
   /** Scale-protocol sizing rule for `spark.graft.streamStatePartitions`
     * (VERDICT r13 #1/#8). The count scales with STATE VOLUME, not
@@ -364,8 +366,8 @@ object StreamingOps {
     * measured 3.0x slower than 32-wide on the biggest line item. Rule:
     * one state partition per 4 MB of stateful-input bytes (the events
     * table on disk is the proxy — join/window state is a bounded slice
-    * of it), floored at 4, capped at the session's cores. Bench derives
-    * the bytes from the corpus when `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
+    * of it), floored at 4, capped at the session's cores. GraftSession.build
+    * derives the bytes from the corpus when `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
     * does not override, so a future scale run cannot silently inherit
     * the 1x floor; StatePartitionSizingSpec pins the rule's shape.
     *
@@ -376,7 +378,7 @@ object StreamingOps {
     * HEAP, so once per-partition state (stateful volume / cores, after
     * the cap binds) approaches executor heap, the lever is the
     * disk-backed RocksDB state-store provider
-    * (`SPARK_GRAFT_STATESTORE=rocksdb` in Bench/Verify; stock Spark),
+    * (`SPARK_GRAFT_STATESTORE=rocksdb`, read by GraftSession.build; stock Spark),
     * not more partitions. The 100x A/B of both providers is recorded in
     * BASELINE.md.
     */

@@ -60,6 +60,32 @@ class PersistedIndexSpec extends SparkSpec {
     assert(est === 1.0)
   }
 
+  test("a minhash index rebuilt by the streaming twin is not read stale by the batch probe") {
+    import spark.implicits._
+    val sfDir = tempSfDir()
+    writeTable(sfDir, "documents", Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven"),
+      (10L, "alpha beta gamma delta epsilon zeta"),
+      (20L, "one two three four five six eight")
+    ).toDF("doc_id", "text"))
+    def pairs(q: String): Set[(Long, Long)] =
+      SparkEntry.queries(q)(spark, sfDir).select("doc_new", "doc_idx")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val batch = pairs("dedup_incremental")
+    val stream = pairs("stream_dedup_incremental")
+    assert(batch.contains((10L, 1L)) && stream.contains((10L, 1L)))
+    // the streaming twin now rebuilds the table (DROP + overwrite) from
+    // its own cloned session; the batch probe must read the new files,
+    // whatever its session resolved before
+    ArtifactStore.clearAll()
+    assert(pairs("stream_dedup_incremental") === stream)
+    assert(pairs("dedup_incremental") === batch)
+    ArtifactStore.clearAll()
+    assert(pairs("dedup_incremental") === batch)
+    assert(pairs("stream_dedup_incremental") === stream)
+  }
+
   test("minhash index probe join plans with no Exchange on the index side") {
     import spark.implicits._
     val sfDir = tempSfDir()

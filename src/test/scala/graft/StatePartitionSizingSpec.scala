@@ -8,8 +8,8 @@ import graft.streaming.StreamingOps
   * (VERDICT r13 #8). The r13 100x record silently ran the interval joins
   * 4-wide on a 32-core box — a 3.0x measured throttle charged to the
   * relation — because the 1x-tuned floor leaked into the scale run. The
-  * rule below is what Bench derives when `SPARK_GRAFT_STREAM_STATE_
-  * PARTITIONS` does not override: one partition per 4 MB of stateful
+  * rule below is what GraftSession.build derives when `SPARK_GRAFT_STREAM_
+  * STATE_PARTITIONS` does not override: one partition per 4 MB of stateful
   * input, floored at 4 (the 1x A/B winner), capped at cores. These cases
   * are the contract the BASELINE.md protocol note references.
   */

@@ -36,6 +36,15 @@ class StoreContractSpec extends SparkSpec {
       }
   }
 
+  test("query-name filter: brackets stripped, order kept, unknown names rejected") {
+    val (a, b) = ("urlcount_topk", "dedup_incremental")
+    assert(SparkEntry.selectQueries(s"[$b,$a]") === Seq(b, a))
+    assert(SparkEntry.selectQueries(s"$a, $b") === Seq(a, b))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries(s"$a,no_such_query"))
+    assert(e.getMessage.contains("no_such_query"))
+  }
+
   test("audit helper flags a deliberately-added single-consumer cache") {
     val fake = new ArtifactStore[String]("test.singleConsumer")(_ => ())
     ArtifactStore.currentConsumer.set("lonely_query")
