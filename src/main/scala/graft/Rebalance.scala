@@ -1,157 +1,129 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Width control for CPU-DENSE per-row stages (round 17, guide §2.5).
+/** The one width policy for CPU-dense stages: every spread, stream
+  * widen and loop width in the engine is decided here.
   *
-  * AQE's partition coalescing is a BYTE cost model: post-shuffle reads
-  * are packed toward `minPartitionSize` (1 MB), which is right when a
-  * task's cost is proportional to its bytes. The md5-family sketch /
-  * winnow / codec stages invert that premise — a shingle costs ~16 md5
-  * digests (~2.8 us) against ~40 shuffled bytes — so coalescing a
-  * keyed repartition that exists precisely to SPREAD that work undoes
-  * it: measured at sf0.1, `repartition(col("doc_id"))` upstream of the
-  * minhash sketch aggregate coalesced to ONE partition (849 KB < 1 MB)
-  * and the whole dedup family's hash work ran single-task on a 32-core
-  * box (~0.9-1.2 s serial stages in the round-17 job census).
+  * Why explicit widths: AQE's partition coalescing is a BYTE cost
+  * model, right when a task's cost follows its bytes. The md5-family
+  * sketch / winnow / codec stages invert that premise (a shingle costs
+  * ~16 md5 digests, ~2.8 us, against ~40 shuffled bytes), so AQE packs
+  * the keyed repartition that exists to spread that work back into one
+  * task: at sf0.1 `repartition(col("doc_id"))` before the minhash
+  * sketch coalesced to ONE partition (849 KB < the 1 MB
+  * minPartitionSize) and the dedup family's hashing ran single-task on
+  * 32 cores. A user-specified partition count is exempt from
+  * coalescing, so every entry point here pins its width.
   *
-  * [[cpuSpread]] pins the intended width explicitly: a user-specified
-  * partition count is exempt from AQE coalescing, and the width is the
-  * session's `spark.sql.shuffle.partitions` — the same scale-adaptive
-  * knob every other exchange uses (cores locally, sized per job on a
-  * cluster), never a constant.
+  * The policy:
+  *  - Session width: `spark.sql.shuffle.partitions` of the session
+  *    ([[sessionWidth]]; `GraftSession.build` sets it to the core
+  *    count). It is the cap of every width.
+  *  - Width: `clamp(ceil(mass / perTask), 1, session width)`
+  *    (`width`). At scale the mass saturates the cap at once, so
+  *    cluster behaviour is the session width; the rule only matters
+  *    for small inputs, where 32 task waves of scheduling cost more
+  *    than they buy (full-width spreads ran the substring/winnow
+  *    queries 2-4x slower 32-wide than 8-wide at sf0.1).
+  *  - Mass for the byte form: the probe's optimized-plan stats. Absent
+  *    stats (zero, or Catalyst's size sentinel on an un-analyzed RDD
+  *    leaf) read as "unknown" and keep the session width rather than
+  *    trust a fictitious mass.
+  *  - Narrow gate, stats only: a probe is narrow when its bytes are
+  *    below `session width x filesMaxPartitionBytes`, the mass a
+  *    session-wide scan covers. A corpus whose scan already fills the
+  *    session gates off, so no new corpus-byte exchange appears at
+  *    scale. The gate never plans or runs a probe job (an `.rdd` width
+  *    probe costs a full query plan per call, ~0.1-0.3 s of driver
+  *    time at sf0.1).
+  *  - Probe session: the cap and the gate come from the PROBE's
+  *    session, not the spread frame's. A stream built inside
+  *    `runToBatch`'s scoped session carries the state-partition count
+  *    as its shuffle width; its probe, the parent session's static
+  *    scan, carries the core count. Batch sites build both frames in
+  *    one session.
   *
-  * [[cpuSpreadIfNarrow]] is the gated form for stages that carry NO
-  * exchange today (a heavy expression fused into the scan stage): it
-  * inserts the spread exchange only when the source actually PLANS
-  * narrower than the session width — true for a small or few-split
-  * input, never true for a corpus whose scan already fills the
-  * cluster, so at 100 TB the gate is off and no new corpus-byte
-  * exchange appears (the TextAnalysis.serveRebalance discipline).
+  * Density classes (per-task mass), measured as A/B legs at sf0.1 on
+  * 32 cores against the full-width form (OPTIMIZATION_r18.md):
+  *  - [[HashDense]], 16 KB per task: an md5 digest per handful of
+  *    input bytes (the k=16 minhash sketch ladder, DSIR token hashing,
+  *    the SQL winnow base, the stream widen). The 64 KB form cost
+  *    dedup_clusters_incremental +41% and mix_dsir +26%.
+  *  - [[WindowDense]], 64 KB per task: per-byte scans with cheaper
+  *    per-unit work (winnow gram minima, n-token window folds, LSH
+  *    vector serialization). The full-width form cost
+  *    dedup_winnow_pairs +53% and dedup_substring +49%.
+  *  - Edges, `edgesPerTask` = 100 000 per task, for the graph loops'
+  *    edge layouts: each propagation round is a join + aggregate over
+  *    the edge list, and a 259-edge graph spent ~1.4 s in 32-partition
+  *    rounds, ~3x its data cost.
   */
 object Rebalance {
 
-  private def sessionWidth(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
+  /** A stage's CPU cost per input byte, as its input mass per task. */
+  sealed abstract class Density(val bytesPerTask: Long)
+  case object HashDense extends Density(16L << 10)
+  case object WindowDense extends Density(64L << 10)
 
-  /** Mass targets per spread task (round 18, VERDICT r17 #2). Round 17
-    * pinned every spread to the FULL session width, and the driver's
-    * 8-vs-32-core scaling block showed the overshoot: on tiny inputs
-    * the substring/winnow queries ran 2-4x FASTER 8-wide than 32-wide
-    * (dedup_substring_rewrite ratio 0.22) — 32 task-waves of
-    * scheduling/exchange overhead exceed the parallelism gain. The
-    * width is now proportional to the probe's input mass, capped at
-    * the session width: `min(sessionWidth, ceil(bytes / target))`; at
-    * scale the byte mass saturates the cap immediately, so cluster
-    * behavior is unchanged.
-    *
-    * The target is PER SITE CLASS because the optimum tracks the
-    * stage's CPU density per input byte (measured A/B at sf0.1 on 32
-    * cores, /tmp legs recorded in OPTIMIZATION_r18.md):
-    *  - hashDense (~an md5 digest per handful of input bytes: the k=16
-    *    minhash sketch ladder, DSIR token hashing): 16 KB/task — the
-    *    session width until inputs shrink to a few hundred KB; the
-    *    64 KB form cost dedup_clusters_incremental +41%.
-    *  - windowDense (per-byte scans with cheaper per-unit work: winnow
-    *    gram minima, n-token window folds): 64 KB/task — the full-width
-    *    form cost dedup_winnow_pairs +53% and dedup_substring +49% in
-    *    overhead at harness mass.
-    * `spark.graft.spreadTargetBytes` overrides BOTH per deployment.
+  private val edgesPerTask: Long = 100000L
+
+  /** The width every rule caps at. */
+  private[graft] def sessionWidth(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** The one width function: `clamp(ceil(mass / perTask), 1, cap)`. */
+  private def width(mass: BigInt, perTask: Long, cap: Int): Int =
+    ((mass + perTask - 1) / perTask).max(BigInt(1)).min(BigInt(cap)).toInt
+
+  /** [[width]] over a stats estimate: unknown stats keep the cap. */
+  private[graft] def bytesWidth(statsBytes: BigInt, density: Density,
+                                cap: Int): Int =
+    if (statsBytes <= 0 || statsBytes >= BigInt(Long.MaxValue) / 2) cap
+    else width(statsBytes, density.bytesPerTask, cap)
+
+  /** Width for a loop over `nEdges` exact edges in `spark`'s session. */
+  private[graft] def edgeWidth(spark: SparkSession, nEdges: Long): Int =
+    width(nEdges, edgesPerTask, sessionWidth(spark))
+
+  private def statsBytes(probe: DataFrame): BigInt =
+    probe.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  private def narrow(probe: DataFrame): Boolean =
+    statsBytes(probe) < BigInt(sessionWidth(probe.sparkSession)) *
+      probe.sparkSession.sessionState.conf.filesMaxPartitionBytes
+
+  /** Keyed repartition of `df` to the width of `probe`'s mass. Use
+    * where the plan already pays this exchange: it replaces a
+    * `repartition(keys…)` call, adding nothing at any scale. Pass the
+    * source scan as `probe` when `df`'s own stats are not a mass (an
+    * aggregate or a checkpointed frame).
     */
-  val hashDenseTargetBytes: Long = 16L << 10
-  val windowDenseTargetBytes: Long = 64L << 10
+  def spread(df: DataFrame, probe: DataFrame, density: Density,
+             keys: Column*): DataFrame =
+    df.repartition(bytesWidth(statsBytes(probe), density,
+      sessionWidth(probe.sparkSession)), keys: _*)
 
-  private def spreadWidth(df: DataFrame, probe: DataFrame,
-                          siteTarget: Long): Int = {
-    val spark = df.sparkSession
-    val target = BigInt(spark.conf
-      .get("spark.graft.spreadTargetBytes", siteTarget.toString)
-      .toLong.max(1L))
-    val bytes = probe.queryExecution.optimizedPlan.stats.sizeInBytes
-    val w = sessionWidth(df)
-    // absent/garbage stats (Catalyst's defaultSizeInBytes sentinel for
-    // un-analyzed RDD leaves) must not collapse the spread: keep the
-    // session width rather than trust a fictitious mass
-    if (bytes <= 0 || bytes >= BigInt(Long.MaxValue) / 2) w
-    else ((bytes + target - 1) / target).min(BigInt(w)).max(BigInt(1)).toInt
-  }
-
-  /** Keyed repartition to the mass-proportional width (capped at the
-    * session's shuffle width), EXPLICIT so AQE cannot coalesce it below
-    * the CPU parallelism it exists to provide. Use where the plan
-    * already pays this exchange (it replaces a `repartition(keys…)`
-    * call, adding nothing at any scale). The width derives from the
-    * frame's own stats; when those are estimate-garbage (a materialized
-    * RDD leaf), pass the source scan as `probe` via the overload.
-    * `target` is the site's CPU-density class (see the targets above).
+  /** [[spread]] inserted BEFORE a CPU-dense per-row stage that carries
+    * no exchange today (a heavy expression fused into the scan stage),
+    * only when `probe` is narrow. Reserve it for stages whose serial
+    * cost is ~0.5 s or more at sf0.1: the exchange plus the extra task
+    * waves cost ~0.2-0.4 s, so spreading a cheap stage is a net loss
+    * (measured on sql_minhash and dedup_ngram_sweep). Keys make the
+    * exchange deterministic; callers pass the row identity column.
     */
-  def cpuSpread(df: DataFrame, keys: Column*): DataFrame =
-    cpuSpread(df, df, hashDenseTargetBytes, keys: _*)
+  def spreadIfNarrow(df: DataFrame, probe: DataFrame, density: Density,
+                     keys: Column*): DataFrame =
+    if (narrow(probe)) spread(df, probe, density, keys: _*) else df
 
-  /** [[cpuSpread]] with the mass read from a separate probe frame and
-    * an explicit per-site task target.
-    */
-  def cpuSpread(df: DataFrame, probe: DataFrame, target: Long,
-                keys: Column*): DataFrame =
-    df.repartition(spreadWidth(df, probe, target), keys: _*)
-
-  /** Insert a spread exchange BEFORE a CPU-dense per-row stage, but
-    * only when the stage would otherwise run narrower than the session
-    * width (few-split scan, AQE-coalesced upstream aggregate). The
-    * gate is STATS-ONLY — estimated input bytes vs the mass a
-    * session-wide scan would cover (width x maxPartitionBytes) — so it
-    * never plans or runs a probe job (an `.rdd` width probe costs a
-    * full query plan per call, measured ~0.1-0.3 s of driver time at
-    * 1x). A large input gates off: no new corpus-byte exchange at
-    * scale. Keys make the exchange deterministic-by-hash; callers pass
-    * the row identity column.
-    *
-    * Reserve this for stages whose SERIAL cost is substantial (~0.5 s+
-    * of per-row CPU at the small scale): the exchange plus the extra
-    * task waves cost ~0.2-0.4 s, so spreading a cheap stage is a net
-    * loss (measured on sql_minhash/ngram_sweep in the round-17 A/B).
-    */
-  def cpuSpreadIfNarrow(df: DataFrame, keys: Column*): DataFrame =
-    spreadIfProbeNarrow(df, df, keys: _*)
-
-  /** [[cpuSpreadIfNarrow]] with an explicit per-site density target. */
-  def cpuSpreadIfNarrow(df: DataFrame, target: Long,
-                        keys: Column*): DataFrame =
-    spreadIfProbeNarrow(df, df, target, keys: _*)
-
-  /** [[cpuSpreadIfNarrow]] with the bytes gate read from a SEPARATE
-    * frame's stats — for spreading an aggregate/join output whose own
-    * stats are estimate-garbage, using the source corpus scan as the
-    * scale proxy: a corpus whose scan fills the session leaves the
-    * frame untouched.
-    */
-  def spreadIfProbeNarrow(df: DataFrame, probe: DataFrame,
-                          keys: Column*): DataFrame =
-    spreadIfProbeNarrow(df, probe, windowDenseTargetBytes, keys: _*)
-
-  def spreadIfProbeNarrow(df: DataFrame, probe: DataFrame, target: Long,
-                          keys: Column*): DataFrame = {
-    if (!probeNarrow(df, probe)) df
-    else df.repartition(spreadWidth(df, probe, target), keys: _*)
-  }
-
-  private def probeNarrow(df: DataFrame, probe: DataFrame): Boolean = {
-    val conf = df.sparkSession.sessionState.conf
-    probe.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(sessionWidth(df)) * conf.filesMaxPartitionBytes
-  }
-
-  /** The WRITE-side inverse of the spread: a bucketed/partitioned sink
-    * writing from a session-wide tiny frame fans out to
-    * partitions x buckets small files (round 17: the LSH index
-    * lifecycle audits went 8 -> 256 files per write once the sketch
-    * stage ran wide, costing ~2 s each in file churn at 1x). When the
-    * source-corpus probe says harness scale, collapse to one input
-    * partition before the write — reading a materialized tiny frame in
-    * one task is cheap, and the write emits one file per bucket again.
-    * At scale the gate is off and the write keeps its parallelism (file
-    * sizing is then the bucket count's job, guide §6).
+  /** The write-side inverse of the spread: a bucketed sink writing a
+    * session-wide tiny frame fans out to partitions x buckets small
+    * files (the LSH index audits went from 8 to 256 files per write,
+    * ~2 s each in file churn at sf0.1). When `probe` is narrow,
+    * collapse to one input partition so the write emits one file per
+    * bucket; at scale the write keeps its parallelism and file sizing
+    * is the bucket count's job.
     */
   def writeCompactIfNarrow(df: DataFrame, probe: DataFrame): DataFrame =
-    if (probeNarrow(df, probe)) df.coalesce(1) else df
+    if (narrow(probe)) df.coalesce(1) else df
 }

@@ -925,12 +925,13 @@ object SparkEntry {
     //    Column-API twins' oracles) ——
     "sql_winnow" -> ((s, dir) => {
       GraftExtensions.register(s)
-      // widen the view's base when the scan plans narrow (round 17):
-      // the per-gram md5 fuses into the scan stage; the SQL text —
-      // the surface under test — is unchanged, as are the results
-      // (DISTINCT + total ORDER BY)
-      graft.Rebalance.cpuSpreadIfNarrow(table(s, dir, "documents"),
-        graft.Rebalance.hashDenseTargetBytes, // md5/gram: the dense class
+      // widen the view's base when the scan plans narrow: the
+      // per-gram md5 fuses into the scan stage; the SQL text — the
+      // surface under test — is unchanged, as are the results
+      // (DISTINCT + total ORDER BY). HashDense, while its Column-API
+      // twin winnowFingerprints is WindowDense.
+      val docs = table(s, dir, "documents")
+      graft.Rebalance.spreadIfNarrow(docs, docs, graft.Rebalance.HashDense,
         org.apache.spark.sql.functions.col("doc_id"))
         .createOrReplaceTempView("graft_documents")
       s.sql(

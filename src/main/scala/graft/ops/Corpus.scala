@@ -294,12 +294,11 @@ object Corpus {
   def dsirWeights(spark: SparkSession, sfDir: String,
                   target: String = "src0", buckets: Int = 1024): DataFrame = {
     // per-token h60 (md5) fuses into the scan stage — spread it when
-    // the scan plans narrow (round 17). hashDense target (round 18):
-    // an md5 per token is the dense class; the 64 KB/task A/B leg
-    // cost mix_dsir +26%
-    val tok = graft.Rebalance.cpuSpreadIfNarrow(
-        table(spark, sfDir, "documents"),
-        graft.Rebalance.hashDenseTargetBytes, col("doc_id"))
+    // the scan plans narrow. HashDense: an md5 per token is the dense
+    // class; the 64 KB/task A/B leg cost mix_dsir +26%
+    val docs = table(spark, sfDir, "documents")
+    val tok = graft.Rebalance.spreadIfNarrow(docs, docs,
+        graft.Rebalance.HashDense, col("doc_id"))
       .select(col("doc_id"), col("source"),
         explode(filter(split(lower(col("text")), " "),
           t => length(t) > 0)).as("word"))

@@ -67,12 +67,12 @@ object Dedup {
     * aggregate's own shuffle.
     */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame =
-    // EXPLICIT width (round 17): the keyed form `repartition(col)` is
+    // EXPLICIT width: the keyed form `repartition(col)` is
     // AQE-coalescible, and at harness scale the coalescer packed this
     // exchange back to ONE partition (compact doc rows ~850 KB < the
     // 1 MB minPartitionSize), serializing the downstream md5 sketch
     // hashing this spread exists for — see graft.Rebalance.
-    graft.Rebalance.cpuSpread(docs, col("doc_id"))
+    graft.Rebalance.spread(docs, docs, graft.Rebalance.HashDense, col("doc_id"))
       .select(col("doc_id"),
         explode(graft.functions.ShingleColumns.wordShinglesDistinct(col("text"), n))
           .as("shingle"))
@@ -651,8 +651,8 @@ object Dedup {
       docsFp(spark, sfDir)) {
       graft.sources.Bucketed.writeBucketed(spark,
         // compact the session-wide band-key frame before the bucketed
-        // write at harness scale (round 17: partitions x buckets file
-        // fan-out — see Rebalance.writeCompactIfNarrow)
+        // write at harness scale (partitions x buckets file fan-out —
+        // see Rebalance.writeCompactIfNarrow)
         graft.Rebalance.writeCompactIfNarrow(
           storedBandKeys(spark, sfDir, "hist", mod, shingleN, k, bands),
           table(spark, sfDir, "documents")),
@@ -683,7 +683,7 @@ object Dedup {
                         mod: Int = 10, shingleN: Int = 3, k: Int = 16,
                         bands: Int = defaultLshBands, nBuckets: Int = 8): DataFrame = {
     val name = graft.sources.Bucketed.scopedName(spark, "graft_minhash_index_refresh")
-    // write-side compaction at harness scale (round 17): the band-key
+    // write-side compaction at harness scale: the band-key
     // frames are session-wide after the sketch spread, and a bucketed
     // write fans out partitions x buckets files — see
     // Rebalance.writeCompactIfNarrow
@@ -1040,14 +1040,21 @@ object Dedup {
     // (WinnowFpsExpr): h60 per k-code-point gram, min per w-window —
     // the HOF formulation it replaces paid substr+md5-hex+conv
     // interpretation per gram. The gram hashing is an md5 per k-gram:
-    // spread it to session width when the scan plans narrower (round
-    // 17 — the fused scan stage ran ~0.9 s single-task at sf0.1)
-    graft.Rebalance.cpuSpreadIfNarrow(
-        table(spark, sfDir, "documents"), col("doc_id"))
+    // spread it when the scan plans narrow (the fused scan stage ran
+    // ~0.9 s single-task at sf0.1)
+    docsSpread(spark, sfDir)
       .select(col("doc_id"),
         explode(graft.functions.ShingleColumns.winnowFps(norm, k, w)).as("fp"))
       .distinct()
       .orderBy("doc_id", "fp")
+  }
+
+  /** The documents scan, spread when it plans narrow, for an md5 or
+    * window stage fused into the scan (WindowDense). */
+  private def docsSpread(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = table(spark, sfDir, "documents")
+    graft.Rebalance.spreadIfNarrow(docs, docs, graft.Rebalance.WindowDense,
+      col("doc_id"))
   }
 
   /** dedup_ngram_sweep: the window-size curve for substring dedup —
@@ -1114,29 +1121,27 @@ object Dedup {
     val norm = lower(regexp_replace(trim(col("text")), "\\s+", " "))
     // representatives' aggregate output AQE-coalesces to one tiny read
     // at harness scale, which would serialize the per-gram md5 hashing
-    // below — spread it back to session width first (round 17; gated
-    // on the corpus SCAN width, so a corpus that already fills the
-    // session adds no exchange)
+    // below — spread it back first (gated on the corpus scan, so a
+    // corpus that already fills the session adds no exchange)
     val docs = table(spark, sfDir, "documents")
-    val fps = graft.Rebalance.spreadIfProbeNarrow(
-        representatives(docs), docs, col("doc_id"))
+    val fps = graft.Rebalance.spreadIfNarrow(
+        representatives(docs), docs, graft.Rebalance.WindowDense, col("doc_id"))
       .select(col("doc_id"),
         explode(graft.functions.ShingleColumns.winnowFps(norm, k, w)).as("fp"))
       .distinct()
       .materialized // both self-join sides + the df guard
     // ONE explicit fp-keyed exchange feeds the df guard, the semi-join
-    // and the pair self-join co-partitioned (round 17): each used to
+    // and the pair self-join co-partitioned: each used to
     // plan its own exchange, and AQE coalesced the pair join — the
     // suite's heaviest winnow stage — down to ~6 read partitions (2.3
     // CPU-s squeezed through 6 tasks). The checkpoint below this
     // preserves outputPartitioning (the CC-loop pattern), so the
     // downstream agg/join stages plan exchange-free at pinned width.
     // probe = the corpus scan: fps is checkpointed, so its own stats
-    // are the RDD-leaf sentinel, not a mass (round 18 mass-width form;
-    // windowDense — the pair join is a per-byte fold, measured −35%
-    // at the narrower width)
-    val fpsW = graft.Rebalance.cpuSpread(fps, docs,
-      graft.Rebalance.windowDenseTargetBytes, col("fp"))
+    // are the RDD-leaf sentinel, not a mass (WindowDense — the pair
+    // join is a per-byte fold, measured −35% at the narrower width)
+    val fpsW = graft.Rebalance.spread(fps, docs, graft.Rebalance.WindowDense,
+      col("fp"))
     val rare = fpsW.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select("fp")
@@ -1249,24 +1254,17 @@ object Dedup {
     sum(col("label").cast("decimal(38,0)"))
 
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // Partition count sized to EDGE VOLUME, not core count: each
-    // propagation round is join + agg over the edge list, and a round on
-    // a small graph is pure per-partition scheduling overhead at the
-    // session's batch width (measured: a 259-edge graph spent ~1.4 s in
-    // 32-partition rounds, ~3x the data cost). ~100k edges per partition
-    // keeps rounds task-bound; huge graphs cap at the session setting,
-    // which a production job sizes to its cluster. pairs is already
-    // materialized by every caller, so the count is a cheap local scan.
-    val spark = pairs.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val nEdges = pairs.count() * 2
-    val parts = math.max(1L, math.min(sessionParts.toLong,
-      (nEdges + 99999L) / 100000L)).toInt
+    // Partition count sized to EDGE VOLUME, not core count
+    // (Rebalance.edgeWidth): a round on a small graph is pure
+    // per-partition scheduling overhead at the session width. pairs is
+    // already materialized by every caller, so the count is a cheap
+    // local scan.
+    val parts = graft.Rebalance.edgeWidth(pairs.sparkSession, pairs.count() * 2)
     // `parts` is threaded through the EDGE relation's explicit
     // repartition only — never spark.conf.set, which is session-global
     // and would leak the reduced width into any query running
-    // concurrently on the same session (VERDICT r6 #1; ConcurrencySpec
-    // pins the isolation). The per-round join co-partitions the label
+    // concurrently on the same session (ConcurrencySpec pins the
+    // isolation). The per-round join co-partitions the label
     // side to the edge side's width automatically (a side that already
     // satisfies the join's distribution sets the exchange width for the
     // other), and the remaining aggregation exchanges run at the session
@@ -1424,13 +1422,9 @@ object Dedup {
     * on a high-diameter graph. */
   private[graft] def twoStarWithRounds(pairs: DataFrame,
                                        maxIters: Int = 50): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val nEdges = pairs.count() * 2
     // edge-volume-sized width via explicit repartition only (the
     // connectedComponents ConcurrencySpec contract — never conf.set)
-    val parts = math.max(1L, math.min(sessionParts.toLong,
-      (nEdges + 99999L) / 100000L)).toInt
+    val parts = graft.Rebalance.edgeWidth(pairs.sparkSession, pairs.count() * 2)
     // every input node, for singleton/root labeling at the end
     val nodes = pairs.select(col("doc_a").as("n"))
       .union(pairs.select(col("doc_b").as("n")))
@@ -2084,8 +2078,7 @@ object Dedup {
     // rows with no corpus-wide dedup shuffle before it; materialized
     // once because BOTH the count side and the probe side consume it
     // (the dedup shuffle whose exchange AQE used to reuse is gone)
-    val sh = graft.Rebalance.cpuSpreadIfNarrow( // md5/window in-scan (round 17)
-        table(spark, sfDir, "documents"), col("doc_id"))
+    val sh = docsSpread(spark, sfDir)
       .select(col("doc_id"),
         explode(array_distinct(transform(
           graft.functions.ShingleColumns.wordShingles(col("text"), n),
@@ -2140,8 +2133,7 @@ object Dedup {
     windowCountStores.getOrBuild(
       corpusSlot(spark, sfDir) + s"|$n|$mod",
       docsFp(spark, sfDir)) {
-      graft.Rebalance.cpuSpreadIfNarrow( // md5/window in-scan (round 17)
-          table(spark, sfDir, "documents"), col("doc_id"))
+      docsSpread(spark, sfDir)
         .filter(col("doc_id") % mod =!= 0)
         .select(col("doc_id"),
           explode(graft.functions.ShingleColumns.wordShingles(col("text"), n)).as("shingle"))
@@ -2154,8 +2146,7 @@ object Dedup {
   def substringRefresh(spark: SparkSession, sfDir: String,
                        n: Int = 8, mod: Int = 4,
                        nBuckets: Int = 8): DataFrame = {
-    val docs = graft.Rebalance.cpuSpreadIfNarrow( // md5/window in-scan (round 17)
-      table(spark, sfDir, "documents"), col("doc_id"))
+    val docs = docsSpread(spark, sfDir)
     def windows(d: DataFrame): DataFrame = d
       .select(col("doc_id"),
         explode(graft.functions.ShingleColumns.wordShingles(col("text"), n)).as("shingle"))
@@ -2225,8 +2216,7 @@ object Dedup {
     */
   def substringDupRewrite(spark: SparkSession, sfDir: String,
                           n: Int = 8): DataFrame = {
-    val docs = graft.Rebalance.cpuSpreadIfNarrow( // md5/window in-scan (round 17)
-      table(spark, sfDir, "documents"), col("doc_id"))
+    val docs = docsSpread(spark, sfDir)
     val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val base = docs.select(col("doc_id"), toks.as("toks"))
       .withColumn("n_toks", size(col("toks")).cast("long"))

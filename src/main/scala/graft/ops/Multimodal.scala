@@ -95,7 +95,7 @@ object Multimodal {
       // would serialize every downstream encode/decode chain onto one
       // core; spread the ids across the session width BEFORE the
       // CPU-heavy codec stages (the exchange moves only bare longs)
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(graft.Rebalance.sessionWidth(spark))
       .mapPartitions(ids => ids.map(id => ImageRow(id, encodePng(id))))
       .toDF()
   }
@@ -262,7 +262,7 @@ object Multimodal {
       .select(col("doc_id").as("id")).as[Long]
       // same split-spreading rationale as imageTable: the id list is one
       // input split; spread before the CPU-heavy codec stages
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(graft.Rebalance.sessionWidth(spark))
       .mapPartitions(ids => ids.map(id => AudioRow(id, encodeWav(id))))
       .toDF()
   }
@@ -438,7 +438,7 @@ object Multimodal {
     table(spark, sfDir, "documents")
       .filter(col("doc_id") % 2 === 0)
       .select(col("doc_id").as("id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(graft.Rebalance.sessionWidth(spark))
       .mapPartitions(ids => ids.map(id => ImageRow(id, encodePatternPng(id))))
       .toDF()
   }

@@ -247,19 +247,19 @@ object Similarity {
       }
       bits.reduce(_ + _).as(s"sig_$band")
     }
-    // spread BEFORE the sig compute + checkpoint (round 18): the
+    // spread BEFORE the sig compute + checkpoint: the
     // embeddings scan plans 1 split at harness mass, so the bucket
     // frame checkpointed 1-wide — and every consumer's join MAP stage
     // (the probe fanout carrying the query vector, the band-join
     // exchange writes) then ran single-task on that one partition
     // (census: a 1.34 s 1-task stage under sim_lsh_multiprobe, a
     // 0.30 s 1-task 24 MB exchange write under dedup_embedding).
-    // Mass-proportional width (windowDense — vector serialization is
+    // Mass-proportional width (WindowDense — vector serialization is
     // per-byte work), gated off for a corpus whose scan already fills
-    // the session. Round 17 rejected a FULL-width version of this
-    // spread (+0.1-0.6 s) — the mass rule is what makes it pay.
-    graft.Rebalance.spreadIfProbeNarrow(emb, emb,
-        graft.Rebalance.windowDenseTargetBytes, col("vec_id"))
+    // the session. A FULL-width version of this spread measured
+    // +0.1-0.6 s — the mass rule is what makes it pay.
+    graft.Rebalance.spreadIfNarrow(emb, emb, graft.Rebalance.WindowDense,
+        col("vec_id"))
       .select(col("vec_id") +: col("v") +: sigCols: _*)
       .select(col("vec_id"), col("v"),
         explode(array((0 until nBands).map(b =>

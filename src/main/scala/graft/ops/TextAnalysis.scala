@@ -459,20 +459,20 @@ object TextAnalysis {
     // WIDTH, not pruning: a bucketed file scan is one task per FILE —
     // never split by size — so at volume the candidate join + scoring
     // aggregate ran only file-count wide off the stored postings table
-    // (measured at 100x, round 15: the hybrid lexical half 211 s
-    // narrow vs ~15 s at full width). One narrow-row rebalance of the
+    // (measured at 100x: the hybrid lexical half 211 s narrow vs
+    // ~15 s at full width). One narrow-row rebalance of the
     // (already scan-pruned) posting rows restores the session's full
     // parallelism; the pushed IN/bucket pruning happens at the scan,
     // before this exchange, unchanged (TextAnalysisSpec pins it).
-    // CONDITIONAL (VERDICT r15 #2): the exchange is pure overhead when
-    // the postings are already session-wide — always true for the
-    // inline form (aggregate output = shuffle width; the r15
-    // unconditional exchange cost text_bm25 0.71 -> 1.30 s at 1x) and
-    // for small stored tables — so only the store-served callers opt
-    // in, via serveRebalance's size/width gate.
+    // CONDITIONAL: the exchange is pure overhead when the postings are
+    // already session-wide — always true for the inline form
+    // (aggregate output = shuffle width; an unconditional exchange
+    // cost text_bm25 0.71 -> 1.30 s at 1x) and for small stored tables
+    // — so only the store-served callers opt in, via serveRebalance's
+    // size/width gate.
     val widened =
-      if (rebalance) postings.repartition(
-        postings.sparkSession.sessionState.conf.numShufflePartitions)
+      if (rebalance)
+        postings.repartition(graft.Rebalance.sessionWidth(postings.sparkSession))
       else postings
     val joined = widened.join(qdim, "term")
     // query-by-document workloads rank the anchor's own document first
@@ -503,19 +503,19 @@ object TextAnalysis {
     * width is the bottleneck (a bucketed scan is one task per FILE) AND
     * the scan would actually run narrower than the session. The stored
     * relation's stats are exact file mass (checked FIRST — the partition
-    * probe plans the scan, so the cheap gate short-circuits it at 1x);
-    * threshold overridable via spark.graft.serveRebalanceMinBytes. At
-    * sf0.1 the postings table is ~1 MB -> skip (reclaims the r15 1x
-    * regression); at 100x it is hundreds of MB -> rebalance (keeps the
-    * 211 -> 149 s win).
+    * probe plans the scan, so the cheap gate short-circuits it at 1x).
+    * The planned-width check stays: table stats cannot show that a
+    * bucketed scan runs one task per bucket file. At sf0.1 the postings
+    * table is ~1 MB -> skip (no 1x exchange); at 100x it is hundreds of
+    * MB -> rebalance (keeps the 211 -> 149 s win).
     */
-  private[graft] def serveRebalance(spark: SparkSession, name: String): Boolean = {
+  private[graft] def serveRebalance(spark: SparkSession, name: String,
+                                    minBytes: Long = serveWidenMinBytes): Boolean = {
     val rel = spark.table(name)
-    val minBytes = spark.conf.get("spark.graft.serveRebalanceMinBytes",
-      (64L * 1024 * 1024).toString).toLong
     rel.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes &&
-      rel.rdd.getNumPartitions < spark.sessionState.conf.numShufflePartitions
+      rel.rdd.getNumPartitions < graft.Rebalance.sessionWidth(spark)
   }
+  private val serveWidenMinBytes: Long = 64L << 20
 
   /** Build-once-per-run BM25 index store (VERDICT r9 #6): the bucketed
     * postings table (term, doc_id, tf, dl) plus the 1-row (tot, n_docs)
@@ -1688,10 +1688,11 @@ object TextAnalysis {
       col(s"${k}11").as("n11"), col(s"${k}10").as("n10"), col(s"${k}01").as("n01"),
       (n - col(s"${k}11") - col(s"${k}10") - col(s"${k}01")).as("n00"))
     // the classifier fold is an md5 per token OCCURRENCE fused into the
-    // scan stage — spread when the scan plans narrow (round 17; the
-    // fused stage ran ~1.2 s single-task at sf0.1)
-    graft.Rebalance.cpuSpreadIfNarrow(
-        table(spark, sfDir, "documents"), col("doc_id"))
+    // scan stage — spread when the scan plans narrow (the fused stage
+    // ran ~1.2 s single-task at sf0.1)
+    val docs = table(spark, sfDir, "documents")
+    graft.Rebalance.spreadIfNarrow(docs, docs, graft.Rebalance.WindowDense,
+        col("doc_id"))
       .select(
         when(gKeep, 1L).otherwise(0L).as("g"),
         when(cscore >= 0L, 1L).otherwise(0L).as("c"),

@@ -261,64 +261,46 @@ object StreamingOps {
     harnessEventStream(spark, sfDir).unionByName(hb)
   }
 
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
   /** documents.parquet as a file stream. */
   def harnessDocStream(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      .parquet(s"$sfDir/{documents.parquet}")
+    spark.readStream.schema(docSchema).parquet(s"$sfDir/{documents.parquet}")
 
-  /** [[harnessDocStream]] widened for a CPU-DENSE per-row stage (round
-    * 17). A file-source micro-batch's task count follows the arriving
-    * FILE LAYOUT (one single-row-group file = one task — the
+  /** [[harnessDocStream]] built in `s`, widened for a CPU-DENSE
+    * per-row stage. A file-source micro-batch's task count follows the
+    * arriving FILE LAYOUT (one single-row-group file = one task — the
     * streamBpeEncode parallelism note), so an ingest twin whose
     * per-row work is hash-heavy runs its whole batch on ONE core here.
-    * The widen is an explicit doc_id-keyed exchange to the session's
-    * core count, GATED on the static input mass the way
-    * Rebalance.cpuSpreadIfNarrow gates batch scans: a corpus big
-    * enough that its batches already split to session width skips it,
-    * so at scale no corpus-byte exchange is added. Column pruning
-    * pushes through the repartition, so each twin ships only the
-    * columns it reads; results are partitioning-independent by the
-    * determinism contract (keyed state / commutative aggregation,
-    * oracle-gated).
+    * The widen is a doc_id-keyed `Rebalance.spreadIfNarrow` (HashDense)
+    * probed by the static documents scan in the PARENT session
+    * `spark`: `runToBatch`'s scoped session `s` carries the
+    * state-partition count as its shuffle width, the parent the core
+    * count. The probe reads with the stream's declared schema, so it
+    * runs no schema-inference job; its stats are the on-disk bytes. A
+    * corpus whose batches already split to session width skips it, so
+    * at scale no corpus-byte exchange is added. Column pruning pushes
+    * through the repartition, so each twin ships only the columns it
+    * reads; results are partitioning-independent by the determinism
+    * contract (keyed state / commutative aggregation, oracle-gated).
     *
-    * Applied SELECTIVELY, on measurement (round-17 solo A/B over all
-    * doc twins): the exchange plus the extra per-batch task waves cost
-    * ~0.2-0.4 s at 1x, so only the twins whose stateless map work is
-    * genuinely expensive keep it — the k=16 minhash sketch pair
-    * (addBatch 1.06→0.69 / 1.47→1.00 s) and the rule cascade
-    * (1.49→0.77 s). Every other twin measured flat or worse widened
-    * (e.g. stream_pii 0.80→1.09, stream_phash's codec 2x WORSE at
-    * 32-way — ImageIO contention) and stays narrow.
+    * Applied SELECTIVELY, on measurement (solo A/B over all doc twins):
+    * the exchange plus the extra per-batch task waves cost ~0.2-0.4 s
+    * at 1x, so only the twins whose stateless map work is genuinely
+    * expensive keep it — the k=16 minhash sketch pair (addBatch
+    * 1.06→0.69 / 1.47→1.00 s) and the rule cascade (1.49→0.77 s), both
+    * measured on 32 cores. Every other twin measured flat or worse
+    * widened (e.g. stream_pii 0.80→1.09, stream_phash's codec 2x WORSE
+    * at 32-way — ImageIO contention) and stays narrow.
     */
-  def harnessDocStreamWide(spark: SparkSession, sfDir: String): DataFrame =
-    cpuWidenStream(spark, s"$sfDir/documents.parquet",
-      harnessDocStream(spark, sfDir), col("doc_id"))
-
-  private[graft] def cpuWidenStream(spark: SparkSession, inputPath: String,
-                                    df: DataFrame,
-                                    keys: org.apache.spark.sql.Column*): DataFrame = {
-    val w = spark.sparkContext.defaultParallelism
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    if (staticInputBytes(spark, inputPath) >= w.toLong * maxSplit) df
-    else df.repartition(w, keys: _*)
-  }
-
-  /** Bytes on disk of a static harness input (file or Spark-written
-    * directory) — the stream-side scale proxy for the widen gate. */
-  private def staticInputBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val st = fs.getFileStatus(p)
-      if (st.isFile) st.getLen
-      else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-    }
-  }
+  def harnessDocStreamWide(spark: SparkSession, s: SparkSession,
+                           sfDir: String): DataFrame =
+    graft.Rebalance.spreadIfNarrow(harnessDocStream(s, sfDir),
+      spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet"),
+      graft.Rebalance.HashDense, col("doc_id"))
 
   /** embeddings.parquet as a file stream. */
   def harnessEmbStream(spark: SparkSession, sfDir: String): DataFrame =
@@ -665,7 +647,7 @@ object StreamingOps {
   def streamMinhashDedup(spark: SparkSession, sfDir: String, k: Int = 16): DataFrame = {
     val sketch = graft.functions.ShingleColumns.minhashArray(col("shingles"), k)
     runToBatch(spark,
-        s => harnessDocStreamWide(s, sfDir)
+        s => harnessDocStreamWide(spark, s, sfDir)
           .select(graft.functions.ShingleColumns.wordShingles(col("text"), 3).as("shingles"))
           .filter(size(col("shingles")) > 0) // shingle-less docs have no sketch
           .select(array_join(transform(sketch, m => m.cast("string")), ",").as("sketch_sig"))
@@ -686,7 +668,7 @@ object StreamingOps {
                                 delay: String = "2 hours"): DataFrame = {
     val sketch = graft.functions.ShingleColumns.minhashArray(col("shingles"), k)
     runToBatch(spark,
-        s => withIngestTs(harnessDocStreamWide(s, sfDir))
+        s => withIngestTs(harnessDocStreamWide(spark, s, sfDir))
           .select(col("ingest_ts"),
             graft.functions.ShingleColumns.wordShingles(col("text"), 3).as("shingles"))
           .filter(size(col("shingles")) > 0) // shingle-less docs have no sketch
@@ -1731,7 +1713,7 @@ object StreamingOps {
     */
   def streamCascade(spark: SparkSession, sfDir: String): DataFrame =
     runToBatch(spark,
-        s => graft.ops.TextAnalysis.cascadeFrame(harnessDocStreamWide(s, sfDir))
+        s => graft.ops.TextAnalysis.cascadeFrame(harnessDocStreamWide(spark, s, sfDir))
           .groupBy("source", "verdict")
           .agg(count(lit(1)).as("n_docs")),
         "stream_cascade", OutputMode.Complete())

@@ -348,6 +348,7 @@ class DedupSpec extends SparkSpec {
 
   test("AQE splits the residual hot band (near-identical, non-exact-dup docs)") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, explode}
     // The representative collapse kills the IDENTICAL-content hot bucket;
     // the residual skew case is near-identical boilerplate (each doc a
     // small distinct suffix on a shared base -> same band signature for
@@ -364,26 +365,29 @@ class DedupSpec extends SparkSpec {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
       "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin",
-      // force the shingle spread to full width: AQE's skew split
-      // subdivides a reduce partition by MAP ranges, so a test corpus
-      // tiny enough for the round-18 mass rule to plan ONE map task
-      // could never split — production mass saturates the width cap
-      "spark.graft.spreadTargetBytes").map(k => k -> conf.getOption(k))
+      "spark.sql.adaptive.forceOptimizeSkewedJoin").map(k => k -> conf.getOption(k))
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // SMJ, not broadcast
     conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "128b")
     conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128b")
     conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    conf.set("spark.graft.spreadTargetBytes", "1")
     try {
       val base = (1 to 40).map(i => s"t$i").mkString(" ")
       val docs = (0 until 120).map(i => (i.toLong, s"$base uniq$i"))
         .toDF("doc_id", "text")
       // distinct content -> representatives are all 120 docs; the shared
-      // base still lands most of them in one (band, sig) bucket
-      val pairs = Dedup.minHashLshFromShingles(Dedup.shingles(docs))
+      // base still lands most of them in one (band, sig) bucket.
+      // Dedup.shingles' body, spread to full width by a probe whose mass
+      // saturates the cap: AQE's skew split subdivides a reduce
+      // partition by MAP ranges, so a test corpus tiny enough for the
+      // mass rule to plan ONE map task could never split — production
+      // mass saturates the width cap
+      val sh = Rebalance.spread(docs, spark.range(1L << 40).toDF(),
+          Rebalance.HashDense, col("doc_id"))
+        .select(col("doc_id"), explode(graft.functions.ShingleColumns
+          .wordShinglesDistinct(col("text"), 3)).as("shingle"))
+      val pairs = Dedup.minHashLshFromShingles(sh)
       val n = pairs.count()
       assert(n > 1000L, s"expected a dense near-dup pair set, got $n")
       pairs.collect()

@@ -220,13 +220,9 @@ class TextAnalysisSpec extends SparkSpec {
     try {
       assert(!TextAnalysis.serveRebalance(spark, name),
         "a table below the default 64 MB threshold must not rebalance")
-      spark.conf.set("spark.graft.serveRebalanceMinBytes", "1")
-      assert(TextAnalysis.serveRebalance(spark, name),
+      assert(TextAnalysis.serveRebalance(spark, name, minBytes = 1),
         "a narrow scan past the size gate must rebalance to session width")
-    } finally {
-      spark.conf.unset("spark.graft.serveRebalanceMinBytes")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
   test("hybrid rrf: lexical and semantic ranks fuse by exact integer reciprocal") {
