@@ -31,13 +31,6 @@ object Bench {
     // optional arg: query-name filter (local iteration)
     val only = args.headOption.map(SparkEntry.selectQueries)
     val spark = GraftSession.build("graft-bench", corpusDir = Some(sfDir))
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // untimed warmup: session/codegen infra init first, then one tiny-scale
@@ -102,8 +95,8 @@ object Bench {
       }
       if (!errors.contains(name)) timings(name) = best
     }
-    val qs = timings.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
+    val qs = timings.map { case (k, v) => JsonText.str(k) + ":" + v }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => JsonText.str(k) + ":" + JsonText.str(v) }.mkString("{", ",", "}")
     val total = timings.values.sum
     // "metric"/"value" stay FIRST (the driver's contract keys) but the
     // total is REPEATED after the big "queries" map: the driver keeps

@@ -262,8 +262,7 @@ object GraftSession {
 
   /** The engine's session: [[sessionConf]] over `corpusDir`'s events
     * bytes (0 without a corpus), with the SQL surface (graft_*
-    * functions and the token-count rewrite) injected at build. Sessions
-    * built elsewhere call GraftExtensions.register instead.
+    * functions and the token-count rewrite) injected at build.
     */
   def build(appName: String = "graft",
             master: String = defaultMaster(),
@@ -278,30 +277,6 @@ object GraftSession {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  /** Content fingerprint of a table directory/file: md5 over the sorted
-    * (path, length, mtime) listing via the Hadoop FileSystem API (so it
-    * works on a distributed FS, not just local disk). Used to key the
-    * build-once-per-run artifact stores (BM25 index, BPE merge table):
-    * keying on the PATH alone would silently serve a stale artifact if
-    * the corpus at that path is regenerated within one application
-    * (long-lived session, tests reusing a directory) — the fingerprint
-    * makes regeneration a cache miss instead (ADVICE r10).
-    */
-  def contentFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return "absent"
-    val it = fs.listFiles(p, true)
-    val entries = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
   }
 
   /** Read one of the harness parquet tables under `sfDir`.

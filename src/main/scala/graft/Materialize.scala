@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE materialization seam for iterative/self-join intermediates
   * (shingle frames, minhash signatures, per-round label/rank tables).
@@ -49,8 +49,9 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
 
-  def reliable(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.reliableCheckpoint", "false") == "true"
+  /** The checkpoint mode: the one read of `spark.graft.reliableCheckpoint`. */
+  def reliable(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.reliableCheckpoint", "false") == "true"
 
   private val matId = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -70,7 +71,7 @@ object Materialize {
   }
 
   def apply(df: DataFrame): DataFrame =
-    if (!reliable(df)) df.localCheckpoint()
+    if (!reliable(df.sparkSession)) df.localCheckpoint()
     else {
       val path = s"${checkpointDir(df)}/mat-${matId.incrementAndGet()}"
       df.write.mode("overwrite").parquet(path)

@@ -107,13 +107,13 @@ object PlanDump {
         // settle async job-end events before reading the census
         Thread.sleep(50)
         val (nJobs, jobMs, nTasks, shufR, shufW, detail) = census.summary
-        println(f"""{"query":"$n","build_sec":$tBuild%.3f,"run_sec":$tRun%.3f,"n_jobs":$nJobs,"job_ms":$jobMs,"n_tasks":$nTasks,"shuf_read":$shufR,"shuf_write":$shufW,"jobs":$detail}""")
+        println(s"""{"query":"$n","build_sec":${JsonText.num(tBuild)},"run_sec":${JsonText.num(tRun)},"n_jobs":$nJobs,"job_ms":$jobMs,"n_tasks":$nTasks,"shuf_read":$shufR,"shuf_write":$shufW,"jobs":$detail}""")
         if (sys.env.contains("SPARK_GRAFT_PLANDUMP_STAGES"))
           census.stageLines(
             sys.env("SPARK_GRAFT_PLANDUMP_STAGES").toLong).foreach(println)
       } catch {
         case e: Throwable =>
-          println(s"""{"query":"$n","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(160).replace('"', '\'')}"}""")
+          println(s"""{"query":"$n","error":${JsonText.str(Option(e.getMessage).getOrElse(e.getClass.getName).take(160))}}""")
       }
     }
     spark.stop()

@@ -924,7 +924,6 @@ object SparkEntry {
     //    minhash sketch aggregate run as pure SQL; results match the
     //    Column-API twins' oracles) ——
     "sql_winnow" -> ((s, dir) => {
-      GraftExtensions.register(s)
       // widen the view's base when the scan plans narrow: the
       // per-gram md5 fuses into the scan stage; the SQL text — the
       // surface under test — is unchanged, as are the results
@@ -943,7 +942,6 @@ object SparkEntry {
           |ORDER BY doc_id, fp""".stripMargin)
     }),
     "sql_minhash" -> ((s, dir) => {
-      GraftExtensions.register(s)
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")
       s.sql(
         """SELECT doc_id, element_at(graft_minhash_sketch(shingle, 4), 1) AS mh0
@@ -958,7 +956,6 @@ object SparkEntry {
     // pins the rewrite fires from this exact SQL text; shares text_stats'
     // Column-API oracle
     "sql_tokencount" -> ((s, dir) => {
-      GraftExtensions.register(s)
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")
       s.sql(
         """SELECT doc_id,
@@ -979,7 +976,6 @@ object SparkEntry {
     // expression, gated in-plan exactly like the Column-API twin
     // (urlcount_cms), whose oracle it shares
     "sql_cms" -> ((s, dir) => {
-      GraftExtensions.register(s)
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")
       s.sql(
         """WITH toks AS (
@@ -1001,7 +997,6 @@ object SparkEntry {
     // brute-force cosine top-k written as SQL text — same relation as
     // sim_bruteforce, whose oracle it shares
     "sql_cosine" -> ((s, dir) => {
-      GraftExtensions.register(s)
       table(s, dir, "embeddings").createOrReplaceTempView("graft_embeddings")
       s.sql(
         """WITH emb AS (
@@ -1025,7 +1020,6 @@ object SparkEntry {
     // the custom top-k aggregate from pure SQL (graft_top_k), exploded
     // back to ranked rows — same relation as both daily-top twins
     "sql_topk" -> ((s, dir) => {
-      GraftExtensions.register(s)
       table(s, dir, "events").createOrReplaceTempView("graft_events")
       s.sql(
         """WITH d AS (

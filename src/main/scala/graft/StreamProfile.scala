@@ -62,11 +62,6 @@ class ProfileListener extends StreamingQueryListener {
   * walCommit names commit-log fsync jitter.
   */
 object StreamProfile {
-  // JSON must be locale-independent: the f"%.3f" interpolator uses the
-  // JVM default locale, which under a comma-decimal locale emits
-  // unparseable "1,234" (ADVICE r14)
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
   private val batches =
     mutable.Map[String, mutable.Buffer[Map[String, Long]]]()
   private[graft] def record(name: String, durations: Map[String, Long]): Unit =
@@ -155,21 +150,21 @@ object StreamProfile {
         phaseTotals("START_STOP_RESIDUAL") += (wall - inTrigger)
         wallTotal += wall
         val ps = phases.toSeq.sortBy(-_._2)
-          .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
+          .map { case (k, v) => s""""$k":${JsonText.num(v)}""" }.mkString(",")
         val perBatch = if (reps <= 1) "" else {
           val bs = mine.map { m =>
             m.toSeq.sortBy(-_._2).take(5)
-              .map { case (k, v) => s""""$k":${fmt(v / 1e3)}""" }
+              .map { case (k, v) => s""""$k":${JsonText.num(v / 1e3)}""" }
               .mkString("{", ",", "}")
           }.mkString("[", ",", "]")
           s""","batches":$bs"""
         }
-        println(s"""{"query":"$n","rep":$rep,"wall_sec":${fmt(wall)},"n_batches":${mine.size},"state_mem_max_bytes":$stateMemMax,"state_rows_max":$stateRowsMax,"residual_sec":${fmt(wall - inTrigger)},$ps$perBatch}""")
+        println(s"""{"query":"$n","rep":$rep,"wall_sec":${JsonText.num(wall)},"n_batches":${mine.size},"state_mem_max_bytes":$stateMemMax,"state_rows_max":$stateRowsMax,"residual_sec":${JsonText.num(wall - inTrigger)},$ps$perBatch}""")
       }
     }
     val summary = phaseTotals.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
-    println(s"""{"summary":true,"n_queries":${names.size},"wall_total_sec":${fmt(wallTotal)},$summary}""")
+      .map { case (k, v) => s""""$k":${JsonText.num(v)}""" }.mkString(",")
+    println(s"""{"summary":true,"n_queries":${names.size},"wall_total_sec":${JsonText.num(wallTotal)},$summary}""")
     spark.stop()
   }
 }

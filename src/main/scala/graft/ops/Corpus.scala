@@ -317,17 +317,7 @@ object Corpus {
     * as the decontamination Bloom sketch) and scores arriving docs with
     * a map-literal lookup — see [[dsirScoreFrame]].
     */
-  /** [[graft.ArtifactStore]] key split for the document-side stores
-    * (same discipline as Dedup/TextAnalysis: applicationId + path +
-    * checkpoint mode in the slot, corpus CONTENT hash as fingerprint).
-    */
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-  private def docsFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/documents.parquet")
-
-  // served through the run-lifetime store (VERDICT r14 #4): the ratio
+  // served through the run-lifetime store: the ratio
   // dimension is one full-corpus tokenize+aggregate, and both the batch
   // weigher (mix_dsir joins it broadcast) and the ingest scorer
   // (stream_dsir collects it into a map literal) need the SAME <= 1024-row
@@ -336,9 +326,7 @@ object Corpus {
   private val dsirRatioStores = graft.ArtifactStore.frames("corpus.dsirRatio")
   def dsirRatioTable(spark: SparkSession, sfDir: String,
                      target: String = "src0", buckets: Int = 1024): DataFrame =
-    dsirRatioStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$target|$buckets",
-      docsFp(spark, sfDir)) {
+    dsirRatioStores.getOrBuild(spark, sfDir, Seq("documents"), target, buckets) {
       dsirRatioTableUncached(spark, sfDir, target, buckets).materialized
     }
 
@@ -647,14 +635,13 @@ object Corpus {
   private[graft] def distillParts(spark: SparkSession,
                                   sfDir: String): (DataFrame, DataFrame) = {
     // the per-doc teacher table is served from the run-lifetime store
-    // (round 17; the dsirRatioTable discipline — VERDICT r14 #4 class):
-    // BOTH the batch fit (mix_distill) and the ingest scorer's
-    // coefficient pull (stream_distill) need the SAME frame, and
+    // (the dsirRatioTable discipline): BOTH the batch fit (mix_distill)
+    // and the ingest scorer's coefficient pull (stream_distill) need the
+    // SAME frame, and
     // without the store each invocation re-paid the teacher's bigram
     // joins (the expensive thing the distillation exists to avoid).
     // The coefficient row is one cheap aggregate over the stored frame.
-    val j = distillTeacherStores.getOrBuild(
-      corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    val j = distillTeacherStores.getOrBuild(spark, sfDir, Seq("documents")) {
       val feats = distillFeatureFrame(table(spark, sfDir, "documents"))
       val lm = TextAnalysis.lmScore(spark, sfDir).select("doc_id", "lm_milli")
       // materialized ONCE (the ccnetBuckets discipline): the teacher

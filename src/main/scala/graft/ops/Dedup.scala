@@ -555,9 +555,8 @@ object Dedup {
   private def storedBandKeys(spark: SparkSession, sfDir: String, which: String,
                              mod: Int, shingleN: Int, k: Int, bands: Int,
                              family: String = "md5"): DataFrame =
-    bandKeyStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$which|$mod|$shingleN|$k|$bands|$family",
-      docsFp(spark, sfDir)) {
+    bandKeyStores.getOrBuild(spark, sfDir, Seq("documents"),
+        which, mod, shingleN, k, bands, family) {
       val docs = table(spark, sfDir, "documents")
       val sh = which match {
         case "hist" =>
@@ -625,8 +624,8 @@ object Dedup {
     * the probe target of both the batch (dedup_incremental) and the
     * ingest-time (stream_dedup_incremental) halves of the daily cycle,
     * so it is built ONCE per (corpus, params) per run and served from
-    * the store (VERDICT r14 #4: the streaming twin used to rebuild it —
-    * sketch + bucket write — on every invocation). Returns the catalog
+    * the store (the streaming twin used to rebuild it — sketch + bucket
+    * write — on every invocation). Returns the catalog
     * table name; the table is bucketed on `sig` so the batch probe's
     * sort-merge join reads co-located buckets with no index-side
     * Exchange (PersistedIndexSpec), while the streaming probe
@@ -646,9 +645,7 @@ object Dedup {
       (sfDir, mod, shingleN, k, bands).hashCode & 0x7fffffff)
     val name = graft.sources.Bucketed.scopedName(
       spark, s"graft_minhash_index_$suffix")
-    minHashIndexStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$mod|$shingleN|$k|$bands",
-      docsFp(spark, sfDir)) {
+    minHashIndexStores.getOrBuild(spark, sfDir, Seq("documents"), mod, shingleN, k, bands) {
       graft.sources.Bucketed.writeBucketed(spark,
         // compact the session-wide band-key frame before the bucketed
         // write at harness scale (partitions x buckets file fan-out —
@@ -840,9 +837,8 @@ object Dedup {
     // (corpus, n, df guard, threshold), so it is stored for the run:
     // the standalone rung, the fuzzy split audit and the pair graph
     // share ONE candidate/prune/exact build.
-    jaccardPairStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$shingleN|$maxDf|$minJaccardMilli",
-      docsFp(spark, sfDir)) {
+    jaccardPairStores.getOrBuild(spark, sfDir, Seq("documents"),
+        shingleN, maxDf, minJaccardMilli) {
       ngramJaccardPairsFromShingles(
         repShingleStore(spark, sfDir, shingleN)._2,
         maxDf, minJaccardMilli).materialized
@@ -1205,14 +1201,13 @@ object Dedup {
     * 100 TB the quality filter prunes before any shuffle happens.
     */
   def cleanCorpus(spark: SparkSession, sfDir: String): DataFrame =
-    // run-lifetime store (round 18): the quality-gated exact-survivor
+    // run-lifetime store: the quality-gated exact-survivor
     // table is the ladder's shared middle layer — pipeline_clean,
     // pipeline_fuzzy, pipeline_fuzzy_best and pipeline_e2e all consume
     // it (≥2-consumer contract, StoreContractSpec), and each used to
     // re-run the scan + md5 + group per call. First caller pays the
     // build; the orderBy is applied per call outside the store.
-    cleanCorpusStores.getOrBuild(
-        corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    cleanCorpusStores.getOrBuild(spark, sfDir, Seq("documents")) {
       val quality = TextAnalysis.qualityScore(spark, sfDir)
         .filter(col("quality_keep")).select("doc_id")
       val norm = lower(regexp_replace(trim(col("text")), "\\s+", " "))
@@ -1506,24 +1501,10 @@ object Dedup {
     *  - clusterStores (under [[nearDupClusters]]): the resolved
     *    (doc_id, cluster_id) table.
     *
-    * Keyed on (application, corpus CONTENT fingerprint, checkpoint
-    * mode): a regenerated corpus rebuilds instead of serving stale
-    * pairs (tests regenerate temp corpora freely), and
-    * CheckpointSeamSpec's reliable-mode flip still exercises a real
-    * build. Holding the handles pins their checkpoint blocks for the
-    * session — bounded: one pair set + one cluster table per corpus,
-    * both far smaller than the corpus itself.
+    * Holding the handles pins their checkpoint blocks for the session —
+    * bounded: one pair set + one cluster table per corpus, both far
+    * smaller than the corpus itself.
     */
-  /** Store SLOT (everything but corpus content) + content fingerprint —
-    * the [[graft.ArtifactStore]] key split that lets a superseded corpus
-    * snapshot's entries be released on regeneration.
-    */
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-  private def docsFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/documents.parquet")
-
   /** The stored duplication-graph artifacts: the exact-dup map, the
     * representatives' shingle frame, each rung's pair set, and their
     * distinct union — every field already checkpointed.
@@ -1536,14 +1517,13 @@ object Dedup {
     * the pair graph — stored separately so a STANDALONE rung query
     * (minhash/simhash/jaccard/containment, the calibration and banding
     * sweeps) reuses the corpus scan + shingle pass without triggering
-    * the other rungs' sketch builds. Keyed additionally on shingle n.
+    * the other rungs' sketch builds.
     */
   private val repShingleStores =
     graft.ArtifactStore.framePairs("dedup.repShingles")
   private[graft] def repShingleStore(spark: SparkSession, sfDir: String,
                                      shingleN: Int = 3): (DataFrame, DataFrame) =
-    repShingleStores.getOrBuild(
-      corpusSlot(spark, sfDir) + "|n" + shingleN, docsFp(spark, sfDir)) {
+    repShingleStores.getOrBuild(spark, sfDir, Seq("documents"), shingleN) {
       val docs = table(spark, sfDir, "documents")
       // narrow (doc_id, rep_id, n_copies) map: feeds the rep filter
       // now and the membership expansion after clustering
@@ -1561,8 +1541,7 @@ object Dedup {
         .foreach(graft.Materialize.release))
   private[graft] def fuzzyGraphStore(spark: SparkSession,
                                      sfDir: String): FuzzyGraph =
-    fuzzyGraphStores.getOrBuild(
-      corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    fuzzyGraphStores.getOrBuild(spark, sfDir, Seq("documents")) {
       val (dupMap, sh) = repShingleStore(spark, sfDir)
       val mh = minHashLshFromShingles(sh).select("doc_a", "doc_b").materialized
       val sim = simHashPairsFromShingles(sh).select("doc_a", "doc_b").materialized
@@ -1602,7 +1581,7 @@ object Dedup {
     * another doc or whose content is fuzzy-paired, ordered by doc_id.
     */
   def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clusterStores.getOrBuild(corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    clusterStores.getOrBuild(spark, sfDir, Seq("documents")) {
       nearDupClustersVia(spark, sfDir, connectedComponents(_)).materialized
     }
 
@@ -1884,13 +1863,12 @@ object Dedup {
   def decontaminate(spark: SparkSession, sfDir: String,
                     evalMod: Int = 97, minOverlap: Int = 3,
                     shingleN: Int = 3): DataFrame =
-    // run-lifetime store (round 18): the flagged-doc relation is read
-    // by pipeline_decontaminate AND the curation funnel (pipeline_e2e)
+    // run-lifetime store: the flagged-doc relation is read by
+    // pipeline_decontaminate AND the curation funnel (pipeline_e2e)
     // — ≥2 registered consumers — and the build is a full corpus
-    // shingle pass per call. Param-keyed slot; orderBy outside.
-    decontamStores.getOrBuild(
-        corpusSlot(spark, sfDir) + s"|$evalMod|$minOverlap|n$shingleN",
-        docsFp(spark, sfDir)) {
+    // shingle pass per call. orderBy outside.
+    decontamStores.getOrBuild(spark, sfDir, Seq("documents"),
+        evalMod, minOverlap, shingleN) {
       val sh = shingles(table(spark, sfDir, "documents"), shingleN)
       val evalShingles = sh.filter(col("doc_id") % evalMod === 0)
         .select("shingle").distinct()
@@ -2119,9 +2097,9 @@ object Dedup {
   /** The history split's (window-hash, distinct-doc count) frame — the
     * store seed both substring-refresh consumers build their bucketed
     * window stores from (batch: dedup_substring_refresh; ingest:
-    * stream_substring), served once per (corpus, n, mod) per run
-    * (VERDICT r14 #4: the streaming twin used to re-pay the full
-    * history explode+distinct on every invocation). Each consumer still
+    * stream_substring), served once per (corpus, n, mod) per run (the
+    * streaming twin used to re-pay the full history explode+distinct on
+    * every invocation). Each consumer still
     * writes its OWN bucketed table from this frame — refresh appends
     * its fresh batch into its copy (mutation), so the TABLE cannot be
     * the shared artifact; the scan is.
@@ -2130,9 +2108,7 @@ object Dedup {
     graft.ArtifactStore.frames("dedup.histWindowCounts")
   private[graft] def histWindowCounts(spark: SparkSession, sfDir: String,
                                       n: Int, mod: Int): DataFrame =
-    windowCountStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$n|$mod",
-      docsFp(spark, sfDir)) {
+    windowCountStores.getOrBuild(spark, sfDir, Seq("documents"), n, mod) {
       docsSpread(spark, sfDir)
         .filter(col("doc_id") % mod =!= 0)
         .select(col("doc_id"),

@@ -1260,7 +1260,7 @@ object EventWindows {
       case _ => hour(col("ts")).cast("long")
     }
 
-  // served from the run-lifetime store (round 17; the dsirRatioTable
+  // served from the run-lifetime store (the dsirRatioTable
   // discipline): the bounded baseline is one full events pass and BOTH
   // the batch audit (ev_seasonal) and the ingest scorer's driver pull
   // (stream_seasonal) need the SAME <= |types| x 24-row frame — without
@@ -1268,10 +1268,7 @@ object EventWindows {
   private val seasonalBaselineStores =
     graft.ArtifactStore.frames("ev.seasonalBaseline")
   private[graft] def seasonalBaseline(spark: SparkSession, sfDir: String): DataFrame =
-    seasonalBaselineStores.getOrBuild(
-      spark.sparkContext.applicationId + "|" + sfDir + "|" +
-        spark.conf.get("spark.graft.reliableCheckpoint", "false"),
-      graft.GraftSession.contentFingerprint(spark, s"$sfDir/events.parquet")) {
+    seasonalBaselineStores.getOrBuild(spark, sfDir, Seq("events")) {
       val ev = table(spark, sfDir, "events")
       ev.filter(col("event_id") % 10 =!= 0)
         .select(col("event_type"), hourOfDay(ev).as("hod"),

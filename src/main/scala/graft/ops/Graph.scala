@@ -212,9 +212,7 @@ object Graph {
     // snapshot and strength threshold — triangles, the k-core peel
     // and the LPA communities all analyze the same edges, so the
     // fact-table self-join runs once per run, not once per consumer.
-    coSupplierEdgeStores.getOrBuild(
-      corpusSlot(spark, sfDir) + "|" + strengthPpm,
-      graft.GraftSession.contentFingerprint(spark, s"$sfDir/lineitem.parquet")) {
+    coSupplierEdgeStores.getOrBuild(spark, sfDir, Seq("lineitem"), strengthPpm) {
       coSupplierEdgesUncached(spark, sfDir, strengthPpm)
     }
 
@@ -241,11 +239,11 @@ object Graph {
   /** The distinct customer->supplier trade pair list (columns c, s) —
     * the shared raw-edge artifact behind [[pageRank]] and [[hits]]:
     * one orders⋈lineitem join + distinct per corpus snapshot, stored
-    * for the run (same key discipline as [[coSupplierEdges]]).
+    * for the run. Both tables are in the key: regenerating orders alone
+    * must rebuild the edges too.
     */
   private def tradePairs(spark: SparkSession, sfDir: String): DataFrame =
-    tradePairStores.getOrBuild(
-      corpusSlot(spark, sfDir), tradeFp(spark, sfDir)) {
+    tradePairStores.getOrBuild(spark, sfDir, Seq("lineitem", "orders")) {
       table(spark, sfDir, "orders")
         .join(table(spark, sfDir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
@@ -253,24 +251,6 @@ object Graph {
         .distinct()
         .materialized
     }
-
-  /** Run-lifetime store key for trade-graph artifacts: application +
-    * corpus path + checkpoint mode + lineitem CONTENT fingerprint (a
-    * regenerated corpus rebuilds; CheckpointSeamSpec's flag flip gets
-    * its own entries). Shared by the pair store and the two iteration
-    * LAYOUT stores below.
-    */
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-
-  /** Trade-graph content fingerprint: the pair list is an orders⋈lineitem
-    * join, so BOTH tables' content is in the key — regenerating
-    * orders.parquet alone must rebuild the edges too (ADVICE r11).
-    */
-  private def tradeFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/lineitem.parquet") +
-      graft.GraftSession.contentFingerprint(spark, s"$sfDir/orders.parquet")
 
   private val tradePairStores =
     graft.ArtifactStore.frames("graph.tradePairs")

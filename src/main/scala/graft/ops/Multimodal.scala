@@ -417,13 +417,11 @@ object Multimodal {
     * arithmetic, [[featureSummary]]'s per-modality rollup). This is what
     * an ingest pipeline persists at 100 TB: payloads decode once at
     * ingest, every downstream curation pass reads the feature columns.
-    * Keyed on corpus content fingerprint (the aHash-store discipline);
-    * the ≥2-consumer StoreContractSpec rule covers it.
+    * The ≥2-consumer StoreContractSpec rule covers it.
     */
   private val imageFeatureStores = graft.ArtifactStore.frames("mm.imageFeatures")
   private def imageFeatureFrame(spark: SparkSession, sfDir: String): DataFrame =
-    imageFeatureStores.getOrBuild(
-      corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    imageFeatureStores.getOrBuild(spark, sfDir, Seq("documents")) {
       decodeImages(spark, imageTable(spark, sfDir)).toDF().materialized
     }
 
@@ -490,17 +488,15 @@ object Multimodal {
     // with the pairing rung's build
     aHashStored(spark, sfDir).orderBy("id")
 
-  /** The aHash frame as a stored artifact (VERDICT r16 #3): one decode +
-    * hash pass per corpus snapshot, serving both the hash query itself
+  /** The aHash frame as a stored artifact: one decode + hash pass per
+    * corpus snapshot, serving both the hash query itself
     * ([[imageAHash]]) and the banded pairing rung's build
     * ([[aHashPairsUncached]] — itself stored, consumed by pairs/
-    * clusters/funnel). Same slot/fingerprint discipline as the pair
-    * stores.
+    * clusters/funnel).
     */
   private val aHashFeatureStores = graft.ArtifactStore.frames("mm.aHashFeatures")
   private def aHashStored(spark: SparkSession, sfDir: String): DataFrame =
-    aHashFeatureStores.getOrBuild(
-      corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    aHashFeatureStores.getOrBuild(spark, sfDir, Seq("documents")) {
       aHashFrame(spark, sfDir).materialized
     }
 
@@ -573,21 +569,12 @@ object Multimodal {
     // snapshot and parameter choice — the pairs query, the cluster
     // resolution and the funnel all consume the same edges, so the
     // decode + banded pairing runs once per run, not once per
-    // consumer. Keyed on content fingerprint + parameters +
-    // checkpoint mode.
-    aHashPairStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$maxHamming|$maxDf",
-      docsFp(spark, sfDir)) {
+    // consumer.
+    aHashPairStores.getOrBuild(spark, sfDir, Seq("documents"), maxHamming, maxDf) {
       aHashPairsUncached(spark, sfDir, maxHamming, maxDf).materialized
     }.orderBy("id_a", "id_b")
 
   private val aHashPairStores = graft.ArtifactStore.frames("mm.aHashPairs")
-
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-  private def docsFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/documents.parquet")
 
   private def aHashPairsUncached(spark: SparkSession, sfDir: String,
                                  maxHamming: Int, maxDf: Int): DataFrame = {
@@ -637,9 +624,7 @@ object Multimodal {
     */
   def aHashClusters(spark: SparkSession, sfDir: String,
                     maxHamming: Int = 3, maxDf: Int = 100): DataFrame =
-    aHashClusterStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$maxHamming|$maxDf",
-      docsFp(spark, sfDir)) {
+    aHashClusterStores.getOrBuild(spark, sfDir, Seq("documents"), maxHamming, maxDf) {
       // the store-served pair graph is already checkpointed; the
       // contraction's edge input needs no second materialization
       val pairs = aHashPairs(spark, sfDir, maxHamming, maxDf)

@@ -364,8 +364,7 @@ object Similarity {
     * the IVF probe, the balance/purity/OOD audits, the persisted-index
     * builds, SemDeDup, the kNN graph and the sweeps all consume the
     * same table, exactly as one deployed index serves many workloads.
-    * Keyed on (application, corpus content fingerprint, centroid
-    * stride, reps-or-full, checkpoint mode). The trained-quantizer
+    * Parameters: centroid stride, reps-or-full. The trained-quantizer
     * path (ivfKmeans) and the split-based lifecycle ops (ivfGrow, the
     * recall holdouts) keep their own assignments — different
     * quantizers or different corpora, not this artifact.
@@ -373,9 +372,7 @@ object Similarity {
   private val assignStores = graft.ArtifactStore.frames("sim.assignments")
   private[ops] def assignedStore(spark: SparkSession, sfDir: String,
                                  centroidMod: Int, reps: Boolean): DataFrame =
-    assignStores.getOrBuild(
-      corpusSlot(spark, sfDir) + s"|$centroidMod|$reps",
-      embFp(spark, sfDir)) {
+    assignStores.getOrBuild(spark, sfDir, Seq("embeddings"), centroidMod, reps) {
       val emb = embeddings(spark, sfDir)
       val side = if (reps) vectorRepresentatives(emb) else emb
       assignCells(side, broadcast(centFrame(spark, sfDir, centroidMod)))
@@ -920,32 +917,23 @@ object Similarity {
   /** Run-lifetime ANN RESULT store: each serving rung's top-k frame is
     * a pure function of (corpus, method parameters), so the standalone
     * query, the recall gate and the sweeps share ONE build per run —
-    * the materialize-once-serve-many contract of the other r11 artifact
-    * stores. The key carries the method tag with every parameter, the
-    * checkpoint mode, and the corpus CONTENT fingerprint (a regenerated
-    * corpus rebuilds). Caller-supplied-workload variants (`*For`) stay
+    * the materialize-once-serve-many contract of the other artifact
+    * stores. The tag carries the method with every parameter.
+    * Caller-supplied-workload variants (`*For`) stay
     * unstored — their query frame is not keyable.
     */
   private val annResultStores = graft.ArtifactStore.frames("sim.annResults")
   private def annResult(spark: SparkSession, sfDir: String, tag: String)
                        (build: => DataFrame): DataFrame =
-    annResultStores.getOrBuild(
-      corpusSlot(spark, sfDir) + "|" + tag, embFp(spark, sfDir)) {
+    annResultStores.getOrBuild(spark, sfDir, Seq("embeddings"), tag) {
       build.materialized
     }
 
   private val gramStores = graft.ArtifactStore.frames("sim.gram")
   private[graft] def gramStore(spark: SparkSession, sfDir: String): DataFrame =
-    gramStores.getOrBuild(corpusSlot(spark, sfDir), embFp(spark, sfDir)) {
+    gramStores.getOrBuild(spark, sfDir, Seq("embeddings")) {
       int8GramUncached(spark, sfDir).materialized
     }
-
-  /** [[graft.ArtifactStore]] key split for the embedding-side stores. */
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-  private def embFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/embeddings.parquet")
 
   private def int8GramUncached(spark: SparkSession, sfDir: String): DataFrame =
     // ONE narrow global aggregate: quantization + the per-row triangle

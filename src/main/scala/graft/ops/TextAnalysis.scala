@@ -357,24 +357,24 @@ object TextAnalysis {
     * workload-size-independent as long as the term dimension stays
     * broadcastable (thousands of stored queries are still KBs).
     */
-  // memoized per (application, corpus content): the workload is run
-  // metadata — a stored-queries table in production — and re-deriving
-  // it per call re-scans documents (measured ~0.3 s/call at sf0.1)
-  private val workloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String)]]()
+  // stored for the run: the workload is run metadata — a stored-queries
+  // table in production — and re-deriving it per call re-scans
+  // documents (measured ~0.3 s/call at sf0.1). A driver-side value:
+  // eviction drops the stale entry itself, nothing else to release.
+  private val bm25WorkloadStores =
+    new graft.ArtifactStore[Seq[(Long, String)]]("text.bm25Workload")(_ => ())
   def defaultBm25Workload(spark: SparkSession,
                           sfDir: String): Seq[(Long, String)] =
-    workloadCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + sfDir + "|" +
-        docsFp(spark, sfDir),
-      _ => table(spark, sfDir, "documents")
+    bm25WorkloadStores.getOrBuild(spark, sfDir, Seq("documents")) {
+      table(spark, sfDir, "documents")
         .filter(col("doc_id") % 100 === 0)
         .orderBy("doc_id").limit(5)
         .select(concat_ws(" ", slice(reverse(array_sort(array_distinct(
           filter(split(lower(col("text")), " "), t => length(t) > 0)))),
           1, 3)).as("qtext"))
         .collect().toSeq.zipWithIndex
-        .map { case (r, i) => (i.toLong, r.getString(0)) })
+        .map { case (r, i) => (i.toLong, r.getString(0)) }
+    }
 
   /** text_bm25: BM25 top-k retrieval over an inverted index — the
     * ranked-search primitive an LLM-data pipeline uses for
@@ -517,10 +517,10 @@ object TextAnalysis {
   }
   private val serveWidenMinBytes: Long = 64L << 20
 
-  /** Build-once-per-run BM25 index store (VERDICT r9 #6): the bucketed
-    * postings table (term, doc_id, tf, dl) plus the 1-row (tot, n_docs)
-    * stats table, keyed by (application, sfDir). The FIRST caller in a
-    * run pays the corpus tokenize + tf/dl aggregation and writes both
+  /** Build-once-per-run BM25 index store: the bucketed postings table
+    * (term, doc_id, tf, dl) plus the 1-row (tot, n_docs) stats table.
+    * The FIRST caller in a run pays the corpus tokenize + tf/dl
+    * aggregation and writes both
     * tables; every later caller reads the stored relations — so
     * text_bm25_indexed, both hybrid-RRF forms and the streaming
     * percolator's artifact pull share ONE index build per run, the way
@@ -533,12 +533,7 @@ object TextAnalysis {
   private val bm25Stores =
     new graft.ArtifactStore[(String, String)]("text.bm25Index")(_ => ())
   private[graft] def bm25Store(spark: SparkSession, sfDir: String): (String, String) =
-    // keyed on the corpus CONTENT fingerprint, not just the path: a
-    // corpus regenerated at the same path within one application is a
-    // cache miss, not a stale serve (ADVICE r10)
-    bm25Stores.getOrBuild(
-      spark.sparkContext.applicationId + "|" + sfDir,
-      docsFp(spark, sfDir)) {
+    bm25Stores.getOrBuild(spark, sfDir, Seq("documents")) {
       locally {
         val docs = table(spark, sfDir, "documents")
         val terms = docs.select(col("doc_id"),
@@ -559,13 +554,6 @@ object TextAnalysis {
         (name, statsName)
       }
     }
-
-  /** [[graft.ArtifactStore]] key split for the document-side stores. */
-  private def corpusSlot(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir + "|" +
-      spark.conf.get("spark.graft.reliableCheckpoint", "false")
-  private def docsFp(spark: SparkSession, sfDir: String): String =
-    graft.GraftSession.contentFingerprint(spark, s"$sfDir/documents.parquet")
 
   /** text_bm25_indexed: the inverted index OUTLIVES the query — the
     * retrieval analog of `sim_ivf_indexed`'s stored posting lists.
@@ -695,8 +683,8 @@ object TextAnalysis {
     */
   /** Both hybrid forms share the SAME lexical half (identical anchor
     * workload and kList), so the ranked lexical list is a two-consumer
-    * artifact: stored for the run keyed on corpus + workload params —
-    * the exact form builds it, the ANN form serves it.
+    * artifact: stored for the run per workload params — the exact
+    * form builds it, the ANN form serves it.
     */
   private val hybridLexStores = graft.ArtifactStore.frames("text.hybridLex")
 
@@ -723,10 +711,8 @@ object TextAnalysis {
   private def hybridLexRanks(spark: SparkSession, sfDir: String,
                              docs: DataFrame, anchorIds: DataFrame,
                              kList: Int, storeTag: String): DataFrame =
-    hybridLexStores.getOrBuild(
-      corpusSlot(spark, sfDir) +
-        s"|$storeTag|$kList|t$hybridMaxQueryTerms",
-      docsFp(spark, sfDir)) {
+    hybridLexStores.getOrBuild(spark, sfDir, Seq("documents"),
+        storeTag, kList, hybridMaxQueryTerms) {
       graft.Materialize(
         hybridLexRanksUncached(spark, sfDir, docs, anchorIds, kList))
     }
@@ -944,11 +930,9 @@ object TextAnalysis {
     * coverage, growth, the streaming twin — applies the SAME merge
     * table, exactly as a production tokenizer is trained once and its
     * merges shipped to every pipeline stage. The first caller per
-    * (application, corpus content, m) pays the m training rounds; later
-    * callers fold the cached merges straight into their encode
-    * projection as plan literals. Keyed on the corpus CONTENT
-    * fingerprint so a regenerated corpus retrains instead of serving
-    * stale merges (ADVICE r10; tests regenerate temp corpora freely).
+    * (corpus, m) pays the m training rounds; later callers fold the
+    * cached merges straight into their encode projection as plan
+    * literals.
     */
   // driver-memory value (a <= m-row merge table, no executor storage):
   // eviction drops the stale entry itself; nothing else to release
@@ -957,9 +941,7 @@ object TextAnalysis {
       "text.bpeMerges")(_ => ())
   private[graft] def bpeTrainMerges(spark: SparkSession, sfDir: String,
                                     m: Int): Seq[(Long, String, String, Long)] =
-    bpeMergeStores.getOrBuild(
-      spark.sparkContext.applicationId + "|" + sfDir + "|" + m,
-      docsFp(spark, sfDir)) {
+    bpeMergeStores.getOrBuild(spark, sfDir, Seq("documents"), m) {
       bpeTrainMergesUncached(spark, sfDir, m)
     }
 
@@ -1871,11 +1853,8 @@ object TextAnalysis {
     // train-once-per-run store (the bm25Store / bpeTrainMerges
     // pattern): the trajectory, the AUC readout and the PR sweep all
     // evaluate ONE trained model per corpus snapshot — production
-    // trains once and ships the weights to every consumer. Keyed on
-    // the corpus CONTENT fingerprint (regenerated corpus retrains)
-    // and the checkpoint mode (the seam spec exercises real builds).
-    classifierStores.getOrBuild(
-      corpusSlot(spark, sfDir), docsFp(spark, sfDir)) {
+    // trains once and ships the weights to every consumer.
+    classifierStores.getOrBuild(spark, sfDir, Seq("documents")) {
       classifierTrainedUncached(spark, sfDir)
     }
 

@@ -133,34 +133,20 @@ object StreamingOps {
 
   import org.apache.spark.sql.types._
 
-  /** Footer-schema cache for the events file stream, keyed on the
-    * file's (path, mtime, size) so a regenerated corpus re-reads. The
-    * per-call `spark.read.parquet(...).schema` footer read costs
-    * ~130 ms of driver metadata I/O, and every event-based twin paid it
-    * once or twice PER CALL — ~4-7 s of the stream family's bench total
-    * was footer re-reads of an unchanged file (round-13 profile). Pure
-    * metadata, never results: the cached value is the physical schema
-    * only.
+  /** Footer schema of the events table, stored for the run. The
+    * per-call `spark.read.parquet(...).schema` footer read costs ~130 ms
+    * of driver metadata I/O, and every event-based twin paid it once or
+    * twice PER CALL — ~4-7 s of the stream family's bench total was
+    * footer re-reads of an unchanged file. Pure metadata, never
+    * results: the stored value is the physical schema only.
     */
-  private val eventSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+  private val eventSchemaStores =
+    new graft.ArtifactStore[StructType]("stream.eventSchema")(_ => ())
 
-  private def eventFileSchema(spark: SparkSession, sfDir: String): StructType = {
-    val path = s"$sfDir/events.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    // a Spark-written table is a DIRECTORY named events.parquet: key on
-    // the newest data file's mtime + total data bytes so a test-corpus
-    // rewrite (same path, new content) invalidates
-    val key = if (st.isDirectory) {
-      val kids = fs.listStatus(p).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      (path, kids.map(_.getModificationTime).foldLeft(0L)(math.max),
-        kids.map(_.getLen).sum)
-    } else (path, st.getModificationTime, st.getLen)
-    eventSchemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
-  }
+  private def eventFileSchema(spark: SparkSession, sfDir: String): StructType =
+    eventSchemaStores.getOrBuild(spark, sfDir, Seq("events")) {
+      spark.read.parquet(s"$sfDir/events.parquet").schema
+    }
 
   /** events.parquet as a file stream. File streams need an explicit
     * schema, taken from a batch footer read of the same file so the

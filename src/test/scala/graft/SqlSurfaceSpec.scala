@@ -78,4 +78,19 @@ class SqlSurfaceSpec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(v === viaCol)
   }
+
+  test("building the sql_* queries leaves the session's optimizer rules alone") {
+    import spark.implicits._
+    val dir = tempSfDir()
+    writeTable(dir, "documents", Seq((1L, "a b c d")).toDF("doc_id", "text"))
+    writeTable(dir, "embeddings", Seq((1L, Seq(0.5f, 1f))).toDF("vec_id", "embedding"))
+    writeTable(dir, "events", Seq((1L, 0L, "view")).toDF("event_id", "ts", "event_type"))
+    val fresh = spark.newSession()
+    val names = SparkEntry.queries.keys.filter(_.startsWith("sql_")).toSeq.sorted
+    assert(names.size === 6)
+    names.foreach(n => SparkEntry.queries(n)(fresh, dir))
+    // the rewrite is injected at build; a second, experimental copy would
+    // run the rule twice in every later query of the session
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+  }
 }

@@ -100,4 +100,34 @@ class StoreContractSpec extends SparkSpec {
         single.map { case (st, slot, cs) => s"  $st  $slot  <- $cs" }
           .mkString("\n"))
   }
+
+  test("ArtifactStore builds every store key; Materialize alone reads the checkpoint mode") {
+    import java.io.File
+    import java.nio.file.Files
+    val root = new File("src")
+    assert(root.isDirectory, s"run from the project root (cwd ${new File(".").getAbsolutePath})")
+    def sources(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val main = sources(new File(root, "main/scala"))
+    def containing(literal: String): Seq[String] =
+      main.filter(f => Files.readString(f.toPath).contains(literal)).map(_.getName).sorted
+    assert(containing("contentFingerprint") === Seq("ArtifactStore.scala"))
+    // the key as a string literal: Materialize.reliable reads it, and
+    // GraftSession.sessionConf sets it from SPARK_GRAFT_RELIABLE
+    assert(containing("\"spark.graft.reliableCheckpoint\"") ===
+      Seq("GraftSession.scala", "Materialize.scala"))
+    assert(Files.readString(new File(root, "main/scala/graft/GraftSession.scala").toPath)
+      .linesIterator.filter(_.contains("\"spark.graft.reliableCheckpoint\""))
+      .forall(_.contains("SPARK_GRAFT_RELIABLE")), "GraftSession only sets the mode")
+    // the removed per-module key helpers and side caches: split so this
+    // file does not match itself
+    val removed = Seq("corpus" + "Slot", "docs" + "Fp", "emb" + "Fp", "trade" + "Fp",
+      "eventSchema" + "Cache", "workload" + "Cache")
+    val left = sources(root).flatMap { f =>
+      val text = Files.readString(f.toPath)
+      removed.filter(text.contains).map(n => s"$n in ${f.getPath}")
+    }
+    assert(left.isEmpty, s"removed store-key helpers still referenced: $left")
+  }
 }

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.DataFrame
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Graph}
+import graft.streaming.StreamingOps
 
 /** ArtifactStore lifecycle contract (VERDICT r11 #2 / ADVICE r11): a
   * regenerated corpus must not strand the superseded snapshot's
@@ -174,6 +175,94 @@ class StoreLifecycleSpec extends SparkSpec {
       files1.foreach(f => assert(!fs.exists(f),
         s"superseded materialized parquet must be deleted: $f"))
     } finally spark.conf.set("spark.graft.reliableCheckpoint", "false")
+  }
+
+  /** The live keys of store `name` whose slot names corpus `dir`. */
+  private def keysFor(name: String, dir: String): Set[(String, String)] =
+    ArtifactStore.all.filter(_.name == name).flatMap(_.liveKeys)
+      .filter(_._1.contains(s"|$dir|")).toSet
+
+  /** events with `ts` as a TIMESTAMP (MICROS) or as BIGINT epoch nanos —
+    * the two physical forms the harness corpora have used. */
+  private def events(nanos: Boolean): DataFrame = {
+    import spark.implicits._
+    val secs = Seq(1L -> 1700000000L, 2L -> 1700003600L, 3L -> 1700007201L)
+    if (nanos) secs.map { case (id, s) => (id, s * 1000000000L) }.toDF("event_id", "ts")
+    else secs.map { case (id, s) => (id, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s))) }
+      .toDF("event_id", "ts")
+  }
+
+  private def writeEventsMicros(dir: String): Unit = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try writeTable(dir, "events", events(nanos = false))
+    finally spark.conf.set(key, prev)
+  }
+
+  test("key precision: a build is redone exactly when a table it reads is regenerated") {
+    import spark.implicits._
+    case class Row(what: String, store: String, setup: String => Unit,
+                   read: String => Any, regenerate: String => Unit,
+                   rebuilds: Boolean, sameResult: Boolean)
+    val keyProbe = new ArtifactStore[Long]("test.keyPrecision")(_ => ())
+    var probeBuilds = 0L
+    var streams = 0
+    val probe = (dir: String) =>
+      keyProbe.getOrBuild(spark, dir, Seq("documents")) { probeBuilds += 1; probeBuilds }
+    val probeSetup = (dir: String) => {
+      writeTable(dir, "documents", smallDocs("k1"))
+      writeEventsMicros(dir)
+    }
+    val orders = (cust2: Long) =>
+      Seq((10L, 1L), (20L, cust2)).toDF("o_orderkey", "o_custkey")
+    val rows = Seq(
+      Row("a table in `tables` regenerated", "test.keyPrecision", probeSetup, probe,
+        dir => writeTable(dir, "documents", smallDocs("k2")),
+        rebuilds = true, sameResult = false),
+      Row("a table outside `tables` regenerated", "test.keyPrecision", probeSetup, probe,
+        dir => writeTable(dir, "events", events(nanos = true)),
+        rebuilds = false, sameResult = true),
+      Row("orders alone regenerated under the trade pairs", "graph.tradePairs",
+        dir => {
+          writeTable(dir, "orders", orders(2L))
+          writeTable(dir, "lineitem", Seq((10L, 1L), (20L, 1L)).toDF("l_orderkey", "l_suppkey"))
+        },
+        dir => Graph.pageRank(spark, dir, iters = 3, topK = 10).collect().toSeq,
+        dir => writeTable(dir, "orders", orders(3L)),
+        rebuilds = true, sameResult = false),
+      Row("events rewritten from the MICROS to the NANOS form", "stream.eventSchema",
+        writeEventsMicros,
+        dir => {
+          val stream = StreamingOps.harnessEventStream(spark, dir)
+          // checked before the stream runs: a source declared with a stale
+          // ts type fails its read tasks rather than ending the query
+          val sourceTs = stream.queryExecution.analyzed.collectLeaves()
+            .flatMap(_.output).find(_.name == "ts").map(_.dataType)
+          assert(sourceTs ===
+            Some(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType))
+          streams += 1
+          val name = s"key_precision_events_$streams"
+          StreamingOps.runToMemory(stream, name,
+            org.apache.spark.sql.streaming.OutputMode.Append())
+          spark.table(name).orderBy("event_id").collect().toSeq
+        },
+        dir => writeTable(dir, "events", events(nanos = true)),
+        rebuilds = true, sameResult = true))
+    for (r <- rows) {
+      val dir = tempSfDir()
+      r.setup(dir)
+      val before = r.read(dir)
+      val keys = keysFor(r.store, dir)
+      assert(keys.size === 1, s"${r.what}: one entry after the first read, got $keys")
+      r.regenerate(dir)
+      val after = r.read(dir)
+      assert((keysFor(r.store, dir) != keys) === r.rebuilds,
+        s"${r.what}: expected rebuild=${r.rebuilds}")
+      assert((before == after) === r.sameResult,
+        s"${r.what}: before=$before after=$after")
+    }
+    keyProbe.clear()
   }
 
   test("shutdown cleanup registers once per root and the sweep deletes a tree") {
