@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Substring}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -10,18 +9,16 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{DotProduct, MinHashArrayExpr, MinHashSketchAgg,
   SimHashSketchAgg, TopKTagAgg, WinnowFpsExpr, WordShinglesExpr}
 
-/** The engine's SQL surface: every custom Catalyst expression/aggregate
-  * of graft.functions exposed as a named SQL function, so a user can run
-  * the whole dedup/similarity toolkit from `spark.sql(...)` without
-  * touching the Scala Column API.
+/** The engine's session extensions: every custom Catalyst
+  * expression/aggregate of graft.functions exposed as a named SQL
+  * function, so a user can run the whole dedup/similarity toolkit from
+  * `spark.sql(...)` without touching the Scala Column API, plus the
+  * engine's one optimizer rule, graft.plans.TokenizeRewrite.
   *
-  * Two registration paths, same builders:
-  *  - at session build (the standard public extension-point pattern):
-  *    `withExtensions(new GraftExtensions)`, as GraftSession.build does,
-  *    or config `spark.sql.extensions=graft.GraftExtensions`;
-  *  - on a live session (for sessions built elsewhere — the driver
-  *    harness hands us one): `GraftExtensions.register(spark)`,
-  *    idempotent via createOrReplaceTempFunction.
+  * They apply at session build only: `withExtensions(new
+  * GraftExtensions)`, as GraftSession.build does, or the config
+  * `spark.sql.extensions=graft.GraftExtensions`. Each session gets the
+  * functions and exactly one copy of the rule.
   *
   * Sizing arguments (shingle n, sketch k, winnow k/w) must be INTEGER
   * LITERALS — they parameterize codegen'd expression instances, not
@@ -33,8 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // the library's one custom logical rewrite — see TokenCountRewrite
-    ext.injectOptimizerRule(_ => graft.plans.TokenCountRewrite)
+    ext.injectOptimizerRule(_ => graft.plans.TokenizeRewrite)
   }
 }
 
@@ -145,17 +141,4 @@ object GraftExtensions {
         case Seq(o, t, kk) => TopKTagAgg(o, t, intLit("graft_top_k", "k", kk))
         case _ => badArity("graft_top_k", "(n, tag, k)")
       }))
-
-  /** Idempotently register every function AND the token-count rewrite on
-    * a live session (`experimental.extraOptimizations` is the public
-    * post-build twin of injectOptimizerRule).
-    */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (name, _, builder) =>
-      GraftExpressionBridge.registerTempFunction(spark, name, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TokenCountRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TokenCountRewrite
-  }
 }

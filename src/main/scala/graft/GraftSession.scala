@@ -262,7 +262,7 @@ object GraftSession {
 
   /** The engine's session: [[sessionConf]] over `corpusDir`'s events
     * bytes (0 without a corpus), with the SQL surface (graft_*
-    * functions and the token-count rewrite) injected at build.
+    * functions and the tokenizer rewrite) injected at build.
     */
   def build(appName: String = "graft",
             master: String = defaultMaster(),

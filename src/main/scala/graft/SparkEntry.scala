@@ -950,7 +950,7 @@ object SparkEntry {
           |GROUP BY doc_id
           |ORDER BY doc_id""".stripMargin)
     }),
-    // the token-count HOF idiom written in pure SQL: TokenCountRewrite
+    // the token-count HOF idiom written in pure SQL: TokenizeRewrite
     // (session-wide via GraftExtensions) turns BOTH size(filter(split))
     // occurrences into the native codegen'd token_count — PlanRewriteSpec
     // pins the rewrite fires from this exact SQL text; shares text_stats'
@@ -979,9 +979,8 @@ object SparkEntry {
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")
       s.sql(
         """WITH toks AS (
-          |  SELECT token
-          |  FROM (SELECT explode(split(text, ' ')) AS token FROM graft_documents)
-          |  WHERE length(token) > 0),
+          |  SELECT explode(filter(split(text, ' '), t -> length(t) > 0)) AS token
+          |  FROM graft_documents),
           |sk AS (SELECT count_min_sketch(token, 0.0001d, 0.99d, 42) AS cms FROM toks),
           |top AS (
           |  SELECT token, CAST(count(*) AS BIGINT) AS cnt
@@ -3303,7 +3302,7 @@ object SparkEntry {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     "text_stats" -> textStatsOracle,
     // the SQL-surface twin runs the identical relation through the
-    // TokenCountRewrite path — same oracle by construction
+    // TokenizeRewrite path — same oracle by construction
     "sql_tokencount" -> textStatsOracle,
     "text_quality" ->
       """WITH d AS (

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * Reference semantics re-expressed Spark-first:
   *  - O1 file scan        -> `spark.read.text` / a string column of any table
-  *  - O2 tokenize (mapF)  -> `explode(split(...))` + empty-token filter
+  *  - O2 tokenize (mapF)  -> `explode(filter(split(...), t -> length(t) > 0))`
   *                           (`strings.FieldsFunc` drops empty fields,
-  *                           reference src/main/main.go:24-26)
+  *                           reference src/main/main.go:24-26); the
+  *                           optimizer turns the filtered split into one
+  *                           native byte scan (graft.plans.TokenizeRewrite)
   *  - O3 hash shuffle     -> Catalyst Exchange on groupBy — free, and with
   *                           map-side partial aggregation the reference lacks
   *  - O4+O6 group+count   -> `groupBy(token).count()` (reference
@@ -35,15 +37,16 @@ object UrlCount {
   /** O2 tokenizer. `split` emits empty strings where Go's FieldsFunc drops
     * them (leading/trailing/multi-space), so the filter is required for
     * parity. `sep` is a Java regex; " " reproduces mapF, "\\s+" reproduces
-    * the test-suite tokenizer (reference test_test.go:26-33).
+    * the test-suite tokenizer (reference test_test.go:26-33). Written as
+    * the engine's one tokenizer idiom, which TokenizeRewrite compiles to
+    * `split_tokens`.
     */
   def tokenize(text: Column, sep: String = " "): Column =
-    explode(split(text, sep))
+    explode(filter(split(text, sep), t => length(t) > 0))
 
   /** Bag of non-empty tokens from one string column. Output column: `token`. */
   def tokens(df: DataFrame, textCol: String, sep: String = " "): DataFrame =
     df.select(tokenize(col(textCol), sep).as("token"))
-      .filter(length(col("token")) > 0)
 
   /** O4+O6: per-token occurrence counts, totally ordered by token.
     * Output: (token STRING, cnt BIGINT).
@@ -107,10 +110,18 @@ object UrlCount {
     * the exact count plus an in-plan check that the rsd=2% sketch landed
     * within 5% of it, so the oracle gate hash-verifies the tolerance
     * claim; a production run at scale reads the approx value alone.
+    *
+    * Both counts run over the distinct token set: `count(1)` of it is the
+    * exact count, and HLL++ ignores duplicates, so the sketch is the one
+    * the bag would give. With `countDistinct` and the sketch in one
+    * aggregate over the bag, Spark's one-distinct planning grouped by
+    * token with a partial sketch per group, so every distinct token
+    * carried a 410-word HLL++ buffer through that group-by and its
+    * shuffle, more than doubling this query's time.
     */
   def approxDistinctTokens(df: DataFrame, textCol: String, sep: String = " "): DataFrame =
-    tokens(df, textCol, sep)
-      .agg(countDistinct(col("token")).as("n_exact"),
+    tokens(df, textCol, sep).distinct()
+      .agg(count(lit(1)).as("n_exact"),
         approx_count_distinct(col("token"), 0.02).as("n_approx"))
       .select(col("n_exact"),
         (abs(col("n_approx") - col("n_exact")) <= col("n_exact") * lit(0.05))
@@ -136,7 +147,6 @@ object UrlCount {
                         salts: Int = 16, sep: String = " "): DataFrame =
     df.select(pmod(col(idCol), lit(salts.toLong)).as("salt"),
         tokenize(col(textCol), sep).as("token"))
-      .filter(length(col("token")) > 0)
       .groupBy("token", "salt")
       .agg(count(lit(1)).as("c"))
       .groupBy("token")

@@ -25,8 +25,7 @@ object StreamingOps {
     spark.readStream
       .format("text")
       .load(inputDir)
-      .select(explode(split(col("value"), "\\s+")).as("token"))
-      .filter(length(col("token")) > 0)
+      .select(explode(filter(split(col("value"), "\\s+"), t => length(t) > 0)).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("cnt"))
 
@@ -540,8 +539,7 @@ object StreamingOps {
   def streamTokenCounts(spark: SparkSession, sfDir: String): DataFrame =
     runToBatch(spark,
         s => harnessDocStream(s, sfDir)
-          .select(explode(split(col("text"), " ")).as("token"))
-          .filter(length(col("token")) > 0)
+          .select(explode(filter(split(col("text"), " "), t => length(t) > 0)).as("token"))
           .groupBy("token")
           .agg(count(lit(1)).as("cnt")),
         "stream_tokens", OutputMode.Complete())

@@ -12,15 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftExpressionBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a temp SQL function on a LIVE session (the post-build twin
-    * of SparkSessionExtensions.injectFunction, which only applies at
-    * session construction). `sessionState` is `private[sql]`, hence the
-    * bridge placement; `createOrReplaceTempFunction` makes the call
-    * idempotent. Used by graft.GraftExtensions.register.
-    */
-  def registerTempFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -211,7 +211,6 @@ class RandomizedEquivalenceSpec extends SparkSpec {
 
   test("native graft_dot == higher-order-function fold on random arrays") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val rnd = new Random(29)
     val rows = (1 to 50).map { _ =>
       val n = rnd.nextInt(8) + 1
@@ -231,7 +230,6 @@ class RandomizedEquivalenceSpec extends SparkSpec {
   test("CMS point estimates on random Zipf streams: never an undercount, " +
       "and within the declared eps * N overcount bound") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     for (seed <- Seq(23, 173)) {
       val rnd = new Random(seed)
       // Zipf-ish stream: token t_k drawn with weight ~ 1/k

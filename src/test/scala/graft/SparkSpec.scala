@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,10 +19,20 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession =
     GraftSession.build("graft-test", "local[4]", shufflePartitions = 4)
 
-  /** A fresh sfDir-shaped temp dir; write tables into it with writeTable. */
+  /** A fresh sfDir-shaped temp dir; write tables into it with writeTable.
+    * It lives under one per-JVM root that is deleted at shutdown.
+    */
   def tempSfDir(): String =
-    Files.createTempDirectory("graft-test-sf").toString
+    Files.createTempDirectory(SparkSpec.tempRoot, "sf").toString
 
   def writeTable(sfDir: String, name: String, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(s"$sfDir/$name.parquet")
+}
+
+object SparkSpec {
+  lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-test-sf")
+    GraftSession.cleanupAtShutdown(root.toString)
+    root
+  }
 }

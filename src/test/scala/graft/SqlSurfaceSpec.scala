@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** The SQL surface (GraftExtensions): every graft_* function invocable
   * from spark.sql, equivalent to its Column-API twin, with literal-arg
   * misuse failing loudly. The shared test session is built through
-  * GraftSession.build, so the session-build injection path (rather than
-  * post-hoc registration) is what's under test; `register` idempotency
-  * gets its own case.
+  * GraftSession.build, so the session-build injection path is what's
+  * under test.
   */
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -70,13 +69,20 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(e.getMessage.contains("INTEGER literal"))
   }
 
-  test("live-session register is idempotent and equivalent") {
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark)
-    val v = spark.sql("SELECT graft_h60('abc') AS h").collect()(0).getLong(0)
-    val viaCol = spark.range(1).select(OracleHash.h60(lit("abc")).as("h"))
-      .collect()(0).getLong(0)
-    assert(v === viaCol)
+  test("a built session resolves every graft_* function and holds the tokenizer rule once") {
+    GraftExtensions.functions.foreach { case (name, _, _) =>
+      assert(spark.catalog.functionExists(name), s"$name does not resolve")
+    }
+    val optimizer = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer
+    val copies = optimizer.batches
+      .map(b => b.name -> b.rules.count(_ eq graft.plans.TokenizeRewrite))
+      .filter(_._2 > 0)
+    // an injected rule joins both operator-optimization batches, once
+    // each; a second, live-registered copy would add a "User Provided
+    // Optimizers" entry and run the rule twice per query
+    assert(copies === Seq("Operator Optimization before Inferring Filters" -> 1,
+      "Operator Optimization after Inferring Filters" -> 1))
   }
 
   test("building the sql_* queries leaves the session's optimizer rules alone") {

@@ -80,7 +80,6 @@ class StoreContractSpec extends SparkSpec {
   test("every store slot reached by a registered query has >= 2 query consumers") {
     // fresh attribution state: earlier suites touch stores un-attributed
     ArtifactStore.clearAll()
-    GraftExtensions.register(spark)
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       ArtifactStore.currentConsumer.set(name)
