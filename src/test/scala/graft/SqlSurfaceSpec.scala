@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * from spark.sql, equivalent to its Column-API twin, with literal-arg
   * misuse failing loudly. The shared test session is built through
   * GraftSession.build, so the session-build injection path is what's
-  * under test.
+  * under test; building again on the live session gets its own case.
   */
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -83,6 +83,24 @@ class SqlSurfaceSpec extends SparkSpec {
     // Optimizers" entry and run the rule twice per query
     assert(copies === Seq("Operator Optimization before Inferring Filters" -> 1,
       "Operator Optimization after Inferring Filters" -> 1))
+  }
+
+  test("live-session register is idempotent and equivalent") {
+    val before = spark.sql("SELECT graft_h60('abc') AS h").collect()(0).getLong(0)
+    // building again while the session is live reaches the same session;
+    // the surface it registered must neither change nor grow a second
+    // copy of the rule
+    val again = GraftSession.build("graft-test", "local[4]", shufflePartitions = 4)
+    assert(again eq spark)
+    val optimizer = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer
+    assert(optimizer.batches.map(_.rules.count(_ eq graft.plans.TokenizeRewrite)).sum === 2)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val after = again.sql("SELECT graft_h60('abc') AS h").collect()(0).getLong(0)
+    val viaCol = spark.range(1).select(OracleHash.h60(lit("abc")).as("h"))
+      .collect()(0).getLong(0)
+    assert(before === viaCol)
+    assert(after === viaCol)
   }
 
   test("building the sql_* queries leaves the session's optimizer rules alone") {
