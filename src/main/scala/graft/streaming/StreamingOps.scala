@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming twins of the batch operators: the reference's
   * pipeline (tokenize -> count) and the event-window aggregations, run
@@ -10,10 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The batch/streaming split mirrors production: identical
   * transformations, only the source (`readStream`) and sink
-  * (`writeStream` + output mode) differ. Tests drive these with a
-  * file/memory source via `runToMemory` (AvailableNow +
-  * awaitTermination — see its scaladoc for why not
-  * processAllAvailable).
+  * (`writeStream` + output mode) differ. Every query starts, drains
+  * and stops through `drain` (AvailableNow + awaitTermination — see
+  * its scaladoc for why not processAllAvailable); tests drive the
+  * twins' frames with a file source into `runToMemory`.
   */
 object StreamingOps {
 
@@ -81,8 +81,28 @@ object StreamingOps {
       }.toDF()
   }
 
-  /** Drive any streaming frame to a memory sink and block until the
-    * AvailableNow run TERMINATES — the local harness for tests.
+  /** Drive any streaming frame to a memory sink and return the sink as
+    * a batch frame, its query already stopped — the local harness for
+    * tests and the Complete-mode twins.
+    *
+    * The checkpoint is explicit: Spark's implicit temp checkpoint lands
+    * under java.io.tmpdir and is recursively deleted during query
+    * termination, both on the slow disk-backed path. It is a fresh dir
+    * per CALL (never per name: reusing a checkpoint would resume offsets
+    * and yield an empty sink) under the application scratch root,
+    * reclaimed by the shutdown hook instead of inline.
+    */
+  def runToMemory(df: DataFrame, queryName: String,
+                  mode: OutputMode = OutputMode.Complete()): DataFrame = {
+    drain(df.writeStream.format("memory").queryName(queryName).outputMode(mode),
+      s"${scratchRoot(df.sparkSession)}/${freshName(s"ckpt_$queryName")}")
+    df.sparkSession.table(queryName)
+  }
+
+  /** The one place a stream runs: start `w` with its checkpoint at
+    * `ckpt` under an AvailableNow trigger, block until it terminates,
+    * and stop it on every exit path. A failed micro-batch comes back as
+    * the `StreamingQueryException` that awaitTermination throws.
     *
     * awaitTermination, not processAllAvailable: an AvailableNow query
     * runs trailing NO-DATA batches after the data batches (that final
@@ -97,25 +117,17 @@ object StreamingOps {
     * AvailableNow self-terminates exactly when every batch, including
     * the trailing no-data ones, has committed.
     */
-  def runToMemory(df: DataFrame, queryName: String,
-                  mode: OutputMode = OutputMode.Complete()): StreamingQuery = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      // explicit scratch checkpoint (round 18): Spark's implicit temp
-      // checkpoint lands under java.io.tmpdir and is recursively deleted
-      // during query termination — both on the slow disk-backed path.
-      // A fresh dir per CALL (never per name: reusing a checkpoint would
-      // resume offsets and yield an empty sink) under the application
-      // scratch root, reclaimed by the shutdown hook instead of inline.
-      .option("checkpointLocation",
-        s"${scratchRoot(df.sparkSession)}/${freshName(s"ckpt_$queryName")}")
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+  private[graft] def drain(w: DataStreamWriter[Row], ckpt: String): Unit = {
+    val q = w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
   }
+
+  /** Run `df` through foreachBatch, handing each micro-batch to `f`,
+    * with a fresh scratch checkpoint (see runToMemory).
+    */
+  private[graft] def eachBatch(df: DataFrame, prefix: String)(f: DataFrame => Unit): Unit =
+    drain(df.writeStream.foreachBatch((batch: DataFrame, _: Long) => f(batch)),
+      s"${scratchRoot(df.sparkSession)}/${freshName(s"ckpt_$prefix")}")
 
   // —— harness integration: the streaming twins over the sfDir tables ——
   //
@@ -214,7 +226,7 @@ object StreamingOps {
           }
         }
         spark.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(values)),
+            java.util.Arrays.asList(Row.fromSeq(values)),
             fileSchema)
           .coalesce(1).write.mode("overwrite").parquet(dir)
         heartbeatWritten += dir
@@ -354,8 +366,8 @@ object StreamingOps {
     math.max(4, math.min(math.max(cores, 4), volumeBound.max(1)))
   }
 
-  private def runToBatch(spark: SparkSession, build: SparkSession => DataFrame,
-                         prefix: String, mode: OutputMode): DataFrame = {
+  private[graft] def runToBatch(spark: SparkSession, build: SparkSession => DataFrame,
+                                prefix: String, mode: OutputMode): DataFrame = {
     // state-partition sizing is scoped to a CLONED session — same
     // SparkContext and shared state, separate SQL conf and catalog —
     // so the surrounding session's parallelism is NEVER touched, not
@@ -365,7 +377,8 @@ object StreamingOps {
     // BUILT against the clone: a streaming query freezes the state
     // layout from its DataFrame's own session conf at start, and the
     // memory sink registers in that session's catalog, hence the
-    // builder-closure shape and the scoped.table read.
+    // builder-closure shape (runToMemory reads the sink back through
+    // the frame's own session).
     //
     // SINK choice is by output mode, and it is a SCALE decision, not a
     // convenience: Complete-mode results are aggregate tables (bounded
@@ -384,27 +397,17 @@ object StreamingOps {
     val scoped = spark.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions",
       stateShufflePartitions(spark).toString)
-    if (mode == OutputMode.Complete()) {
-      val q = runToMemory(build(scoped), name, mode)
-      q.stop()
-      scoped.table(name)
-    } else {
+    val df = build(scoped)
+    if (mode == OutputMode.Complete()) runToMemory(df, name, mode)
+    else {
       val dir = s"${scratchRoot(spark)}/$name"
-      val df = build(scoped)
-      val q =
+      drain(
         if (mode == OutputMode.Append())
           // the native file sink is Append-only by contract; its
           // metadata log makes it exactly-once under batch replay
-          df.writeStream
-            .format("parquet")
-            .option("path", s"$dir/out")
-            .option("checkpointLocation", s"$dir/ckpt")
-            .outputMode(mode)
-            .trigger(Trigger.AvailableNow())
-            .start()
-        else
-          updateSinkWriter(df, dir).start()
-      q.awaitTermination() // see runToMemory: trailing-batch-safe drain
+          df.writeStream.format("parquet").option("path", s"$dir/out").outputMode(mode)
+        else updateSinkWriter(df, dir),
+        s"$dir/ckpt")
       // explicit schema: a zero-emission stream leaves no data files,
       // and the harness still owes the caller a typed empty frame.
       // recursiveFileLookup: Update-mode rows live in per-batch subdirs
@@ -431,9 +434,7 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$dir/out/batch-$id"); ()
       }
-      .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
 
   /** Per-application scratch root for the file-sink twins, deleted by a
     * JVM shutdown hook — without it, every run/JVM leaks its sink +
@@ -1446,22 +1447,14 @@ object StreamingOps {
     val name =
       graft.sources.Bucketed.scopedName(spark, "graft_profile_store_stream")
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val q = harnessDocStream(spark, sfDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sk = graft.ops.Corpus.shardSketchesOf(batch, shards, lgK)
-        if (!spark.catalog.tableExists(name))
-          graft.sources.Bucketed.writeBucketed(spark, sk, name,
-            graft.sources.Bucketed.scopedPath(name), "source", nBuckets)
-        else
-          graft.sources.Bucketed.appendBucketed(spark, sk, name, "source", nBuckets)
-        ()
-      }
-      .option("checkpointLocation", // scratch ckpt, see runToMemory (r18)
-        s"${scratchRoot(spark)}/${freshName("ckpt_profile_fold")}")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination() // see runToMemory: trailing-batch-safe drain
+    eachBatch(harnessDocStream(spark, sfDir), "profile_fold") { batch =>
+      val sk = graft.ops.Corpus.shardSketchesOf(batch, shards, lgK)
+      if (!spark.catalog.tableExists(name))
+        graft.sources.Bucketed.writeBucketed(spark, sk, name,
+          graft.sources.Bucketed.scopedPath(name), "source", nBuckets)
+      else
+        graft.sources.Bucketed.appendBucketed(spark, sk, name, "source", nBuckets)
+    }
     def toks(df: DataFrame): DataFrame =
       df.select(col("source"),
         explode(filter(split(col("text"), " "), t => length(t) > 0)).as("token"))
@@ -1491,24 +1484,9 @@ object StreamingOps {
   def streamJsonSink(spark: SparkSession, sfDir: String): DataFrame = {
     val path = graft.sources.Bucketed.scopedPath(
       graft.sources.Bucketed.scopedName(spark, "graft_jsonl_stream")) + "/documents"
-    val fs = new java.io.File(path)
-    if (fs.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(fs)
-    }
-    val q = harnessDocStream(spark, sfDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").json(path); ()
-      }
-      .option("checkpointLocation", // scratch ckpt, see runToMemory (r18)
-        s"${scratchRoot(spark)}/${freshName("ckpt_json_sink")}")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination() // see runToMemory: trailing-batch-safe drain
+    graft.GraftSession.deleteRecursively(new java.io.File(path))
+    eachBatch(harnessDocStream(spark, sfDir), "json_sink")(
+      _.write.mode("append").json(path))
     val schema = graft.GraftSession.table(spark, sfDir, "documents").schema
     graft.sources.JsonLines.profile(spark.read.schema(schema).json(path))
   }
@@ -1646,19 +1624,12 @@ object StreamingOps {
     */
   def streamWriteHashShards(spark: SparkSession, sfDir: String, outDir: String,
                             nShards: Int = 8): Unit = {
-    val q = harnessDocStream(spark, sfDir)
+    val sharded = harnessDocStream(spark, sfDir)
       .withColumn("shard_id",
         pmod(graft.functions.OracleHash.h60(col("doc_id").cast("string")),
           lit(nShards.toLong)))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("shard_id").parquet(outDir)
-      }
-      .option("checkpointLocation", // scratch ckpt, see runToMemory (r18)
-        s"${scratchRoot(spark)}/${freshName("ckpt_hash_shards")}")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination() // see runToMemory: trailing-batch-safe drain
+    eachBatch(sharded, "hash_shards")(
+      _.write.mode("append").partitionBy("shard_id").parquet(outDir))
   }
 
   /** LEFT OUTER stream-stream interval join — `streamViewPurchaseJoin`

@@ -14,7 +14,7 @@ class BucketingSpec extends SparkSpec {
     val prevBc = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // pin the SMJ path
     try {
-      val base = java.nio.file.Files.createTempDirectory("graft-bucketed-spec").toString
+      val base = SparkSpec.tempDir("graft-bucketed-spec")
       val a = (1L to 400L).map(i => (i, i * 10)).toDF("k", "va")
       val b = (0L until 1200L).map(i => (i % 400 + 1, i)).toDF("k", "vb")
       graft.sources.Bucketed.writeBucketed(spark, a, "gb_spec_a", s"$base/a", "k", 4)

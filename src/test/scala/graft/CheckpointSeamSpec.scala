@@ -59,8 +59,7 @@ class CheckpointSeamSpec extends SparkSpec {
   test("release() finds mat-* roots under a NON-NORMALIZED configured " +
       "checkpointDir — trailing slash must not disable eviction (ADVICE r16)") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-seam-slash").toString
+    val base = SparkSpec.tempDir("graft-seam-slash")
     // the raw-substring comparison this pins against: configured dir
     // with a trailing slash vs the FileIndex's scheme-qualified,
     // normalized rootPaths ("file:/...") — contains() never matched,

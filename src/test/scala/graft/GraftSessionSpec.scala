@@ -27,7 +27,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   /** A corpus dir whose events table is one sparse file of `bytes`. */
   private def corpusWithEvents(bytes: Long): String = {
-    val dir = Files.createTempDirectory("graft-session-spec").toFile
+    val dir = new File(SparkSpec.tempDir("graft-session-spec"))
     val events = new File(dir, "events.parquet")
     events.mkdirs()
     new File(events, "_SUCCESS").createNewFile()

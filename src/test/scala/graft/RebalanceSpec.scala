@@ -100,7 +100,7 @@ class RebalanceSpec extends AnyFunSuite {
 
   test("spreadIfNarrow widens a tiny scan and gates off when stats cover the width") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("rebalance-spec").toString
+    val dir = SparkSpec.tempDir("rebalance-spec")
     (1L to 100L).toDF("doc_id").coalesce(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     val widened = Rebalance.spreadIfNarrow(scan, scan, WindowDense, col("doc_id"))
@@ -126,7 +126,7 @@ class RebalanceSpec extends AnyFunSuite {
 
   test("stream widen: spread at the probe session's width, pass-through when the probe is wide") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("rebalance-stream").toString
+    val dir = SparkSpec.tempDir("rebalance-stream")
     // one file of near-incompressible text, a few 16 KB tasks of mass
     (1L to 2000L).map(i => (i, java.util.UUID.nameUUIDFromBytes(
         BigInt(i).toByteArray).toString, "en", "s", 36L))

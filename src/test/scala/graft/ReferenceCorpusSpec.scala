@@ -66,7 +66,7 @@ class ReferenceCorpusSpec extends SparkSpec {
     // amplify the reference corpus 64x into a 32-file text corpus
     // (~80 MB) — the many-file shape of the reference's main.sh input
     // at a size where single-file sinks would be the wrong plan
-    val corpusDir = Files.createTempDirectory("graft-refcorpus").toString
+    val corpusDir = SparkSpec.tempDir("graft-refcorpus")
     spark.read.text(dataFiles: _*)
       .crossJoin(spark.range(64))
       .select(col("value"))
@@ -84,14 +84,14 @@ class ReferenceCorpusSpec extends SparkSpec {
     // stage is genuinely thousands of range partitions wide
     val countsWide = counts.repartitionByRange(8, col("token"))
     // O7 JSON sink, DISTRIBUTED (no coalesce): one file per task
-    val jsonDir = Files.createTempDirectory("graft-refsink-json").toString
+    val jsonDir = SparkSpec.tempDir("graft-refsink-json")
     UrlCount.writeJsonSink(countsWide, jsonDir)
     assert(partFiles(jsonDir).size >= 2, "distributed JSON sink must write multiple files")
     // O8 text sink, DISTRIBUTED: "k: v" lines, range-partitioned on the
     // key and sorted within each file — the multi-file form of the
     // reference's globally sorted merge output (mergedLines' orderBy is
     // the same range exchange; the explicit form pins the width)
-    val textDir = Files.createTempDirectory("graft-refsink-text").toString
+    val textDir = SparkSpec.tempDir("graft-refsink-text")
     UrlCount.writeTextSink(countsWide.sortWithinPartitions("token")
       .select(concat_ws(": ", col("token"), col("cnt").cast("string")).as("line")),
       textDir)

@@ -244,8 +244,8 @@ class StoreLifecycleSpec extends SparkSpec {
           streams += 1
           val name = s"key_precision_events_$streams"
           StreamingOps.runToMemory(stream, name,
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          spark.table(name).orderBy("event_id").collect().toSeq
+              org.apache.spark.sql.streaming.OutputMode.Append())
+            .orderBy("event_id").collect().toSeq
         },
         dir => writeTable(dir, "events", events(nanos = true)),
         rebuilds = true, sameResult = true))
@@ -268,8 +268,7 @@ class StoreLifecycleSpec extends SparkSpec {
   test("shutdown cleanup registers once per root and the sweep deletes a tree") {
     // one hook per distinct root (a JVM running several applications in
     // sequence reclaims each one's scratch); re-registration is a no-op
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cleanup-spec").toString
+    val root = SparkSpec.tempDir("graft-cleanup-spec")
     assert(GraftSession.cleanupAtShutdown(root),
       "first registration must install a hook")
     assert(!GraftSession.cleanupAtShutdown(root),
@@ -290,8 +289,7 @@ class StoreLifecycleSpec extends SparkSpec {
     import spark.implicits._
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
-      val userDir = java.nio.file.Files
-        .createTempDirectory("graft-user-ckpt").toString
+      val userDir = SparkSpec.tempDir("graft-user-ckpt")
       spark.conf.set("spark.graft.checkpointDir", userDir)
       Materialize(Seq(1, 2, 3).toDF("v")).count()
       // cleanupAtShutdown returning true = the dir was NOT registered by

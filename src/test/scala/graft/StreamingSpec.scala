@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
 import graft.streaming.StreamingOps
 
 /** Drives the Structured Streaming twins end-to-end with file sources and
-  * a memory sink (AvailableNow + processAllAvailable), asserting the
-  * incremental results equal the batch semantics.
+  * a memory sink (`StreamingOps.runToMemory`, which drains the query
+  * and returns the sink as a frame), asserting the incremental results
+  * equal the batch semantics.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -19,7 +20,7 @@ class StreamingSpec extends SparkSpec {
 
   private def eventsDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-ev").toString
+    val dir = SparkSpec.tempDir("graft-stream-ev")
     Seq(
       (1L, ts(0), 1L, "click", 1.5),
       (2L, ts(10), 1L, "click", 2.5),
@@ -38,30 +39,38 @@ class StreamingSpec extends SparkSpec {
         StructField("value", DoubleType))))
       .parquet(dir)
 
+  /** `files` as a replay source: file i holds the events whose ids it
+    * lists, and id -1 is the far-future heartbeat that closes the stream.
+    */
+  private def replayDir(all: Seq[(Long, Timestamp, Long, String, Double)],
+                        files: Seq[Seq[Long]]): String = {
+    import spark.implicits._
+    val byId = all.map(e => e._1 -> e).toMap
+    batchFilesDir(files.map(_.map {
+      case -1L => (-1L, new Timestamp(7258118400L * 1000L), -1L, "view", 0.0)
+      case id  => byId(id)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")))
+  }
+
   test("streaming token count equals the batch count (reference pipeline, incremental)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-txt").toString
+    val dir = SparkSpec.tempDir("graft-stream-txt")
     Files.writeString(java.nio.file.Paths.get(dir, "a.txt"), "x y x\nz x\n")
     Files.writeString(java.nio.file.Paths.get(dir, "b.txt"), "y  z\n")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.tokenCountStream(spark, dir), "tok_counts")
-    try {
-      val got = spark.sql("SELECT token, cnt FROM tok_counts ORDER BY token")
-        .as[(String, Long)].collect().toSeq
-      assert(got === Seq(("x", 3L), ("y", 2L), ("z", 2L)))
-    } finally q.stop()
+    val got = StreamingOps.runToMemory(
+        StreamingOps.tokenCountStream(spark, dir), "tok_counts")
+      .orderBy("token").as[(String, Long)].collect().toSeq
+    assert(got === Seq(("x", 3L), ("y", 2L), ("z", 2L)))
   }
 
   test("windowed event counts with watermark: tumbling hour buckets") {
     import spark.implicits._
-    val q = StreamingOps.runToMemory(
+    StreamingOps.runToMemory(
       StreamingOps.windowedEventCounts(streamEvents(eventsDir)), "win_counts")
-    try {
-      val got = spark.sql(
-        "SELECT cast(win_start AS LONG), event_type, n FROM win_counts ORDER BY 1, 2")
-        .as[(Long, String, Long)].collect().toSeq
-      assert(got === Seq((0L, "click", 2L), (3600L, "click", 1L), (3600L, "view", 1L)))
-    } finally q.stop()
+    val got = spark.sql(
+      "SELECT cast(win_start AS LONG), event_type, n FROM win_counts ORDER BY 1, 2")
+      .as[(Long, String, Long)].collect().toSeq
+    assert(got === Seq((0L, "click", 2L), (3600L, "click", 1L), (3600L, "view", 1L)))
   }
 
   test("append mode: watermark evicts finalized windows, holds open ones") {
@@ -70,22 +79,20 @@ class StreamingSpec extends SparkSpec {
     // window [0,3600) and [3600,7200) are finalized (end <= wm) and
     // emitted exactly once; window [39600,43200) is still open when
     // input ends and must NOT appear
-    val dir = Files.createTempDirectory("graft-stream-app").toString
+    val dir = SparkSpec.tempDir("graft-stream-app")
     Seq(
       (1L, ts(0), 1L, "click", 1.0),
       (2L, ts(3700), 1L, "click", 2.0),
       (3L, ts(40000), 1L, "view", 3.0)
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.runToMemory(
+    StreamingOps.runToMemory(
       StreamingOps.windowedEventCounts(streamEvents(dir)), "app_win",
       OutputMode.Append())
-    try {
-      val got = spark.sql(
-        "SELECT cast(win_start AS LONG), event_type, n FROM app_win ORDER BY 1")
-        .as[(Long, String, Long)].collect().toSeq
-      assert(got === Seq((0L, "click", 1L), (3600L, "click", 1L)), s"got $got")
-    } finally q.stop()
+    val got = spark.sql(
+      "SELECT cast(win_start AS LONG), event_type, n FROM app_win ORDER BY 1")
+      .as[(Long, String, Long)].collect().toSeq
+    assert(got === Seq((0L, "click", 1L), (3600L, "click", 1L)), s"got $got")
   }
 
   test("append sessions: watermark-equal session end IS emitted, open session held") {
@@ -94,21 +101,18 @@ class StreamingSpec extends SparkSpec {
     // final watermark = 9000 - 7200 = 1800s — exactly the session end,
     // which pins the emission boundary at end <= wm (the oracle's
     // condition); session {9000} is still open and must not appear
-    val dir = Files.createTempDirectory("graft-stream-sapp").toString
+    val dir = SparkSpec.tempDir("graft-stream-sapp")
     Seq(
       (1L, ts(0), 1L, "click", 1.0),
       (2L, ts(9000), 1L, "click", 1.0)
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.runToMemory(
-      StreamingOps.sessionizedEvents(streamEvents(dir)), "sapp",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-    try {
-      val got = spark.sql(
-        "SELECT cast(sess_start AS LONG), n_events FROM sapp ORDER BY 1")
-        .as[(Long, Long)].collect().toSeq
-      assert(got === Seq((0L, 1L)), s"got $got")
-    } finally q.stop()
+    StreamingOps.runToMemory(
+      StreamingOps.sessionizedEvents(streamEvents(dir)), "sapp", OutputMode.Append())
+    val got = spark.sql(
+      "SELECT cast(sess_start AS LONG), n_events FROM sapp ORDER BY 1")
+      .as[(Long, Long)].collect().toSeq
+    assert(got === Seq((0L, 1L)), s"got $got")
   }
 
   test("session_window boundary: exactly 30 min MERGES; beyond it splits") {
@@ -116,33 +120,29 @@ class StreamingSpec extends SparkSpec {
     // pins the boundary the stream_sessions oracle must reproduce:
     // session_window merges an event landing exactly at the window end
     // (gap-touching), so a new session starts only when diff > gap
-    val dir = Files.createTempDirectory("graft-stream-gap").toString
+    val dir = SparkSpec.tempDir("graft-stream-gap")
     Seq(
       (1L, ts(0), 9L, "click", 1.0),
       (2L, ts(1800), 9L, "click", 1.0), // exactly gap after -> still merged
       (3L, ts(3601), 9L, "click", 1.0)  // 1801s after #2 -> new session
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.runToMemory(
+    StreamingOps.runToMemory(
       StreamingOps.sessionizedEvents(streamEvents(dir)), "gap_sess")
-    try {
-      val got = spark.sql(
-        "SELECT cast(sess_start AS LONG), n_events FROM gap_sess ORDER BY 1")
-        .as[(Long, Long)].collect().toSeq
-      assert(got === Seq((0L, 2L), (3601L, 1L)), s"got $got")
-    } finally q.stop()
+    val got = spark.sql(
+      "SELECT cast(sess_start AS LONG), n_events FROM gap_sess ORDER BY 1")
+      .as[(Long, Long)].collect().toSeq
+    assert(got === Seq((0L, 2L), (3601L, 1L)), s"got $got")
   }
 
   test("streaming session windows: 30-min gap splits a user's sessions") {
     import spark.implicits._
-    val q = StreamingOps.runToMemory(
+    StreamingOps.runToMemory(
       StreamingOps.sessionizedEvents(streamEvents(eventsDir)), "sess")
-    try {
-      val got = spark.sql(
-        "SELECT user_id, count(*) FROM sess GROUP BY user_id ORDER BY user_id")
-        .as[(Long, Long)].collect().toSeq
-      assert(got === Seq((1L, 2L), (2L, 1L))) // user 1: two sessions
-    } finally q.stop()
+    val got = spark.sql(
+      "SELECT user_id, count(*) FROM sess GROUP BY user_id ORDER BY user_id")
+      .as[(Long, Long)].collect().toSeq
+    assert(got === Seq((1L, 2L), (2L, 1L))) // user 1: two sessions
   }
 
   test("streaming minhash dedup suppresses sketch-identical docs") {
@@ -151,7 +151,7 @@ class StreamingSpec extends SparkSpec {
     // raw text) but tokenizes to the same shingle set -> same sketch ->
     // suppressed; doc 3 is disjoint -> second signature; doc 4 has < 3
     // tokens -> no shingles -> no sketch row
-    val dir = Files.createTempDirectory("graft-stream-fz").toString
+    val dir = SparkSpec.tempDir("graft-stream-fz")
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     Seq(
       (1L, base, "en", "s", base.length.toLong),
@@ -161,7 +161,7 @@ class StreamingSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(dir)
     // streamMinhashDedup reads $sfDir/documents.parquet — rebuild layout
-    val sfDir = Files.createTempDirectory("graft-stream-fzsf").toString
+    val sfDir = SparkSpec.tempDir("graft-stream-fzsf")
     spark.read.parquet(dir).write.mode("overwrite").parquet(s"$sfDir/documents.parquet")
     val sigs = StreamingOps.streamMinhashDedup(spark, sfDir)
       .as[String].collect().toSeq
@@ -342,15 +342,13 @@ class StreamingSpec extends SparkSpec {
 
   test("mapGroupsWithState running totals (custom state machine)") {
     import spark.implicits._
-    val q = StreamingOps.runToMemory(
+    StreamingOps.runToMemory(
       StreamingOps.runningUserTotals(spark, streamEvents(eventsDir)),
       "running", OutputMode.Update())
-    try {
-      val got = spark.sql(
-        "SELECT user_id, n_events, total_value_micros FROM running ORDER BY user_id")
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(got === Seq((1L, 3L, 5000000L), (2L, 1L, 4000000L)))
-    } finally q.stop()
+    val got = spark.sql(
+      "SELECT user_id, n_events, total_value_micros FROM running ORDER BY user_id")
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got === Seq((1L, 3L, 5000000L), (2L, 1L, 4000000L)))
   }
 
   test("streaming funnel: depth machine matches the batch funnel on the offender corpus") {
@@ -409,7 +407,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("out-of-order replay: funnel/attribution/transitions match batch across shuffled micro-batches") {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
     // events spanning 0.2h-5h with a 2h watermark delay; micro-batch
     // files deliberately violate event-time order (each file's
@@ -434,98 +431,59 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 6L, 11L),                   // batch 2: 0.2h arrives AFTER 1h
       Seq(3L, 8L, 9L),                    // batch 3: 1.5h after 3h
       Seq(-1L))                           // heartbeat closes the stream
-    val byId = all.map(e => e._1 -> e).toMap
-    val srcDir = Files.createTempDirectory("graft-ooo-src")
-    files.zipWithIndex.foreach { case (ids, i) =>
-      val rows = ids.map {
-        case -1L => (-1L, new Timestamp(7258118400L * 1000L), -1L, "view", 0.0)
-        case id  => byId(id)
-      }
-      val tmp = Files.createTempDirectory("graft-ooo-part")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dest = srcDir.resolve(f"f$i%02d.parquet")
-      Files.copy(part, dest)
-      assert(dest.toFile.setLastModified(1700000000000L + i * 10000L))
-    }
+    val srcDir = replayDir(all, files)
     def replay(): DataFrame = spark.readStream
       .schema(StructType(Seq(
         StructField("event_id", LongType), StructField("ts", TimestampType),
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType))))
       .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
+      .parquet(srcDir)
     // the batch side sees only the real events, in one tidy table
     val sfDir = tempSfDir()
     writeTable(sfDir, "events",
       all.toDF("event_id", "ts", "user_id", "event_type", "value"))
 
     // funnel: roll emitted (user, depth) updates to final max-depth
-    val qf = StreamingOps.runToMemory(
-      StreamingOps.funnelDepths(replay()), "ooo_funnel", OutputMode.Update())
-    try {
-      val depths = spark.table("ooo_funnel").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-      val got = (1 to 3).map(k => depths.values.count(_ >= k).toLong)
-      val batch = graft.ops.EventWindows.funnel(spark, sfDir).collect()
-        .map(_.getLong(2)).toSeq
-      assert(got === batch && got === Seq(4L, 3L, 3L))
-    } finally qf.stop()
+    val depths = StreamingOps.runToMemory(
+        StreamingOps.funnelDepths(replay()), "ooo_funnel", OutputMode.Update())
+      .as[(Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+    val got = (1 to 3).map(k => depths.values.count(_ >= k).toLong)
+    val batch = graft.ops.EventWindows.funnel(spark, sfDir).collect()
+      .map(_.getLong(2)).toSeq
+    assert(got === batch && got === Seq(4L, 3L, 3L))
 
     // attribution: appended rows are exactly the batch as-of relation
-    val qa = StreamingOps.runToMemory(
-      StreamingOps.attributionRows(replay()), "ooo_attr", OutputMode.Append())
-    try {
-      val got = spark.table("ooo_attr")
-        .select("purchase_event_id", "user_id", "purchase_tus",
-          "view_event_id", "view_tus", "lag_us")
-        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-      val batch = graft.ops.EventWindows.asOfAttribution(spark, sfDir)
-        .collect().map(_.toSeq)
-      assert(got.toSeq === batch.toSeq)
-    } finally qa.stop()
+    val attr = StreamingOps.runToMemory(
+        StreamingOps.attributionRows(replay()), "ooo_attr", OutputMode.Append())
+      .select("purchase_event_id", "user_id", "purchase_tus",
+        "view_event_id", "view_tus", "lag_us")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    assert(attr.toSeq === graft.ops.EventWindows.asOfAttribution(spark, sfDir)
+      .collect().map(_.toSeq).toSeq)
 
     // transitions: emitted pairs collapse to the batch matrix
-    val qt = StreamingOps.runToMemory(
-      StreamingOps.transitionPairs(replay()), "ooo_trans", OutputMode.Update())
-    try {
-      val pairs = spark.table("ooo_trans").as[(String, String)].collect()
-        .groupBy(identity).view.mapValues(_.length.toLong).toMap
-      val batch = graft.ops.EventWindows.eventTransitions(spark, sfDir)
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(pairs === batch)
-    } finally qt.stop()
+    val pairs = StreamingOps.runToMemory(
+        StreamingOps.transitionPairs(replay()), "ooo_trans", OutputMode.Update())
+      .as[(String, String)].collect()
+      .groupBy(identity).view.mapValues(_.length.toLong).toMap
+    assert(pairs === graft.ops.EventWindows.eventTransitions(spark, sfDir)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
   }
 
   test("micro-batch-boundary invariance: manifest/rfm/best_rep identical under different splits") {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
     // the Complete-mode twins claim their accumulators are commutative
     // (count / sum / max / modular-sum / argmax-struct) — pin it by
     // replaying the SAME rows under two different file-to-batch splits
     // and requiring bit-identical final state
-    def writeSplit(dfs: Seq[DataFrame]): String = {
-      val srcDir = Files.createTempDirectory("graft-split-src")
-      dfs.zipWithIndex.foreach { case (df, i) =>
-        val tmp = Files.createTempDirectory("graft-split-part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-        val dest = srcDir.resolve(f"f$i%02d.parquet")
-        Files.copy(part, dest)
-        assert(dest.toFile.setLastModified(1700000000000L + i * 10000L))
-      }
-      srcDir.toString
-    }
     def run(frame: DataFrame => DataFrame, schema: StructType,
             dir: String, name: String): Seq[Seq[Any]] = {
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
-      val q = StreamingOps.runToMemory(frame(src), name, OutputMode.Complete())
-      try spark.table(name).collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-      finally q.stop()
+      StreamingOps.runToMemory(frame(src), name, OutputMode.Complete())
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
     }
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
@@ -552,15 +510,15 @@ class StreamingSpec extends SparkSpec {
     for ((frame, nm) <- Seq(
         (StreamingOps.manifestFrame _, "split_manifest"),
         ((d: DataFrame) => graft.ops.Dedup.bestRepFrame(d), "split_bestrep"))) {
-      val a = run(frame, docSchema, writeSplit(docSplitA.map(docDf)), s"${nm}_a")
-      val b = run(frame, docSchema, writeSplit(docSplitB.map(docDf)), s"${nm}_b")
+      val a = run(frame, docSchema, batchFilesDir(docSplitA.map(docDf)), s"${nm}_a")
+      val b = run(frame, docSchema, batchFilesDir(docSplitB.map(docDf)), s"${nm}_b")
       assert(a === b, s"$nm diverged across splits")
       assert(a.nonEmpty)
     }
     val ra = run(StreamingOps.rfmStateFrame _, evSchema,
-      writeSplit(evSplitA.map(evDf)), "split_rfm_a")
+      batchFilesDir(evSplitA.map(evDf)), "split_rfm_a")
     val rb = run(StreamingOps.rfmStateFrame _, evSchema,
-      writeSplit(evSplitB.map(evDf)), "split_rfm_b")
+      batchFilesDir(evSplitB.map(evDf)), "split_rfm_b")
     assert(ra === rb && ra.nonEmpty, "rfm state diverged across splits")
   }
 
@@ -746,9 +704,9 @@ class StreamingSpec extends SparkSpec {
 
   test("restart from checkpoint: processed input is not re-ingested, new input is") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft-restart-in").toString
-    val out = Files.createTempDirectory("graft-restart-out").toString + "/data"
-    val ckpt = Files.createTempDirectory("graft-restart-ck").toString
+    val in = SparkSpec.tempDir("graft-restart-in")
+    val out = SparkSpec.tempDir("graft-restart-out") + "/data"
+    val ckpt = SparkSpec.tempDir("graft-restart-ck")
     // the production restart discipline: source progress lives in the
     // checkpoint, output commits ride the file-sink transaction log —
     // the SAME query (same checkpoint + sink path) stops and resumes
@@ -775,7 +733,6 @@ class StreamingSpec extends SparkSpec {
 
   test("RANDOMIZED out-of-order replay: funnel/attribution/transitions match " +
       "batch under arbitrary arrival order (watermark delay covers the span)") {
-    import scala.jdk.CollectionConverters._
     import scala.util.Random
     import spark.implicits._
     // the stateful twins' 2h watermark delay exceeds this corpus's whole
@@ -794,65 +751,41 @@ class StreamingSpec extends SparkSpec {
       }
       val order = rnd.shuffle(all)
       val files = order.grouped(25).toSeq.map(_.map(_._1)) :+ Seq(-1L)
-      val byId = all.map(e => e._1 -> e).toMap
-      val srcDir = Files.createTempDirectory("graft-rnd-ooo-src")
-      files.zipWithIndex.foreach { case (ids, i) =>
-        val rows = ids.map {
-          case -1L => (-1L, new Timestamp(7258118400L * 1000L), -1L, "view", 0.0)
-          case id  => byId(id)
-        }
-        val tmp = Files.createTempDirectory("graft-rnd-ooo-part")
-        rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-        val dest = srcDir.resolve(f"f$i%02d.parquet")
-        Files.copy(part, dest)
-        assert(dest.toFile.setLastModified(1700000000000L + i * 10000L))
-      }
+      val srcDir = replayDir(all, files)
       def replay(): DataFrame = spark.readStream
         .schema(StructType(Seq(
           StructField("event_id", LongType), StructField("ts", TimestampType),
           StructField("user_id", LongType), StructField("event_type", StringType),
           StructField("value", DoubleType))))
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
+        .parquet(srcDir)
       val sfDir = tempSfDir()
       writeTable(sfDir, "events",
         all.toDF("event_id", "ts", "user_id", "event_type", "value"))
 
-      val qf = StreamingOps.runToMemory(
-        StreamingOps.funnelDepths(replay()), s"rnd_ooo_funnel_$seed", OutputMode.Update())
-      try {
-        val depths = spark.table(s"rnd_ooo_funnel_$seed").as[(Long, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-        val got = (1 to 3).map(k => depths.values.count(_ >= k).toLong)
-        val batch = graft.ops.EventWindows.funnel(spark, sfDir).collect()
-          .map(_.getLong(2)).toSeq
-        assert(got === batch, s"seed=$seed funnel")
-      } finally qf.stop()
+      val depths = StreamingOps.runToMemory(
+          StreamingOps.funnelDepths(replay()), s"rnd_ooo_funnel_$seed", OutputMode.Update())
+        .as[(Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+      val got = (1 to 3).map(k => depths.values.count(_ >= k).toLong)
+      assert(got === graft.ops.EventWindows.funnel(spark, sfDir).collect()
+        .map(_.getLong(2)).toSeq, s"seed=$seed funnel")
 
-      val qa = StreamingOps.runToMemory(
-        StreamingOps.attributionRows(replay()), s"rnd_ooo_attr_$seed", OutputMode.Append())
-      try {
-        val got = spark.table(s"rnd_ooo_attr_$seed")
-          .select("purchase_event_id", "user_id", "purchase_tus",
-            "view_event_id", "view_tus", "lag_us")
-          .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-        val batch = graft.ops.EventWindows.asOfAttribution(spark, sfDir)
-          .collect().map(_.toSeq)
-        assert(got.toSeq === batch.toSeq, s"seed=$seed attribution")
-      } finally qa.stop()
+      val attr = StreamingOps.runToMemory(
+          StreamingOps.attributionRows(replay()), s"rnd_ooo_attr_$seed", OutputMode.Append())
+        .select("purchase_event_id", "user_id", "purchase_tus",
+          "view_event_id", "view_tus", "lag_us")
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+      assert(attr.toSeq === graft.ops.EventWindows.asOfAttribution(spark, sfDir)
+        .collect().map(_.toSeq).toSeq, s"seed=$seed attribution")
 
-      val qt = StreamingOps.runToMemory(
-        StreamingOps.transitionPairs(replay()), s"rnd_ooo_trans_$seed", OutputMode.Update())
-      try {
-        val pairs = spark.table(s"rnd_ooo_trans_$seed").as[(String, String)].collect()
-          .groupBy(identity).view.mapValues(_.length.toLong).toMap
-        val batch = graft.ops.EventWindows.eventTransitions(spark, sfDir)
-          .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        assert(pairs === batch, s"seed=$seed transitions")
-      } finally qt.stop()
+      val pairs = StreamingOps.runToMemory(
+          StreamingOps.transitionPairs(replay()), s"rnd_ooo_trans_$seed", OutputMode.Update())
+        .as[(String, String)].collect()
+        .groupBy(identity).view.mapValues(_.length.toLong).toMap
+      assert(pairs === graft.ops.EventWindows.eventTransitions(spark, sfDir)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
+        s"seed=$seed transitions")
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,12 +29,12 @@ class UpdateSinkReplaySpec extends SparkSpec {
 
   test("update-mode foreachBatch sink: replayed batch replaces itself, never double-appends") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft-replay-in").toString
+    val in = SparkSpec.tempDir("graft-replay-in")
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
       .write.parquet(s"$in/f0.parquet")
     Seq((4L, "d"), (5L, "e"), (6L, "f")).toDF("doc_id", "text")
       .write.parquet(s"$in/f1.parquet")
-    val sink = Files.createTempDirectory("graft-replay-sink").toString
+    val sink = SparkSpec.tempDir("graft-replay-sink")
 
     def stream(): DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // force >= 2 micro-batches
@@ -45,7 +43,7 @@ class UpdateSinkReplaySpec extends SparkSpec {
     def readBack(): DataFrame = spark.read.schema(schema)
       .option("recursiveFileLookup", "true").parquet(s"$sink/out")
 
-    StreamingOps.updateSinkWriter(stream(), sink).start().awaitTermination()
+    StreamingOps.drain(StreamingOps.updateSinkWriter(stream(), sink), s"$sink/ckpt")
     val first = sorted(readBack())
     assert(first === Seq((1L, "A"), (2L, "B"), (3L, "C"),
       (4L, "D"), (5L, "E"), (6L, "F")))
@@ -66,7 +64,7 @@ class UpdateSinkReplaySpec extends SparkSpec {
 
     // restart on the same checkpoint: Structured Streaming re-runs the
     // uncommitted batch through foreachBatch with the SAME batch id
-    StreamingOps.updateSinkWriter(stream(), sink).start().awaitTermination()
+    StreamingOps.drain(StreamingOps.updateSinkWriter(stream(), sink), s"$sink/ckpt")
     assert(sorted(readBack()) === first,
       "replayed batch must overwrite its own directory, not append")
     val after = new java.io.File(s"$sink/out").listFiles

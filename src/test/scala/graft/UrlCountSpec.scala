@@ -89,7 +89,7 @@ class UrlCountSpec extends SparkSpec {
   test("JSON sink round-trips the reduce output (O7, common_reduce.go:43-54)") {
     import spark.implicits._
     val counts = UrlCount.tokenCounts(Seq("a b a", "b a").toDF("text"), "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-json-sink").toString
+    val dir = SparkSpec.tempDir("graft-json-sink")
     UrlCount.writeJsonSink(counts, dir, singleFile = true)
     val back = spark.read.json(dir).select("token", "cnt")
       .as[(String, Long)].collect().toMap

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -35,26 +34,16 @@ class WatermarkBoundarySpec extends SparkSpec {
 
   private def replayFiles(files: Seq[Seq[(Long, Timestamp, Long, String, Double)]])
       : DataFrame = {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("wmb-src")
-    files.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory("wmb-part")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dest = srcDir.resolve(f"f$i%02d.parquet")
-      Files.copy(part, dest)
-      assert(dest.toFile.setLastModified(1700000000000L + i * 10000L))
-    }
+    val srcDir = batchFilesDir(
+      files.map(_.toDF("event_id", "ts", "user_id", "event_type", "value")))
     spark.readStream
       .schema(StructType(Seq(
         StructField("event_id", LongType), StructField("ts", TimestampType),
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType))))
       .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
+      .parquet(srcDir)
   }
 
   private val heartbeat =
@@ -69,17 +58,14 @@ class WatermarkBoundarySpec extends SparkSpec {
       Seq((3L, ts(2801), 2L, "view", 1.0)),  // > wm: delivered
       Seq((4L, ts(3000), 2L, "purchase", 1.0)),
       Seq(heartbeat)))
-    val q = StreamingOps.runToMemory(
-      StreamingOps.attributionRows(stream), "wmb_strict", OutputMode.Append())
-    try {
-      val rows = spark.table("wmb_strict")
-        .select("purchase_event_id", "view_event_id").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // the purchase attributes to the SURVIVING view (3), proving view 2
-      // never reached the state machine — Spark's filter, not ours:
-      // splitRipe keeps boundary-equal arrivals it is handed
-      assert(rows === Map(4L -> 3L))
-    } finally q.stop()
+    val rows = StreamingOps.runToMemory(
+        StreamingOps.attributionRows(stream), "wmb_strict", OutputMode.Append())
+      .select("purchase_event_id", "view_event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the purchase attributes to the SURVIVING view (3), proving view 2
+    // never reached the state machine — Spark's filter, not ours:
+    // splitRipe keeps boundary-equal arrivals it is handed
+    assert(rows === Map(4L -> 3L))
   }
 
   test("epoch-0 event times equal the INITIAL watermark and are dropped " +
@@ -89,14 +75,11 @@ class WatermarkBoundarySpec extends SparkSpec {
       Seq((71L, ts(1200), 4L, "purchase", 1.0)),
       Seq((111L, ts(0), 2L, "purchase", 1.0)),  // dropped entirely
       Seq(heartbeat)))
-    val q = StreamingOps.runToMemory(
-      StreamingOps.attributionRows(stream), "wmb_epoch0", OutputMode.Append())
-    try {
-      val rows = spark.table("wmb_epoch0")
-        .select("purchase_event_id", "view_event_id").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toMap
-      assert(rows === Map(71L -> -1L)) // 70 and 111 never arrived
-    } finally q.stop()
+    val rows = StreamingOps.runToMemory(
+        StreamingOps.attributionRows(stream), "wmb_epoch0", OutputMode.Append())
+      .select("purchase_event_id", "view_event_id").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
+      .toMap
+    assert(rows === Map(71L -> -1L)) // 70 and 111 never arrived
   }
 }
