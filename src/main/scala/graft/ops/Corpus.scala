@@ -1310,7 +1310,7 @@ object Corpus {
     val name = graft.sources.Bucketed.scopedName(spark, "graft_profile_store")
     graft.sources.Bucketed.writeBucketed(spark,
       shardSketches(sourceTokens(docs.filter(col("doc_id") % mod =!= 0), shards), lgK),
-      name, graft.sources.Bucketed.scopedPath(name), "source", nBuckets)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "source", nBuckets)
     graft.sources.Bucketed.appendBucketed(spark,
       shardSketches(sourceTokens(docs.filter(col("doc_id") % mod === 0), shards), lgK),
       name, "source", nBuckets)
@@ -1353,7 +1353,7 @@ object Corpus {
     val name = graft.sources.Bucketed.scopedName(spark, "graft_profile_store_cpt")
     graft.sources.Bucketed.writeBucketed(spark,
       shardSketches(sourceTokens(docs.filter(col("doc_id") % mod =!= 0), shards), lgK),
-      name, graft.sources.Bucketed.scopedPath(name), "source", nBuckets)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "source", nBuckets)
     graft.sources.Bucketed.appendBucketed(spark,
       shardSketches(sourceTokens(docs.filter(col("doc_id") % mod === 0), shards), lgK),
       name, "source", nBuckets)
@@ -1363,7 +1363,7 @@ object Corpus {
     val outName =
       graft.sources.Bucketed.scopedName(spark, "graft_profile_store_cptd")
     graft.sources.Bucketed.writeBucketed(spark, compacted,
-      outName, graft.sources.Bucketed.scopedPath(outName), "source", nBuckets)
+      outName, graft.sources.Bucketed.scopedPath(spark, outName), "source", nBuckets)
     val before = store.groupBy("source")
       .agg(count(lit(1)).as("n_sketches_before"))
     val after = spark.table(outName).groupBy("source")

@@ -653,7 +653,7 @@ object Dedup {
         graft.Rebalance.writeCompactIfNarrow(
           storedBandKeys(spark, sfDir, "hist", mod, shingleN, k, bands),
           table(spark, sfDir, "documents")),
-        name, graft.sources.Bucketed.scopedPath(name), "sig", 8)
+        name, graft.sources.Bucketed.scopedPath(spark, name), "sig", 8)
       name
     }
     // the relation cache is per session: a rebuild from another session
@@ -688,7 +688,7 @@ object Dedup {
     graft.sources.Bucketed.writeBucketed(spark,
       graft.Rebalance.writeCompactIfNarrow(
         storedBandKeys(spark, sfDir, "hist", mod, shingleN, k, bands), docsProbe),
-      name, graft.sources.Bucketed.scopedPath(name), "sig", nBuckets)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "sig", nBuckets)
     graft.sources.Bucketed.appendBucketed(spark,
       graft.Rebalance.writeCompactIfNarrow(
         storedBandKeys(spark, sfDir, "new", mod, shingleN, k, bands), docsProbe),
@@ -729,7 +729,7 @@ object Dedup {
     graft.sources.Bucketed.writeBucketed(spark,
       graft.Rebalance.writeCompactIfNarrow(
         storedBandKeys(spark, sfDir, "hist", mod, shingleN, k, bands), docsProbe),
-      name, graft.sources.Bucketed.scopedPath(name), "sig", nBuckets)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "sig", nBuckets)
     graft.sources.Bucketed.appendBucketed(spark,
       graft.Rebalance.writeCompactIfNarrow(
         storedBandKeys(spark, sfDir, "new", mod, shingleN, k, bands), docsProbe),
@@ -744,7 +744,7 @@ object Dedup {
       graft.sources.Bucketed.scopedName(spark, "graft_minhash_index_compacted")
     graft.sources.Bucketed.writeBucketed(spark,
       graft.Rebalance.writeCompactIfNarrow(compacted, docsProbe),
-      outName, graft.sources.Bucketed.scopedPath(outName), "sig", nBuckets)
+      outName, graft.sources.Bucketed.scopedPath(spark, outName), "sig", nBuckets)
     def perBand(sigs: DataFrame, as: String): DataFrame = sigs
       .select(split(col("sig"), "\\|").getItem(0).cast("long").as("band"))
       .groupBy("band").agg(count(lit(1)).as(as))
@@ -2133,7 +2133,7 @@ object Dedup {
     val name = graft.sources.Bucketed.scopedName(spark, "graft_window_store")
     graft.sources.Bucketed.writeBucketed(spark,
       histWindowCounts(spark, sfDir, n, mod),
-      name, graft.sources.Bucketed.scopedPath(name), "w", nBuckets)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "w", nBuckets)
     graft.sources.Bucketed.appendBucketed(spark,
       freshWins.groupBy("w").agg(count(lit(1)).as("c")), name, "w", nBuckets)
     val merged = spark.table(name).groupBy("w")

@@ -355,10 +355,10 @@ object Relational {
     val custName = graft.sources.Bucketed.scopedName(spark, "graft_b_customer")
     val ordsName = graft.sources.Bucketed.scopedName(spark, "graft_b_orders")
     graft.sources.Bucketed.writeBucketed(
-      spark, cust, custName, graft.sources.Bucketed.scopedPath(custName),
+      spark, cust, custName, graft.sources.Bucketed.scopedPath(spark, custName),
       "custkey", nBuckets)
     graft.sources.Bucketed.writeBucketed(
-      spark, ords, ordsName, graft.sources.Bucketed.scopedPath(ordsName),
+      spark, ords, ordsName, graft.sources.Bucketed.scopedPath(spark, ordsName),
       "custkey", nBuckets)
     spark.table(custName)
       .join(spark.table(ordsName), Seq("custkey"))

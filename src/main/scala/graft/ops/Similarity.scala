@@ -434,7 +434,7 @@ object Similarity {
     graft.sources.Bucketed.writeBucketed(spark,
       assignedStore(spark, sfDir, centroidMod, reps = false)
         .select("cell", "vec_id", "v"),
-      name, graft.sources.Bucketed.scopedPath(name), "cell", 8)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "cell", 8)
     val probes = probeCells(
       emb.filter(col("vec_id") % centroidMod === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv")),
@@ -463,7 +463,7 @@ object Similarity {
     graft.sources.Bucketed.writeBucketed(spark,
       assignCells(emb.filter(col("vec_id") % mod =!= 0), broadcast(cent))
         .select("cell", "vec_id", "v"),
-      name, graft.sources.Bucketed.scopedPath(name), "cell", 8)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "cell", 8)
     graft.sources.Bucketed.appendBucketed(spark,
       assignCells(emb.filter(col("vec_id") % mod === 0), broadcast(cent))
         .select("cell", "vec_id", "v"),
@@ -1617,7 +1617,7 @@ object Similarity {
         .join(comps.select(col("vec_id"), col("sub"), col("code")).distinct(),
           Seq("vec_id"))
         .select("cell", "vec_id", "sub", "code"),
-      name, graft.sources.Bucketed.scopedPath(name), "cell", 8)
+      name, graft.sources.Bucketed.scopedPath(spark, name), "cell", 8)
     // serving: per-query (sub, code) -> partial-dot LUT (identical math
     // to pqAnn), probe cells by centroid cosine, score stored codes
     val lut = comps.filter(col("vec_id") % centroidMod === 0)

@@ -543,13 +543,13 @@ object TextAnalysis {
         val suffix = Integer.toHexString(sfDir.hashCode & 0x7fffffff)
         val name = graft.sources.Bucketed.scopedName(spark, s"graft_bm25_index_$suffix")
         graft.sources.Bucketed.writeBucketed(spark, tf.join(dl, "doc_id"),
-          name, graft.sources.Bucketed.scopedPath(name), "term", 8)
+          name, graft.sources.Bucketed.scopedPath(spark, name), "term", 8)
         val statsName = graft.sources.Bucketed.scopedName(spark, s"graft_bm25_stats_$suffix")
         spark.sql(s"DROP TABLE IF EXISTS $statsName")
         terms.agg(count(lit(1)).as("tot"))
           .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
           .write.format("parquet")
-          .option("path", graft.sources.Bucketed.scopedPath(statsName))
+          .option("path", graft.sources.Bucketed.scopedPath(spark, statsName))
           .mode("overwrite").saveAsTable(statsName)
         (name, statsName)
       }

@@ -31,9 +31,22 @@ object Bucketed {
   def scopedName(spark: SparkSession, base: String): String =
     base + "_" + spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "")
 
-  /** tmpdir path for a (run-scoped) index table name. */
-  def scopedPath(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
+  /** Path for a (run-scoped) index or store table: under the
+    * application's [[tablesRoot]], so the tables go with the run.
+    */
+  def scopedPath(spark: SparkSession, name: String): String =
+    s"${tablesRoot(spark)}/$name"
+
+  /** One `graft-tables_<appId>` directory per application under
+    * `java.io.tmpdir`, deleted at JVM exit. It stays on the regular
+    * filesystem, not the scratch root: the table write path is the
+    * operator under test.
+    */
+  def tablesRoot(spark: SparkSession): String = {
+    val root = s"${System.getProperty("java.io.tmpdir")}/${scopedName(spark, "graft-tables")}"
+    graft.GraftSession.cleanupAtShutdown(root)
+    root
+  }
 
   /** Write `df` as a bucketed, per-bucket-sorted external parquet table
     * at `path`, registered as `name` in the session catalog (replacing

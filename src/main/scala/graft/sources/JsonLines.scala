@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object JsonLines {
 
   def jsonRoundTrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = Bucketed.scopedPath(
+    val path = Bucketed.scopedPath(spark,
       Bucketed.scopedName(spark, "graft_jsonl")) + "/documents"
     val docs = graft.GraftSession.table(spark, sfDir, "documents")
     docs.write.mode("overwrite").json(path)
@@ -64,7 +64,7 @@ object JsonLines {
     * giant CSV.
     */
   def csvRoundTrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = Bucketed.scopedPath(
+    val path = Bucketed.scopedPath(spark,
       Bucketed.scopedName(spark, "graft_csv")) + "/documents"
     val docs = graft.GraftSession.table(spark, sfDir, "documents")
     // empty-vs-null: bare CSV cannot tell "" from NULL — write empties

@@ -40,7 +40,7 @@ object Partitioned {
     */
   def prunedDocCounts(spark: SparkSession, sfDir: String,
                       keep: Seq[String] = Seq("src3", "src7")): DataFrame = {
-    val base = Bucketed.scopedPath(
+    val base = Bucketed.scopedPath(spark,
       Bucketed.scopedName(spark, "graft_partitioned")) + "/documents"
     writePartitioned(graft.GraftSession.table(spark, sfDir, "documents"), base, "source")
     spark.read.parquet(base)

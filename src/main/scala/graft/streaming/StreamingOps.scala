@@ -1407,7 +1407,7 @@ object StreamingOps {
           // the cheap bucket write below is per-invocation
           val hist = graft.ops.Dedup.histWindowCounts(s, sfDir, n, mod)
           graft.sources.Bucketed.writeBucketed(s, hist, name,
-            graft.sources.Bucketed.scopedPath(name), "w", nBuckets)
+            graft.sources.Bucketed.scopedPath(spark, name), "w", nBuckets)
           val idx = s.table(name).select(col("w"), lit(1L).as("hit"))
           harnessDocStream(s, sfDir)
             .filter(col("doc_id") % mod === 0)
@@ -1451,7 +1451,7 @@ object StreamingOps {
       val sk = graft.ops.Corpus.shardSketchesOf(batch, shards, lgK)
       if (!spark.catalog.tableExists(name))
         graft.sources.Bucketed.writeBucketed(spark, sk, name,
-          graft.sources.Bucketed.scopedPath(name), "source", nBuckets)
+          graft.sources.Bucketed.scopedPath(spark, name), "source", nBuckets)
       else
         graft.sources.Bucketed.appendBucketed(spark, sk, name, "source", nBuckets)
     }
@@ -1482,7 +1482,7 @@ object StreamingOps {
     * mangled escape, no duplicated write under AvailableNow replay).
     */
   def streamJsonSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = graft.sources.Bucketed.scopedPath(
+    val path = graft.sources.Bucketed.scopedPath(spark,
       graft.sources.Bucketed.scopedName(spark, "graft_jsonl_stream")) + "/documents"
     graft.GraftSession.deleteRecursively(new java.io.File(path))
     eachBatch(harnessDocStream(spark, sfDir), "json_sink")(

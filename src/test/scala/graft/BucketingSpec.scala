@@ -8,6 +8,15 @@ package graft
   */
 class BucketingSpec extends SparkSpec {
 
+  test("run-scoped tables live under one per-application root deleted at shutdown") {
+    import graft.sources.Bucketed
+    val path = Bucketed.scopedPath(spark, "gb_spec_scoped")
+    val root = Bucketed.tablesRoot(spark)
+    assert(path === s"$root/gb_spec_scoped")
+    assert(root.startsWith(System.getProperty("java.io.tmpdir") + "/graft-tables_"))
+    assert(!GraftSession.cleanupAtShutdown(root), "scopedPath registered its root")
+  }
+
   test("bucketed tables join with no Exchange; results match the plain join") {
     import spark.implicits._
     val conf = spark.conf

@@ -5,10 +5,11 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards for the single homes of two mechanisms:
+/** Source guards for the single homes of three mechanisms:
   * `StreamingOps.drain` is the only main code that starts and waits on
-  * a stream, and `SparkSpec.tempDir` is the only way a spec makes a
-  * temp dir (so every one lands under the root deleted at shutdown).
+  * a stream, `SparkSpec.tempDir` is the only way a spec makes a temp dir
+  * (so every one lands under the root deleted at shutdown), and the
+  * bench's `Census` is the only listener, drained through one bridge.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -49,5 +50,36 @@ class SourceGuardSpec extends AnyFunSuite {
       .filter(f => Files.readString(f.toPath).contains(needle))
       .map(_.getName)
     assert(makers === Seq("SparkSpec.scala"))
+  }
+
+  test("under src/main/scala only the census, Bench and the bus bridge touch listeners") {
+    val home = Set("Census.scala", "Bench.scala", "CensusBus.scala")
+    val marks = Seq("addSparkListener", "extends SparkListener", "listenerBus")
+    val strays = for {
+      f <- sources("src/main/scala")
+      text = Files.readString(f.toPath)
+      m <- marks if text.contains(m) && !home(f.getName)
+    } yield s"$m in ${f.getName}"
+    assert(strays.isEmpty)
+    val all = sources("src/main/scala").map(f => Files.readString(f.toPath)).mkString
+    assert(marks.forall(all.contains), "the census still uses all three")
+  }
+
+  test("no Thread.sleep under src/main/scala") {
+    val sleepers = sources("src/main/scala")
+      .filter(f => Files.readString(f.toPath).contains("Thread.sleep"))
+      .map(_.getName)
+    assert(sleepers.isEmpty)
+  }
+
+  test("the diagnostic mains and their knobs are gone from src") {
+    val gone = Seq("SPARK_GRAFT_PLANDUMP_STAGES", "SPARK_GRAFT_PROFILE_REPS",
+      "SPARK_GRAFT_BENCH_TRACE", "PlanDump", "StreamProfile")
+    val found = for {
+      f <- sources("src") // this file names them, so it is skipped
+      text = Files.readString(f.toPath)
+      g <- gone if text.contains(g) && f.getName != "SourceGuardSpec.scala"
+    } yield s"$g in ${f.getName}"
+    assert(found.isEmpty)
   }
 }
