@@ -43,7 +43,7 @@ object Bench {
     val only = args.headOption.map(SparkEntry.selectQueries).filter(_.nonEmpty)
     val planDir = args.lift(1)
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    val spark = GraftSession.build("graft-bench", corpusDir = Some(sfDir))
+    val spark = GraftSession.build("graft-bench")
     val sc = spark.sparkContext
     val census = new Census
     sc.addSparkListener(census)
@@ -116,7 +116,10 @@ object Bench {
     // requested default.
     val bimodalJson = bimodal.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"total_sec":$total,"reps":$reps,"reps_bimodal":$repsBimodal,"bimodal":$bimodalJson,"warmup":"$warmDir","sf":"$sfDir","stream_state_partitions":${spark.conf.get("spark.graft.streamStatePartitions")},"state_store_provider":"${spark.conf.get("spark.sql.streaming.stateStore.providerClass").split('.').last}"}"""
+    // the state settings every stream twin over sfDir runs with
+    val Seq((_, statePartitions), (_, stateProvider)) =
+      graft.streaming.StreamingOps.stateConfFor(spark, sfDir)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"total_sec":$total,"reps":$reps,"reps_bimodal":$repsBimodal,"bimodal":$bimodalJson,"warmup":"$warmDir","sf":"$sfDir","stream_state_partitions":$statePartitions,"state_store_provider":"${stateProvider.split('.').last}"}"""
     println(line)
     // the full record also goes to a file: a reader that keeps only the
     // tail of a long line loses the head of the per-query map. The layer

@@ -7,7 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: query-name filter (local iteration)
     val only = args.lift(2).map(SparkEntry.selectQueries)
-    val spark = GraftSession.build("graft-verify", corpusDir = Some(sfDir))
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

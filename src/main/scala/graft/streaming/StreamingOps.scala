@@ -200,13 +200,12 @@ object StreamingOps {
     * concurrently-started streaming twins.
     */
   private def heartbeatDir(spark: SparkSession, fileSchema: StructType): String = {
-    // rooted under java.io.tmpdir (the Bucketed.scopedPath pattern), not
-    // a cwd-relative path: a run launched from another working directory
+    // rooted at the streaming scratch root (an absolute path, not a
+    // cwd-relative one): a run launched from another working directory
     // — or one whose default FS is distributed — must still create and
-    // read the side source at the same resolved location (ADVICE r10)
-    // under the streaming scratch root (round 18): the heartbeat is
-    // re-listed and re-read by every flushed twin's side source, and the
-    // application's shutdown hook reclaims the whole root
+    // read the side source at the same resolved location. The heartbeat
+    // is re-listed and re-read by every flushed twin's side source, and
+    // the application's shutdown hook reclaims the whole root
     val dir = s"${scratchRoot(spark)}/heartbeat/" +
       java.lang.Integer.toHexString(fileSchema.json.hashCode)
     heartbeatWritten.synchronized {
@@ -308,72 +307,133 @@ object StreamingOps {
         StructField("label", IntegerType))))
       .parquet(s"$sfDir/{embeddings.parquet}")
 
-  /** State-partition count for the harness streaming queries. A
-    * stateful operator's shuffle-partition count is FROZEN into its
-    * state layout at query start, and every state partition carries its
-    * own store instances (a stream-stream join holds FOUR per
-    * partition), each committing a snapshot file per micro-batch — at
-    * the harness's key cardinality (thousands of keys), 32 partitions
-    * are pure per-batch commit overhead: measured 13-18 s for the
-    * interval join at 32 vs ~4-6 s at 4-8, identical results; the r13
-    * A/B put 4 another ~10-15% ahead of 8 on the five slowest twins,
-    * still identical results (the full oracle gate re-verifies). This is
-    * the knob a production deployment sizes UP with state volume (state
-    * must fit per partition, and parallelism caps at this count) — the
-    * number is per-workload, NOT per-cluster-core like batch shuffle
-    * partitions. Overridable via `spark.graft.streamStatePartitions`
-    * on the calling session (default 4) so a deployment sizes it to its
-    * state volume without recompiling; GraftSession.build forwards the
-    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` env var into this conf so the
-    * scale protocol sizes it per run — the r13 100x record ran the
-    * interval joins 4-wide on a 32-core box and charged the 3.0x
-    * throttle to the relation (VERDICT r13 #1); the scale rule is in
-    * BASELINE.md's protocol note.
-    */
-  private def stateShufflePartitions(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.streamStatePartitions",
-      defaultStatePartitions.toString).toInt
-  private[graft] val defaultStatePartitions = 4
-
-  /** Scale-protocol sizing rule for `spark.graft.streamStatePartitions`
-    * (VERDICT r13 #1/#8). The count scales with STATE VOLUME, not
-    * cores: per-batch store-commit overhead grows with partition count,
-    * so small state wants few partitions (solo reps-3 A/B at sf0.1: the
-    * 43-twin family runs ~8% faster 4-wide than 8-wide, identical
-    * results), while a scale record must not run throttled — the r13
-    * 100x record ran the interval joins 4-wide on a 32-core box and
-    * measured 3.0x slower than 32-wide on the biggest line item. Rule:
-    * one state partition per 4 MB of stateful-input bytes (the events
-    * table on disk is the proxy — join/window state is a bounded slice
-    * of it), floored at 4, capped at the session's cores. GraftSession.build
-    * derives the bytes from the corpus when `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
-    * does not override, so a future scale run cannot silently inherit
-    * the 1x floor; StatePartitionSizingSpec pins the rule's shape.
+  /** State-partition count for a stream over `statefulInputBytes` of
+    * input. A stateful operator's shuffle-partition count is FROZEN into
+    * its state layout at query start, and every state partition carries
+    * its own store instances (a stream-stream join holds FOUR per
+    * partition), each committing a snapshot file per micro-batch. So
+    * the count scales with STATE VOLUME, not cores: at the harness's key
+    * cardinality (thousands of keys), 32 partitions are pure per-batch
+    * commit overhead — measured 13-18 s for the interval join at 32 vs
+    * ~4-6 s at 4-8, and the 43-twin family ~8% faster 4-wide than
+    * 8-wide at sf0.1, identical results — while a scale record must not
+    * run throttled: a 100x record that ran the interval joins 4-wide on
+    * a 32-core box measured 3.0x slower than 32-wide on the biggest line
+    * item. Rule: one state partition per 4 MB of stateful-input bytes
+    * (the events table on disk is the proxy — join/window state is a
+    * bounded slice of it), floored at 4, capped at the session's cores.
+    * StatePartitionSizingSpec pins the rule's shape; BASELINE.md's
+    * protocol note cites it.
     *
-    * Scope (VERDICT r14 #5): this is a PARALLELISM rule — it sizes how
-    * wide state work spreads and what the per-batch store-commit
-    * overhead is. It is NOT the memory-fit rule: the default
-    * HDFS-backed provider keeps each partition's state on executor
-    * HEAP, so once per-partition state (stateful volume / cores, after
-    * the cap binds) approaches executor heap, the lever is the
-    * disk-backed RocksDB state-store provider
-    * (`SPARK_GRAFT_STATESTORE=rocksdb`, read by GraftSession.build; stock Spark),
-    * not more partitions. The 100x A/B of both providers is recorded in
-    * BASELINE.md.
+    * Scope: this is a PARALLELISM rule — it sizes how wide state work
+    * spreads and what the per-batch store-commit overhead is. It is NOT
+    * the memory-fit rule: that is the provider choice
+    * ([[autoStateStoreProvider]]), not more partitions. The 100x A/B of
+    * both providers is recorded in BASELINE.md.
     */
   def sizeStatePartitions(statefulInputBytes: Long, cores: Int): Int = {
     val volumeBound = (statefulInputBytes / (4L << 20)).toInt
     math.max(4, math.min(math.max(cores, 4), volumeBound.max(1)))
   }
 
-  private[graft] def runToBatch(spark: SparkSession, build: SparkSession => DataFrame,
+  val onHeapProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+  val rocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Measured streaming-state bytes per stateful-input byte (the
+    * crossover record, bench/statestore_crossover_r16.json): the
+    * heaviest stateful twins (the 100x interval joins) held 901.6 MB of
+    * loaded store (`stateOperators.memoryUsedBytes`) against a 216 MB
+    * events table on disk — ~4.2x, because parquet is compressed and
+    * the join keeps BOTH sides' rows in the interval window.
+    * Deliberately the worst case in the suite: forecasting every
+    * stateful query at the join's ratio only ever flips to RocksDB
+    * early, never OOMs late.
+    */
+  val stateBytesPerStatefulInputByte: Double = 4.2
+
+  /** Provider choice encoding the measured crossover
+    * (bench/statestore_crossover_r16.json): the default
+    * HDFSBackedStateStoreProvider keeps each partition's loaded store
+    * ON-HEAP and retains ~2 versions during maintenance — measured flat
+    * down to ~2.4x heap:state headroom (1024m leg = the 2048m time) and
+    * an executor OOM-cascade DNF at ~1.2x (512m leg). RocksDB keeps
+    * state in native memory + local disk: heap-INSENSITIVE (689/707 s
+    * across a 2x heap change) but ~2.8x slower when heap is ample. So:
+    * RocksDB iff forecast per-executor state exceeds HALF the executor
+    * heap, else on-heap. Replayed on the measured topology (216 MB
+    * events, 2 executors): 512m -> RocksDB (completes, 707 s, where
+    * on-heap cannot run), 1024m/2048m -> on-heap (245 s, 2.8x faster
+    * than RocksDB there) — the rule picks the fastest COMPLETING
+    * provider at every measured point. StateStoreAutoProviderSpec pins
+    * it.
+    */
+  def autoStateStoreProvider(statefulInputBytes: Long,
+                             executorHeapBytes: Long,
+                             numExecutors: Int): String = {
+    val perExecutorState =
+      statefulInputBytes * stateBytesPerStatefulInputByte /
+        math.max(1, numExecutors)
+    if (perExecutorState > executorHeapBytes / 2.0) rocksDbProvider
+    else onHeapProvider
+  }
+
+  /** The executor heap (bytes) a master string implies: parsed from
+    * `local-cluster[n,c,mem]` (what `GraftSession.executorMemoryFor`
+    * forwards to spark.executor.memory), else — local[*] masters, where
+    * state lives in this one JVM — the running JVM's own -Xmx.
+    */
+  def executorHeapBytesFor(master: String): Long =
+    graft.GraftSession.executorMemoryFor(master)
+      .map(m => m.stripSuffix("m").toLong << 20)
+      .getOrElse(Runtime.getRuntime.maxMemory)
+
+  /** Executor count a master string implies (1 for local[*]). */
+  def numExecutorsFor(master: String): Int =
+    """^local-cluster\[\s*(\d+)\s*,""".r
+      .findFirstMatchIn(master).map(_.group(1).toInt).getOrElse(1)
+
+  /** Bytes of `sfDir`'s events table (a single file or a directory,
+    * nested partitions included; 0 when absent), read through the
+    * session's Hadoop filesystem so a distributed corpus sizes too: the
+    * stateful-volume proxy both state rules size from, for every twin.
+    */
+  def eventsBytes(spark: SparkSession, sfDir: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/events.parquet")
+    try path.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(path).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
+  }
+
+  /** The state settings of a stream whose corpus holds `eventsBytes` of
+    * events, as a pure function: its state-partition count
+    * ([[sizeStatePartitions]], capped at `cores`) and its state-store
+    * provider ([[autoStateStoreProvider]] on the executors `master`
+    * implies), in that order.
+    */
+  def stateConf(eventsBytes: Long, master: String, cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> sizeStatePartitions(eventsBytes, cores).toString,
+    "spark.sql.streaming.stateStore.providerClass" -> autoStateStoreProvider(eventsBytes,
+      executorHeapBytesFor(master), numExecutorsFor(master)))
+
+  /** [[stateConf]] for a stream over `sfDir` run from `spark`: its
+    * events bytes, its master and its session width as the cores. */
+  private[graft] def stateConfFor(spark: SparkSession, sfDir: String): Seq[(String, String)] =
+    stateConf(eventsBytes(spark, sfDir), spark.sparkContext.master,
+      graft.Rebalance.sessionWidth(spark))
+
+  private[graft] def runToBatch(spark: SparkSession, sfDir: String,
+                                build: SparkSession => DataFrame,
                                 prefix: String, mode: OutputMode): DataFrame = {
-    // state-partition sizing is scoped to a CLONED session — same
-    // SparkContext and shared state, separate SQL conf and catalog —
-    // so the surrounding session's parallelism is NEVER touched, not
-    // even during query start (the old set/restore pattern left a
-    // window where a concurrent batch query inherited the reduced
-    // width; ConcurrencySpec pins the isolation). The stream must be
+    // the stream's state settings (stateConf, sized from sfDir's own
+    // events) are scoped to a CLONED session — same SparkContext and
+    // shared state, separate SQL conf and catalog — so the surrounding
+    // session's parallelism is NEVER touched, not even during query
+    // start (a set/restore pattern leaves a window where a concurrent
+    // batch query inherits the reduced width; ConcurrencySpec pins the
+    // isolation), and a session serving several corpora sizes each
+    // stream for the corpus it reads. The stream must be
     // BUILT against the clone: a streaming query freezes the state
     // layout from its DataFrame's own session conf at start, and the
     // memory sink registers in that session's catalog, hence the
@@ -395,8 +455,7 @@ object StreamingOps {
     // shape the class doc promises ("only the sink line changes").
     val name = freshName(prefix)
     val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      stateShufflePartitions(spark).toString)
+    stateConfFor(spark, sfDir).foreach { case (k, v) => scoped.conf.set(k, v) }
     val df = build(scoped)
     if (mode == OutputMode.Complete()) runToMemory(df, name, mode)
     else {
@@ -438,11 +497,11 @@ object StreamingOps {
 
   /** Per-application scratch root for the file-sink twins, deleted by a
     * JVM shutdown hook — without it, every run/JVM leaks its sink +
-    * checkpoint directories under java.io.tmpdir (millions of pair rows
-    * per run at 100x), eventually exhausting /tmp on a long-lived bench
-    * machine (ADVICE r14). Registered once per ROOT, not once per JVM
-    * (ADVICE r15): a JVM that runs several SparkContexts in sequence
-    * (sbt test JVMs, back-to-back harness runs) gets one hook per
+    * checkpoint directories (millions of pair rows per run at 100x),
+    * eventually exhausting the scratch disk of a long-lived bench
+    * machine. Registered once per ROOT, not once per JVM: a JVM that
+    * runs several SparkContexts in sequence (sbt test JVMs,
+    * back-to-back harness runs) gets one hook per
     * application root, so every application's scratch is reclaimed —
     * each hook deletes only its own application's directory, never a
     * concurrent run's. The mechanism lives in
@@ -450,13 +509,13 @@ object StreamingOps {
     * default checkpoint dir.
     */
   private def scratchRoot(spark: SparkSession): String = {
-    // rooted at GraftSession.scratchBase (round 18): RAM-backed scratch
-    // when the node has one — the checkpoint/sink metadata commits
-    // (offset WAL, commit log, state deltas, sink logs) are the
-    // dominant fixed cost of a short AvailableNow query on a disk-backed
-    // tmpdir, and these dirs are deleted at JVM exit by construction.
-    // Production overrides via spark.graft.scratchDir (see scratchBase).
-    val root = s"${graft.GraftSession.scratchBase(spark)}/graft-stream-sink/" +
+    // rooted at GraftSession.scratchBase: RAM-backed scratch when the
+    // node has one — the checkpoint/sink metadata commits (offset WAL,
+    // commit log, state deltas, sink logs) are the dominant fixed cost
+    // of a short AvailableNow query on a disk-backed tmpdir, and these
+    // dirs are deleted at JVM exit by construction. Production points
+    // SPARK_GRAFT_SCRATCH_DIR at durable storage (see scratchBase).
+    val root = s"${graft.GraftSession.scratchBase}/graft-stream-sink/" +
       spark.sparkContext.applicationId
     graft.GraftSession.cleanupAtShutdown(root)
     root
@@ -466,15 +525,15 @@ object StreamingOps {
     * with epoch-second window starts for the oracle.
     */
   def streamTumbling(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark, s => windowedEventCounts(harnessEventStream(s, sfDir)),
+    runToBatch(spark, sfDir, s => windowedEventCounts(harnessEventStream(s, sfDir)),
         "stream_tumbling", OutputMode.Complete())
       .select(unix_timestamp(col("win_start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy("win_start", "event_type")
 
   /** Append-mode streaming tumbling windows — the STATE-BOUNDED
-    * production path (VERDICT r3 #3's missing twin): unlike the
-    * Complete-mode harness queries, the watermark here actually evicts —
+    * production path: unlike the Complete-mode harness queries, the
+    * watermark here actually evicts —
     * a window is emitted exactly once, when the watermark passes its
     * end, and its state is dropped; windows still open when input ends
     * stay in state and are never emitted. At 100 TB/day this is the
@@ -484,7 +543,7 @@ object StreamingOps {
     * watermark (max event time - 2h) flushes every window it passed.
     */
   def streamTumblingAppend(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark, s => windowedEventCounts(harnessEventStream(s, sfDir)),
+    runToBatch(spark, sfDir, s => windowedEventCounts(harnessEventStream(s, sfDir)),
         "stream_tumbling_append", OutputMode.Append())
       .select(unix_timestamp(col("win_start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
@@ -496,7 +555,7 @@ object StreamingOps {
     * spelled-out form). Complete-mode harness twin like streamTumbling.
     */
   def streamSliding(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessEventStream(s, sfDir)
           .withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
@@ -514,7 +573,7 @@ object StreamingOps {
     * with its start (micros).
     */
   def streamSessions(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark, s => sessionizedEvents(harnessEventStream(s, sfDir)),
+    runToBatch(spark, sfDir, s => sessionizedEvents(harnessEventStream(s, sfDir)),
         "stream_sessions", OutputMode.Complete())
       .select(col("user_id"), unix_micros(col("sess_start")).as("sess_start_us"),
         col("n_events"))
@@ -528,7 +587,7 @@ object StreamingOps {
     * watermark delay per user, not by stream length.
     */
   def streamSessionsAppend(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark, s => sessionizedEvents(harnessEventStream(s, sfDir)),
+    runToBatch(spark, sfDir, s => sessionizedEvents(harnessEventStream(s, sfDir)),
         "stream_sessions_append", OutputMode.Append())
       .select(col("user_id"), unix_micros(col("sess_start")).as("sess_start_us"),
         col("n_events"))
@@ -538,7 +597,7 @@ object StreamingOps {
     * tokenizer + empty-token filter, identical semantics).
     */
   def streamTokenCounts(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStream(s, sfDir)
           .select(explode(filter(split(col("text"), " "), t => length(t) > 0)).as("token"))
           .groupBy("token")
@@ -554,7 +613,7 @@ object StreamingOps {
     * n_urls/n_tracked is the signal an ingest monitor alerts on.
     */
   def streamCanonicalHosts(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.UrlCount.canonicalUrls(harnessDocStream(s, sfDir))
           .groupBy("host")
           .agg(count(lit(1)).as("n_urls"), sum(col("tracked")).as("n_tracked")),
@@ -570,7 +629,7 @@ object StreamingOps {
     * the oracle twin; `streamExactDedupBounded` is the production path.
     */
   def streamExactDedup(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStream(s, sfDir)
           .select(md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
             .as("content_key"))
@@ -590,7 +649,7 @@ object StreamingOps {
     docs.withColumn("ingest_ts", timestamp_seconds(col("doc_id") + lit(86400L)))
 
   /** Watermark-BOUNDED ingest dedup — the production form of
-    * `streamExactDedup` (VERDICT r4 missing #1): state for a content key
+    * `streamExactDedup`: state for a content key
     * lives only until the watermark (max ingest time - `delay`) passes
     * it, so on an infinite stream the state store holds one retention
     * window of keys, not the stream's whole history. The trade is
@@ -603,7 +662,7 @@ object StreamingOps {
     */
   def streamExactDedupBounded(spark: SparkSession, sfDir: String,
                               delay: String = "2 hours"): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => withIngestTs(harnessDocStream(s, sfDir))
           .select(md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
             .as("content_key"), col("ingest_ts"))
@@ -614,7 +673,7 @@ object StreamingOps {
       .orderBy("content_key")
 
   /** Streaming FUZZY dedup at ingest — the minhash twin of
-    * streamExactDedup (VERDICT r3 missing #5): each arriving doc gets a
+    * streamExactDedup: each arriving doc gets a
     * per-row md5-family minhash sketch (k=16 over 3-word shingles —
     * IDENTICAL math to the batch minHashLsh sketch, DedupSpec pins the
     * family), and docs whose whole sketch matches an earlier arrival are
@@ -631,7 +690,7 @@ object StreamingOps {
     */
   def streamMinhashDedup(spark: SparkSession, sfDir: String, k: Int = 16): DataFrame = {
     val sketch = graft.functions.ShingleColumns.minhashArray(col("shingles"), k)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStreamWide(spark, s, sfDir)
           .select(graft.functions.ShingleColumns.wordShingles(col("text"), 3).as("shingles"))
           .filter(size(col("shingles")) > 0) // shingle-less docs have no sketch
@@ -652,7 +711,7 @@ object StreamingOps {
   def streamMinhashDedupBounded(spark: SparkSession, sfDir: String, k: Int = 16,
                                 delay: String = "2 hours"): DataFrame = {
     val sketch = graft.functions.ShingleColumns.minhashArray(col("shingles"), k)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => withIngestTs(harnessDocStreamWide(spark, s, sfDir))
           .select(col("ingest_ts"),
             graft.functions.ShingleColumns.wordShingles(col("text"), 3).as("shingles"))
@@ -679,7 +738,7 @@ object StreamingOps {
     */
   def streamDecontaminate(spark: SparkSession, sfDir: String,
                           evalMod: Int = 97, minOverlap: Int = 3): DataFrame = {
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => {
           // static side built on the SAME scoped session as the stream
           // (one plan must not mix sessions)
@@ -729,12 +788,12 @@ object StreamingOps {
                              minEst: Double = 0.5): DataFrame = {
     val r = k / bands
     val sk = graft.functions.ShingleColumns.minhashArray(col("shingles"), k)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => {
           // the "yesterday" index is the SAME persisted table the batch
           // probe (dedup_incremental) reads — served once per run from
-          // the store (VERDICT r14 #4; the external catalog is shared
-          // state, so the scoped session sees the table): production
+          // the store (the external catalog is shared state, so the
+          // scoped session sees the table): production
           // reads the table the batch job owns, and so does this twin
           val idxName =
             graft.ops.Dedup.minHashIndexTable(s, sfDir, mod, 3, k, bands)
@@ -783,7 +842,7 @@ object StreamingOps {
     * p_ts - 1h <= v_ts <= p_ts.
     */
   def streamViewPurchaseJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => joinSides(s, sfDir) match { case (purchases, views) =>
           purchases.join(views, expr(
             "user_id = v_user AND v_ts <= p_ts AND v_ts >= p_ts - INTERVAL 1 HOUR"))
@@ -801,7 +860,7 @@ object StreamingOps {
     * definition. Returns (purchases, views).
     */
   private def joinSides(s: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    // ONE file-stream source referenced by both sides (round 18): the
+    // ONE file-stream source referenced by both sides: the
     // previous two-call form registered two independent
     // FileStreamSources for the same file — two offset-log entries, two
     // per-trigger directory listings and two parquet scans per
@@ -843,7 +902,7 @@ object StreamingOps {
     */
   def streamExactDedupCustom(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStream(s, sfDir)
           .select(md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
             .as("content_key"))
@@ -875,8 +934,7 @@ object StreamingOps {
     * (ripe, pending). Event times are micros, the watermark is Spark's
     * millisecond clock, so ripeness compares floor(tus/1000) <= wm.
     *
-    * Boundary contract (ADVICE r10, CORRECTED r12 with measured
-    * evidence — WatermarkBoundarySpec): Spark's flatMapGroupsWithState
+    * Boundary contract (measured — WatermarkBoundarySpec): Spark's flatMapGroupsWithState
     * late filter drops rows with event time <= the current watermark
     * BEFORE the state function runs (verified on Spark 4.1: an arrival
     * at exactly the watermark never reaches the function; one
@@ -906,7 +964,7 @@ object StreamingOps {
     * Because ripe events fold in global event-time order regardless of
     * arrival order or micro-batch split, the folded state is exactly
     * the batch operator's running-min column vector — the in-order
-    * replay assumption the pre-r10 form carried is gone, and no state
+    * replay assumption an earlier form carried is gone, and no state
     * function materializes its per-batch group slice (arrivals stream
     * into the buffer; only the ripe slice — bounded by the watermark
     * window — is ever sorted).
@@ -926,7 +984,7 @@ object StreamingOps {
     */
   def streamFunnel(spark: SparkSession, sfDir: String,
                    steps: Seq[String] = Seq("view", "click", "purchase")): DataFrame = {
-    val perUser = runToBatch(spark,
+    val perUser = runToBatch(spark, sfDir,
       s => funnelDepths(harnessEventStreamFlushed(s, sfDir), steps),
       "stream_funnel", OutputMode.Update())
     // final depth per user (last emission wins = max: depth only grows),
@@ -1015,7 +1073,7 @@ object StreamingOps {
     * so the run lands on ev_asof_attribution's whole-corpus oracle.
     */
   def streamAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => attributionRows(harnessEventStreamFlushed(s, sfDir)),
         "stream_attribution", OutputMode.Append())
       .orderBy("purchase_event_id")
@@ -1083,7 +1141,7 @@ object StreamingOps {
     * disorder-tolerance/state-size knob.
     */
   def streamTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    val emitted = runToBatch(spark,
+    val emitted = runToBatch(spark, sfDir,
       s => transitionPairs(harnessEventStreamFlushed(s, sfDir)),
       "stream_transitions", OutputMode.Update())
     emitted.groupBy("prev_type", "next_type")
@@ -1138,7 +1196,7 @@ object StreamingOps {
     * source) is stateful, and it is bounded by source count.
     */
   def streamMixSample(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStream(s, sfDir)
           .select(col("source"), graft.ops.Corpus.mixRate.as("rate_milli"),
             (graft.ops.Corpus.mixToss < graft.ops.Corpus.mixRate).as("keep"))
@@ -1158,7 +1216,7 @@ object StreamingOps {
     * before anything persists the raw text).
     */
   def streamScrub(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.scrubFrame(harnessDocStream(s, sfDir)),
         "stream_scrub", OutputMode.Append())
       .orderBy("doc_id")
@@ -1171,7 +1229,7 @@ object StreamingOps {
     * which is exactly why the operator needs a streaming form at all.
     */
   def streamPii(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.piiFrame(
           graft.ops.TextAnalysis.piiInjected(harnessDocStream(s, sfDir))),
         "stream_pii", OutputMode.Append())
@@ -1186,7 +1244,7 @@ object StreamingOps {
     * the in-row form are row-for-row equal (MultimodalSpec pins it).
     */
   def streamScenes(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.Multimodal.sceneFrame(
           graft.ops.Multimodal.mediaFrame(harnessDocStream(s, sfDir))),
         "stream_scenes", OutputMode.Append())
@@ -1196,7 +1254,7 @@ object StreamingOps {
     * twin of text_classifier; same zero-state per-row fold.
     */
   def streamClassifier(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.classifierFrame(harnessDocStream(s, sfDir)),
         "stream_classifier", OutputMode.Append())
       .orderBy("doc_id")
@@ -1223,7 +1281,7 @@ object StreamingOps {
   def streamSeasonal(spark: SparkSession, sfDir: String): DataFrame = {
     val base = graft.ops.EventWindows.seasonalBaseline(spark, sfDir)
       .collect().toSeq
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => {
           import s.implicits._
           val baseDf = base.map(r =>
@@ -1246,7 +1304,7 @@ object StreamingOps {
     * oracle.
     */
   def streamManifest(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => manifestFrame(harnessDocStream(s, sfDir)),
         "stream_manifest", OutputMode.Complete())
       .orderBy("source")
@@ -1280,7 +1338,7 @@ object StreamingOps {
   def streamRfm(spark: SparkSession, sfDir: String, churnDays: Int = 90): DataFrame = {
     val maxDay = graft.GraftSession.table(spark, sfDir, "events")
       .agg(max(expr("(ts div 1000000000) div 86400"))).head().getLong(0)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => rfmStateFrame(harnessEventStream(s, sfDir)),
         "stream_rfm", OutputMode.Complete())
       .select(col("user_id"),
@@ -1309,7 +1367,7 @@ object StreamingOps {
   def streamDsir(spark: SparkSession, sfDir: String): DataFrame = {
     val ratio = graft.ops.Corpus.dsirRatioTable(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.Corpus.dsirScoreFrame(harnessDocStream(s, sfDir), ratio),
         "stream_dsir", OutputMode.Append())
       .orderBy("doc_id")
@@ -1329,7 +1387,7 @@ object StreamingOps {
     */
   def streamSemanticDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val eval = graft.ops.Similarity.evalVectors(spark, sfDir)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.Similarity.semanticDeconFrame(
           harnessEmbStream(s, sfDir).filter(col("vec_id") % 97 =!= 0),
           eval, 400L),
@@ -1351,7 +1409,7 @@ object StreamingOps {
     */
   def streamDistill(spark: SparkSession, sfDir: String): DataFrame = {
     val coeffs = graft.ops.Corpus.distillCoeffStrings(spark, sfDir)
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.Corpus.distillScoreFrame(harnessDocStream(s, sfDir), coeffs),
         "stream_distill", OutputMode.Append())
       .orderBy("doc_id")
@@ -1372,7 +1430,7 @@ object StreamingOps {
   def streamBm25(spark: SparkSession, sfDir: String): DataFrame = {
     val (qdim, tot, nDocs) = graft.ops.TextAnalysis.bm25Artifacts(
       spark, sfDir, graft.ops.TextAnalysis.defaultBm25Workload(spark, sfDir))
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.bm25PercolateFrame(
           harnessDocStream(s, sfDir), qdim, tot, nDocs),
         "stream_bm25", OutputMode.Append())
@@ -1398,12 +1456,12 @@ object StreamingOps {
   def streamSubstringProbe(spark: SparkSession, sfDir: String,
                            n: Int = 8, mod: Int = 4,
                            nBuckets: Int = 8): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => {
           val name =
             graft.sources.Bucketed.scopedName(s, "graft_window_store_stream")
           // the history window-count frame is the store-served artifact
-          // shared with dedup_substring_refresh (VERDICT r14 #4); only
+          // shared with dedup_substring_refresh; only
           // the cheap bucket write below is per-invocation
           val hist = graft.ops.Dedup.histWindowCounts(s, sfDir, n, mod)
           graft.sources.Bucketed.writeBucketed(s, hist, name,
@@ -1502,7 +1560,7 @@ object StreamingOps {
     * streamExactDedupBounded watermark discipline.
     */
   def streamBestRep(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.Dedup.bestRepFrame(harnessDocStream(s, sfDir)),
         "stream_best_rep", OutputMode.Complete())
       .orderBy("keep_doc_id")
@@ -1528,7 +1586,7 @@ object StreamingOps {
     def toks(df: DataFrame): DataFrame =
       df.select(col("source"),
         explode(filter(split(col("text"), " "), t => length(t) > 0)).as("token"))
-    val streamed = runToBatch(spark,
+    val streamed = runToBatch(spark, sfDir,
         s => toks(harnessDocStream(s, sfDir))
           .groupBy("source")
           .agg(count(lit(1)).as("n_tokens"),
@@ -1567,7 +1625,7 @@ object StreamingOps {
     * Output: (win_start, user_id, n, rk), rk = 1..k, ordered.
     */
   def streamHotUsers(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
-    runToBatch(spark, s => {
+    runToBatch(spark, sfDir, s => {
         val perUser = harnessEventStream(s, sfDir)
           .withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "1 hour"), col("user_id"))
@@ -1601,7 +1659,7 @@ object StreamingOps {
     // measured 7.5 s vs the 0.84 s batch twin) and is now codegen'd
     // native replaces (see bpeEncodeFrame), so no rebalance shuffle is
     // needed; stateless append, no shuffle at all.
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.bpeEncodeFrame(harnessDocStream(s, sfDir), merges),
         "stream_bpe_encode", OutputMode.Append())
       .orderBy("doc_id")
@@ -1647,7 +1705,7 @@ object StreamingOps {
     * constructed stream).
     */
   def streamViewPurchaseJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => joinSides(s, sfDir) match { case (purchases, views) =>
           purchases.join(views, expr(
             "user_id = v_user AND v_ts <= p_ts AND v_ts >= p_ts - INTERVAL 1 HOUR"),
@@ -1667,7 +1725,7 @@ object StreamingOps {
     * live ingest dashboard reads.
     */
   def streamCascade(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => graft.ops.TextAnalysis.cascadeFrame(harnessDocStreamWide(spark, s, sfDir))
           .groupBy("source", "verdict")
           .agg(count(lit(1)).as("n_docs")),
@@ -1701,7 +1759,7 @@ object StreamingOps {
     */
   def streamSourceCap(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
     import spark.implicits._
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => harnessDocStream(s, sfDir)
           .select(col("source"), col("doc_id"))
           .as[CapArrival]
@@ -1739,7 +1797,7 @@ object StreamingOps {
     */
   def streamImageAHash(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
       s => {
         import s.implicits._
         harnessDocStream(s, sfDir)
@@ -1781,7 +1839,7 @@ object StreamingOps {
   def streamWeightedSample(spark: SparkSession, sfDir: String,
                            k: Int = 8): DataFrame = {
     import spark.implicits._
-    val emitted = runToBatch(spark,
+    val emitted = runToBatch(spark, sfDir,
       s => harnessDocStream(s, sfDir)
         .select(col("source"), col("doc_id"),
           greatest(col("n_chars"), lit(1L)).as("w"),
@@ -1823,7 +1881,7 @@ object StreamingOps {
     * state per user is the row with the highest event count (monotone).
     */
   def streamRunningTotals(spark: SparkSession, sfDir: String): DataFrame =
-    runToBatch(spark,
+    runToBatch(spark, sfDir,
         s => runningUserTotals(s, harnessEventStream(s, sfDir)),
         "stream_running", OutputMode.Update())
       .groupBy("user_id")

@@ -76,7 +76,7 @@ class CensusSpec extends SparkSpec {
     Files.writeString(Paths.get(dir, "a.txt"), "x y z\nx y\n")
     Files.writeString(Paths.get(dir, "b.txt"), "y z\nz\n")
     val m = withCensus { census =>
-      census.run(spark.sparkContext, "stream", 0)(StreamingOps.runToBatch(spark,
+      census.run(spark.sparkContext, "stream", 0)(StreamingOps.runToBatch(spark, dir,
         s => StreamingOps.tokenCountStream(s, dir), "census", OutputMode.Complete()))
     }
     assert(m.result.isRight)

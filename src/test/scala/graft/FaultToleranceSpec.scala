@@ -122,7 +122,7 @@ class FaultToleranceSpec extends SparkSpec
     // query manager; keep each one to check that nothing is left running
     val sessions = mutable.Buffer(spark)
     def viaBatch(mode: OutputMode)(frame: DataFrame => DataFrame): Unit = {
-      StreamingOps.runToBatch(spark, s => { sessions += s; frame(stale(s)) }, "stale", mode)
+      StreamingOps.runToBatch(spark, dir, s => { sessions += s; frame(stale(s)) }, "stale", mode)
       ()
     }
     val sinks = Seq[(String, () => Unit)](

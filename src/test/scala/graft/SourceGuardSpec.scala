@@ -5,11 +5,13 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards for the single homes of three mechanisms:
+/** Source guards for the single homes of four mechanisms:
   * `StreamingOps.drain` is the only main code that starts and waits on
   * a stream, `SparkSpec.tempDir` is the only way a spec makes a temp dir
-  * (so every one lands under the root deleted at shutdown), and the
-  * bench's `Census` is the only listener, drained through one bridge.
+  * (so every one lands under the root deleted at shutdown), the
+  * bench's `Census` is the only listener, drained through one bridge,
+  * and `StreamingOps` alone sets a stream's state-store provider, per
+  * stream, with no override knob.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -81,5 +83,27 @@ class SourceGuardSpec extends AnyFunSuite {
       g <- gone if text.contains(g) && f.getName != "SourceGuardSpec.scala"
     } yield s"$g in ${f.getName}"
     assert(found.isEmpty)
+  }
+
+  test("the stream-state overrides and the build-time corpus argument are gone from src/main") {
+    val gone = Seq("SPARK_GRAFT_STATESTORE", "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+      "spark.graft.streamStatePartitions", "spark.graft.scratchDir", "corpusDir")
+    def files(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(files) else Seq(f)
+    val root = new File("src/main")
+    assert(root.isDirectory, s"run from the project root (cwd ${new File(".").getAbsolutePath})")
+    val found = for {
+      f <- files(root)
+      text = Files.readString(f.toPath)
+      g <- gone if text.contains(g)
+    } yield s"$g in ${f.getName}"
+    assert(found.isEmpty)
+  }
+
+  test("under src/main/scala only StreamingOps names the state-store provider key") {
+    val namers = sources("src/main/scala")
+      .filter(f => Files.readString(f.toPath).contains("stateStore.providerClass"))
+      .map(_.getName)
+    assert(namers === Seq("StreamingOps.scala"))
   }
 }

@@ -4,14 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
 
-/** Pins the scale-protocol sizing rule for streaming state partitions
-  * (VERDICT r13 #8). The r13 100x record silently ran the interval joins
-  * 4-wide on a 32-core box — a 3.0x measured throttle charged to the
-  * relation — because the 1x-tuned floor leaked into the scale run. The
-  * rule below is what GraftSession.build derives when `SPARK_GRAFT_STREAM_
-  * STATE_PARTITIONS` does not override: one partition per 4 MB of stateful
-  * input, floored at 4 (the 1x A/B winner), capped at cores. These cases
-  * are the contract the BASELINE.md protocol note references.
+/** Pins the scale-protocol sizing rule for streaming state partitions,
+  * the partition half of `StreamingOps.stateConf`. A 100x record once
+  * ran the interval joins 4-wide on a 32-core box — a 3.0x measured
+  * throttle charged to the relation — because the 1x-tuned floor leaked
+  * into the scale run. The rule below is what every stream derives from
+  * its own corpus: one partition per 4 MB of stateful input, floored at
+  * 4 (the 1x A/B winner), capped at cores. These cases are the contract
+  * the BASELINE.md protocol note references.
   */
 class StatePartitionSizingSpec extends AnyFunSuite {
   private val MB = 1L << 20
