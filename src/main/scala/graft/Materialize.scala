@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    files instead of restarting a multi-hour dedup run — the mode a
   *    100 TB multi-executor job runs in.
   *
-  *    Parquet, NOT `RDD.checkpoint` (VERDICT r15 #3): checkpoint files
+  *    Parquet, NOT `RDD.checkpoint`: checkpoint files
   *    are java-serialized rows written one file per partition at the
   *    frame's full width, and every consumer re-reads ALL of them
   *    task-per-partition across process boundaries — the combined-axes
@@ -81,7 +81,7 @@ object Materialize {
     }
 
   /** Proactively free a materialized frame's storage (ArtifactStore
-    * eviction, VERDICT r11 #2). A frame that went through [[apply]] plans
+    * eviction, and [[Fixpoint]]'s superseded cuts). A frame that went through [[apply]] plans
     * as `LogicalRDD` leaves over the checkpointed RDDs; walking the
     * analyzed plan finds them whether the stored value is the checkpoint
     * itself or a projection over one. For each: delete its reliable
@@ -123,7 +123,7 @@ object Materialize {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     // rootPaths come out of the FileIndex scheme-qualified and
     // normalized; qualify the configured dir the same way before
-    // comparing (ADVICE r16: a raw-substring match against an
+    // comparing (a raw-substring match against an
     // unnormalized spark.graft.checkpointDir — trailing slash, relative
     // form — never matched, silently disabling release() for
     // user-configured dirs and accumulating superseded mat-* parquet
@@ -144,9 +144,9 @@ object Materialize {
   /** Whether `df` is ALREADY a flat materialized relation — a bare
     * (possibly projected/aliased) LogicalRDD or file-relation leaf with
     * no joins/aggregates/generators above it — so a caller wanting flat
-    * lineage can skip a redundant re-checkpoint (round 17: the graph
-    * layouts re-checkpointed the store-served trade-pair frame on every
-    * call, one full extra pass per query). Conservative: anything but
+    * lineage can skip a redundant re-checkpoint (re-checkpointing the
+    * store-served trade-pair frame in the graph layouts cost one full
+    * extra pass per query). Conservative: anything but
     * trivial wrappers over a leaf returns false.
     */
   def isFlat(df: DataFrame): Boolean = {

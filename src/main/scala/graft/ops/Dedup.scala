@@ -196,7 +196,7 @@ object Dedup {
   }
 
   /** The docs frame restricted to one representative per exact-content
-    * key — the identical-content hot-bucket guard (VERDICT r4 #1) the
+    * key — the identical-content hot-bucket guard the
     * fuzzy rungs run behind: identical documents have IDENTICAL sketches,
     * so banding the raw corpus puts all m copies of a boilerplate page in
     * the same bucket in EVERY band — m(m-1)/2 candidate pairs, quadratic
@@ -231,7 +231,7 @@ object Dedup {
       .agg(min(hasher(col("i"), col("shingle"))).as("mh"))
 
   /** Family-default LSH banding split for the k=16 sketch: b=8 bands of
-    * r=2 rows (round 17, re-defaulted from b=4/r=4 on the Zipf-corpus
+    * r=2 rows (re-defaulted from b=4/r=4 on the Zipf-corpus
     * evidence). The banding threshold is ~(1/b)^(1/r) — the similarity
     * where a pair's candidate probability crosses ~1-1/e. The family's
     * working verification threshold is est >= 0.5, and b=4/r=4 puts the
@@ -246,7 +246,7 @@ object Dedup {
     * share ~0.3-0.5 Jaccard). b=8/r=2 midpoint ~0.35 matches the 0.5
     * threshold with margin; candidate volume stays banded and
     * representative-bounded on both corpora (dedup_banding_sweep prices
-    * all four splits every run; both corpora cited in BASELINE.md r17).
+    * all four splits every run; both corpora are cited in BASELINE.md).
     */
   val defaultLshBands: Int = 8
 
@@ -295,7 +295,7 @@ object Dedup {
       .agg(graft.functions.MinHashSketch.sketch(col("shingle"), k, family).as("sigs"))
       .materialized
     // band key: the r consecutive minhashes of the band, joined exact.
-    // The full k-slot sketch RIDES THROUGH the band join (round 17):
+    // The full k-slot sketch RIDES THROUGH the band join:
     // scoring then reads the two carried arrays directly, replacing the
     // two doc-keyed scoring re-joins (2 exchanges of the candidate set)
     // the old plan paid; the est filter runs BEFORE the pair distinct,
@@ -503,8 +503,7 @@ object Dedup {
   // is sketched and joined against ONLY the matching index buckets. No
   // corpus rescan, no re-sketch of old documents; per-day cost scales
   // with the batch, not the corpus. (The streaming twins cover the
-  // in-flight case; this is the reusable batch index the VERDICT r6 gap
-  // list put first.)
+  // in-flight case; this is the reusable batch index they build on.)
   // -------------------------------------------------------------------
 
   /** Banded minhash keys with a SINGLE self-describing band key
@@ -1223,6 +1222,15 @@ object Dedup {
   private val cleanCorpusStores =
     graft.ArtifactStore.frames("dedup.cleanCorpus")
 
+  /** Convergence-sum aggregate for [[connectedComponents]]: the cast
+    * sits INSIDE the sum so the ACCUMULATOR is DECIMAL(38,0) — a
+    * LongType accumulator (cast applied to the result only) wraps
+    * silently past 2^63 in non-ANSI mode, and a wrap-aliased equal sum
+    * would falsely signal convergence. Package-visible so DedupSpec can
+    * pin both the output type and the no-wrap behavior. */
+  private[graft] def labelSumCol: Column =
+    sum(col("label").cast("decimal(38,0)"))
+
   /** Connected components over an undirected pair graph via iterative
     * min-label propagation: every node starts labeled with its own id;
     * each round replaces a node's label by the min of its own and its
@@ -1234,21 +1242,19 @@ object Dedup {
     * round count is the graph diameter. Near-dup graphs are unions of
     * small dense clusters (diameter ~ a few hops), so convergence is
     * fast; `maxIters` bounds the loop defensively. The driver-side loop
-    * carries only a converged-yet flag — no data ever collects.
+    * carries only the label sum — no data ever collects.
+    *
+    * Convergence via the LABEL-SUM invariant, not a join back to the
+    * previous round: labels are non-increasing per node (the self-loop
+    * folds "own label" into the min), so the total sum strictly
+    * decreases iff ANY label changed. The sum ([[labelSumCol]]) is read
+    * by [[graft.Fixpoint]] in the job that cuts each round.
     *
     * Input: (doc_a, doc_b) pairs. Output: (doc_id, cluster_id) for every
     * node that appears in some pair, cluster_id = min id of its component.
     */
-  /** Convergence-sum aggregate for [[connectedComponents]]: the cast
-    * sits INSIDE the sum so the ACCUMULATOR is DECIMAL(38,0) — a
-    * LongType accumulator (cast applied to the result only) wraps
-    * silently past 2^63 in non-ANSI mode, and a wrap-aliased equal sum
-    * would falsely signal convergence. Package-visible so DedupSpec can
-    * pin both the output type and the no-wrap behavior. */
-  private[graft] def labelSumCol: Column =
-    sum(col("label").cast("decimal(38,0)"))
-
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+      graft.Fixpoint("connectedComponents") { loop =>
     // Partition count sized to EDGE VOLUME, not core count
     // (Rebalance.edgeWidth): a round on a small graph is pure
     // per-partition scheduling overhead at the session width. pairs is
@@ -1268,94 +1274,26 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     // SELF-LOOPS fold "keep your own label" into the neighbor-min
     // aggregation, so each round references the label table exactly ONCE
-    // (one join + one min-agg). With the old two-reference round
-    // (neighbor-min join PLUS a least() self-join), the logical plan is
-    // a DAG whose tree-rendering doubles per round — Spark stringifies
-    // plans per action (AQE explainString, listener events), and a
-    // high-diameter graph (~25+ rounds) drove that 2^k walk into a
-    // driver OOM. One reference per round keeps lineage depth linear in
-    // rounds; ConcurrencySpec's chain graph pins the regression.
-    val edges = sym
+    // (one join + one min-agg) and lineage stays linear in rounds.
+    val edges = loop.cut(sym
       .union(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
-      // hash-partitioned on the per-round join key BEFORE the checkpoint:
-      // the checkpointed relation keeps that outputPartitioning, so the
+      // hash-partitioned on the per-round join key BEFORE the cut: the
+      // checkpointed relation keeps that outputPartitioning, so the
       // (big, static) edge side is exchanged ONCE total instead of once
       // per propagation round — only the (small) label table moves
-      .repartition(parts, col("dst"))
-      .materialized // static across rounds; computed once
-    // The loop uses persist/unpersist, NOT localCheckpoint: checkpoint
-    // blocks are only freed when the ContextCleaner notices the plan got
-    // GC'd, so a per-round checkpoint leaks one materialized label table
-    // per round per execution — measured as queries getting slower the
-    // longer the JVM runs. persist + explicit unpersist of the previous
-    // round keeps resident state bounded at ~2 label tables regardless
-    // of round count. (Correctness never depends on the cache, it only
-    // avoids recompute.)
-    var labels = edges.select(col("src").as("doc_id"))
-      .distinct()
+      .repartition(parts, col("dst")))
+    val init = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
-      .persist()
-    // convergence via the LABEL-SUM invariant, not a join back to the
-    // previous round: labels are non-increasing per node (the self-loop
-    // folds "own label" into the min), so the total sum strictly
-    // decreases iff ANY label changed. One scalar aggregate over the
-    // freshly persisted table replaces a whole join+filter+count per
-    // round, and the round still references the label table exactly
-    // once (the linear-lineage requirement — see above). DECIMAL(38,0)
-    // ACCUMULATION (see labelSumCol) so 1e12 nodes x 1e12 ids cannot
-    // overflow — or wrap-alias — the sum.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(labelSumCol).head().getDecimal(0)
-    // `pinned` tracks the PERSISTED dataset handle: unpersist is
-    // non-cascading and matches by plan, so calling it on a Project OVER
-    // the persisted plan would be a no-op and leak one cached label
-    // table per round (ADVICE r4).
-    var pinned: Option[DataFrame] = Some(labels)
-    var prevSum = labelSum(labels) // also materializes the persist
-    var changed = true
-    var it = 0
-    while (changed && it < maxIters) {
+    loop.iterate(init, maxIters, Some(graft.Fixpoint.Until(labelSumCol))) { (labels, _) =>
       // self-loops make the min cover the node's own label, and give
       // every node a matching edge row — no left join needed
-      val raw = edges
+      edges
         .join(labels.select(col("doc_id").as("dst"), col("label").as("dst_label")),
           Seq("dst"))
         .groupBy(col("src").as("doc_id"))
         .agg(min(col("dst_label")).as("label"))
-      // TRUNCATE lineage every 8th round (the pageRank periodic-pin
-      // pattern, but with a checkpoint): even with one label-table
-      // reference per round, each round nests the previous round's
-      // cached plan, and AQE's explain rendering walks BOTH the initial
-      // and final physical plan of every nested adaptive subtree — a
-      // 2^(depth) walk that a high-DIAMETER graph turns into minutes of
-      // driver CPU and then an OOM (measured: chain-12 25.8 s, chain-20
-      // exhausted an 8 GiB driver; found by RandomizedEquivalenceSpec's
-      // mixed random+chain graphs). A localCheckpoint every 8 rounds
-      // caps nesting at 8 (<= 256 bounded renders) while keeping the
-      // cheap persist/unpersist cadence between truncation points.
-      val truncate = (it + 1) % 8 == 0
-      val upd = if (truncate) raw.materialized else raw.persist()
-      val newSum = labelSum(upd) // materializes upd
-      changed = newSum.compareTo(prevSum) != 0
-      prevSum = newSum
-      pinned.foreach(_.unpersist())
-      pinned = if (truncate) None else Some(upd)
-      labels = upd
-      it += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(labels still changing) — partially-propagated cluster ids " +
-          "would be silently wrong; raise maxIters for graphs with " +
-          s"diameter > $maxIters")
-    // flatten the result so the last persisted table can be released now
-    // rather than held for the caller's (lazy) lifetime
-    val out = labels.select(col("doc_id"), col("label").as("cluster_id"))
-      .materialized
-    pinned.foreach(_.unpersist())
-    out
+    }.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR
@@ -1384,21 +1322,15 @@ object Dedup {
     *     m = min of u's smaller neighbors; attach each of them and u
     *     itself to m.
     *
-    * Loop discipline deliberately DIFFERS from connectedComponents: the
-    * edge set itself evolves (no static checkpointed side), and each
-    * star references the current edge table twice (min aggregation +
-    * join back), so lineage would double per round without a hard cut —
-    * every round localCheckpoint's its result instead of persisting.
-    * The checkpoint-block residency tradeoff documented on the CC loop
-    * is bounded here BY THE ALGORITHM: rounds are O(log n) (not
-    * O(diameter)), and the edge set contracts toward one row per
-    * non-root node, so at most a handful of shrinking edge tables are
-    * ever resident.
+    * Unlike connectedComponents the edge set itself evolves (no static
+    * checkpointed side), and the large-star output is referenced twice
+    * (min aggregation + join back), so it is cut within its round.
     *
     * Convergence is EXACT successive-round set equality (equal counts +
     * empty left-anti on the canonical, distinct sets) — star rounds do
     * not shrink per-node labels monotonically, so the labelSum scalar
-    * invariant does not apply. At the fixed point each component is a
+    * invariant does not apply. The count is read in the job that cuts
+    * the round; the left-anti job runs only when the counts are equal. At the fixed point each component is a
     * single star centered at its minimum id (paper, Thm 1-3), so the
     * final label table is one min-aggregation over the star edges.
     *
@@ -1416,72 +1348,53 @@ object Dedup {
     * package-visible so TwoStarSpec can pin the logarithmic-round claim
     * on a high-diameter graph. */
   private[graft] def twoStarWithRounds(pairs: DataFrame,
-                                       maxIters: Int = 50): (DataFrame, Int) = {
+                                       maxIters: Int = 50): (DataFrame, Int) =
+      graft.Fixpoint("connectedComponentsTwoStar") { loop =>
     // edge-volume-sized width via explicit repartition only (the
     // connectedComponents ConcurrencySpec contract — never conf.set)
     val parts = graft.Rebalance.edgeWidth(pairs.sparkSession, pairs.count() * 2)
     // every input node, for singleton/root labeling at the end
-    val nodes = pairs.select(col("doc_a").as("n"))
+    val nodes = loop.cut(pairs.select(col("doc_a").as("n"))
       .union(pairs.select(col("doc_b").as("n")))
-      .distinct()
-      .materialized
+      .distinct())
     // canonical (hi > lo) distinct start set; input self-pairs drop
     // (their nodes stay in `nodes` and label themselves)
-    var cur = pairs
+    val init = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
         least(col("doc_a"), col("doc_b")).as("lo"))
       .filter(col("hi") =!= col("lo"))
       .distinct()
       .repartition(parts, col("hi"))
-      .materialized
-    var converged = false
-    var it = 0
-    // carry the round's edge count forward (round 18): the convergence
-    // check re-ran `cur.count()` every round — a whole scheduled job per
-    // round whose value the previous round already computed as ss.count()
-    var curCount = cur.count()
-    while (!converged && it < maxIters) {
+    val sameEdges = graft.Fixpoint.Until(count(lit(1)),
+      (cur, next) => next.join(cur, Seq("hi", "lo"), "left_anti").isEmpty)
+    val stars = loop.iterate(init, maxIters, Some(sameEdges)) { (cur, round) =>
       // LARGE-STAR over the symmetric view
       val sym = cur.select(col("hi").as("u"), col("lo").as("v"))
         .union(cur.select(col("lo").as("u"), col("hi").as("v")))
       val lmins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-      val ls = sym.join(lmins, Seq("u"))
+      val ls = round.cut(sym.join(lmins, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
         .filter(col("hi") =!= col("lo"))
-        .distinct()
-        .materialized
+        .distinct())
       // SMALL-STAR on the canonical orientation: all of hi's neighbors
       // here are < hi, so m = min(lo) needs no least() with hi
       val smins = ls.groupBy("hi").agg(min(col("lo")).as("m"))
-      val ss = ls.join(smins, Seq("hi"))
+      ls.join(smins, Seq("hi"))
         .select(col("lo").as("a"), col("m").as("b"))
         .union(smins.select(col("hi").as("a"), col("m").as("b")))
         .select(greatest(col("a"), col("b")).as("hi"),
           least(col("a"), col("b")).as("lo"))
         .filter(col("hi") =!= col("lo"))
         .distinct()
-        .materialized
-      val ssCount = ss.count()
-      converged = ssCount == curCount &&
-        ss.join(cur, Seq("hi", "lo"), "left_anti").isEmpty
-      curCount = ssCount
-      cur = ss
-      it += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsTwoStar did not converge in $maxIters rounds " +
-          "— a non-star edge set would yield wrong cluster ids; " +
-          "raise maxIters (rounds are O(log n), so this indicates a bug)")
     // star fixed point: every canonical edge points member -> root
-    val lab = cur.groupBy(col("hi").as("mem")).agg(min(col("lo")).as("root"))
+    val lab = stars.groupBy(col("hi").as("mem")).agg(min(col("lo")).as("root"))
     val out = nodes.join(lab, nodes("n") === lab("mem"), "left")
       .select(col("n").as("doc_id"),
         coalesce(col("root"), col("n")).as("cluster_id"))
       .orderBy("doc_id")
-      .materialized
-    (out, it)
+    (loop.cut(out), loop.rounds)
   }
 
   /** Run-lifetime artifact stores for the fuzzy-dedup machinery — the
@@ -1569,7 +1482,7 @@ object Dedup {
     * the min over reps in a component IS the min over all members.
     *
     * The collapse-then-expand shape is the identical-content hot-bucket
-    * guard (VERDICT r4 #1): candidate pair volume scales with distinct
+    * guard: candidate pair volume scales with distinct
     * content while the output still covers every copy, at the linear
     * cost of one (doc -> rep) join.
     *
@@ -1674,26 +1587,23 @@ object Dedup {
     * keep their labels). `isNew` marks the fresh batch's node ids.
     */
   private[graft] def incrementalClustersFromPairs(
-      pairs: DataFrame, isNew: Column => Column): DataFrame = {
-    val oldPairs = pairs
-      .filter(!isNew(col("doc_a")) && !isNew(col("doc_b")))
-      .materialized
-    // the store: labels the history batch job persisted
+      pairs: DataFrame, isNew: Column => Column): DataFrame =
+      graft.Fixpoint("incrementalClusters") { loop =>
+    val oldPairs = loop.cut(pairs.filter(!isNew(col("doc_a")) && !isNew(col("doc_b"))))
+    // the store: labels the history batch job persisted (already flat)
     val stored = connectedComponentsTwoStar(oldPairs)
       .select(col("doc_id"), col("cluster_id").as("root"))
-      .materialized
     // today's probe pairs (band-index reach: any pair touching the batch)
     val probe = pairs.filter(isNew(col("doc_a")) || isNew(col("doc_b")))
-    val contracted = probe
+    val contracted = loop.cut(probe
       .join(stored.select(col("doc_id").as("doc_a"), col("root").as("ra")),
         Seq("doc_a"), "left")
       .join(stored.select(col("doc_id").as("doc_b"), col("root").as("rb")),
         Seq("doc_b"), "left")
       .select(coalesce(col("ra"), col("doc_a")).as("doc_a"),
-        coalesce(col("rb"), col("doc_b")).as("doc_b"))
-      .materialized
+        coalesce(col("rb"), col("doc_b")).as("doc_b")))
     // merge ONLY the touched roots/new nodes
-    val merged = connectedComponentsTwoStar(contracted).materialized
+    val merged = connectedComponentsTwoStar(contracted)
     val reroot = merged.select(col("doc_id").as("root"),
       col("cluster_id").as("new_root"))
     val oldFinal = stored.join(reroot, Seq("root"), "left")

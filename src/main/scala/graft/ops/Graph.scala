@@ -21,8 +21,9 @@ import graft.Materialize.MaterializeOps
   *    `spark.graft.reliableCheckpoint=true` on a cluster), so each
   *    round shuffles only the small per-node rank table, never the
   *    edges;
-  *  - per-round state is two rank tables (current persisted, previous
-  *    unpersisted) — resident state is O(|nodes|) regardless of rounds;
+  *  - the rounds run on graft.Fixpoint, which cuts every few rounds and
+  *    releases superseded cuts — resident state is O(|nodes|) regardless
+  *    of rounds;
   *  - rank arithmetic is integral (micro-units, floor division), so the
   *    result is bit-identical across engines and partitionings — the
   *    determinism contract every registered query carries.
@@ -52,9 +53,9 @@ object Graph {
                iters: Int = 3, topK: Int = 20): DataFrame = {
     // the two id families share one BIGINT space via the supplier
     // offset; a custkey at or above the offset would silently merge a
-    // customer with a supplier (ADVICE r6: sf>=10 custkeys reach 1.5M,
-    // and the oracle shares the constant so the hash-compare could not
-    // catch it) — guard in-plan so the collision RAISES instead
+    // customer with a supplier (sf>=10 custkeys reach 1.5M, and the
+    // oracle shares the constant so the hash-compare could not catch
+    // it) — guard in-plan so the collision RAISES instead
     val pairs = tradePairs(spark, sfDir)
       .select(
         when(col("c") < lit(1000000L), col("c"))
@@ -79,42 +80,37 @@ object Graph {
     * `c`, `s`; node ids must already be disjoint). Exposed so specs can
     * pin hand-computed ranks on a toy graph. Returns (node, r).
     *
-    * Partition sizing, persist discipline and the final flatten follow
-    * Dedup.connectedComponents: rounds on a small graph are scheduling-
-    * overhead-bound at the session's batch width, so the loop runs at
-    * ~100k edges/partition (capped at the session setting); the loop
-    * persists each round and unpersists the previous, and the returned
-    * table is localCheckpoint'd flat so the last persisted round can be
-    * released immediately.
+    * Rounds on a small graph are scheduling-overhead-bound at the
+    * session's batch width, so the loop runs at ~100k edges/partition
+    * (capped at the session setting). The returned table is cut flat,
+    * so the per-call layout releases as soon as the loop returns.
     */
-  def pageRankFromPairs(pairs: DataFrame, iters: Int): DataFrame = {
-    val (edges, deg) = pageRankLayout(pairs)
-    // the loop's result is materialized flat before return, so the
-    // per-call layout frames release immediately instead of pinning
-    // executor storage until JVM exit (ADVICE r12) — the un-stored
-    // layouts must pay honest per-call cost, not leak it
-    try pageRankFromLayout(edges, deg, iters)
-    finally {
-      graft.Materialize.release(edges)
-      graft.Materialize.release(deg)
+  def pageRankFromPairs(pairs: DataFrame, iters: Int): DataFrame =
+      graft.Fixpoint("pageRank") { loop =>
+    val (edges, deg) = pageRankLayout(pairs, loop)
+    val ranks = loop.iterate(deg.select(col("node"), lit(1000000L).as("r")), iters) {
+      (ranks, _) =>
+        val contrib = ranks.join(deg, "node")
+          .select(col("node").as("src"), expr("r div outdeg").as("contrib"))
+        edges.join(contrib, Seq("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(expr("150000L + (85 * sum(contrib)) div 100").as("r"))
     }
+    loop.cut(ranks)
   }
 
   /** Builds the static per-run edge layout: symmetrized edges
     * repartitioned on the round join key, plus out-degrees — the two
-    * tables every round re-reads. Checkpointed flat so the loop pays the
-    * producing join/exchange exactly once per call.
+    * tables every round re-reads, cut once per call.
     */
-  private def pageRankLayout(pairs: DataFrame): (DataFrame, DataFrame) = {
-    // materialize the pair derivation ONCE: it feeds the edge-count
-    // (partition sizing) and BOTH symmetrize branches — without the
-    // checkpoint the producing join would run three times. A frame
-    // that is already flat (the store-served tradePairs) is used as is
-    // (an unconditional re-checkpoint paid one full extra pass per
-    // call) — and only an OWNED copy is released below, never the
-    // store's own blocks.
-    val owned = !graft.Materialize.isFlat(pairs)
-    val p = if (owned) pairs.materialized else pairs
+  private def pageRankLayout(pairs: DataFrame,
+                             loop: graft.Fixpoint): (DataFrame, DataFrame) = {
+    // cut the pair derivation ONCE: it feeds the edge-count (partition
+    // sizing) and BOTH symmetrize branches — without the cut the
+    // producing join would run three times. A frame that is already
+    // flat (the store-served tradePairs) is used as is; its store owns
+    // its lifecycle.
+    val p = if (graft.Materialize.isFlat(pairs)) pairs else loop.cut(pairs)
     val sym = p.select(col("c").as("src"), col("s").as("dst"))
       .unionByName(p.select(col("s").as("src"), col("c").as("dst")))
     val parts = graft.Rebalance.edgeWidth(p.sparkSession, p.count() * 2)
@@ -123,81 +119,12 @@ object Graph {
     // queries; ConcurrencySpec). The per-round contrib join
     // co-partitions to the edge side's width automatically; the rank
     // re-aggregation runs at session width with AQE coalescing.
-    val edges = sym.repartition(parts, col("src")).materialized
-    val deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .materialized
-    // edges/deg are checkpointed flat above, so an OWNED pair copy's
-    // blocks are no longer reachable — release it now (ADVICE r12); a
-    // store-served frame stays, its store owns the lifecycle
-    if (owned) graft.Materialize.release(p)
+    val edges = loop.cut(sym.repartition(parts, col("src")))
+    val deg = loop.cut(edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg")))
     (edges, deg)
   }
 
-  private def pageRankFromLayout(edges: DataFrame, deg: DataFrame,
-                                 iters: Int): DataFrame = {
-    var ranks = deg.select(col("node"), lit(1000000L).as("r"))
-    var pinned: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib = ranks.join(deg, "node")
-        .select(col("node").as("src"), expr("r div outdeg").as("contrib"))
-      var next = edges.join(contrib, Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(expr("150000L + (85 * sum(contrib)) div 100").as("r"))
-      // materialize PERIODICALLY, not per round: edges are checkpointed
-      // flat, so a few rounds of lazy lineage are shallow joins Catalyst
-      // composes into one job — per-round persist+count actions cost
-      // more than they save on short walks. Every 4th round (and the
-      // last) pins the current table and releases the previous pin, so
-      // long walks still keep lineage and resident state bounded.
-      if (i % 4 == 0 || i == iters) {
-        next = next.persist()
-        next.count()
-        if (pinned != null) pinned.unpersist()
-        pinned = next
-      }
-      ranks = next
-    }
-    val out = ranks.materialized
-    if (pinned != null) pinned.unpersist()
-    out
-  }
-
-  /** graph_triangles: exact triangle census of the co-supplier graph
-    * (suppliers linked when they ship lines of the SAME order) — the
-    * third canonical graph workload next to PageRank and connected
-    * components, and the basis of the global clustering coefficient
-    * (how clique-ish the supply network is; a spam/collusion signal on
-    * entity graphs generally).
-    *
-    * The edge rule is SCALE-INVARIANT: u and v are linked only when
-    * their shared-order count is at least `strengthPpm` of the
-    * smaller partner's own order count ("a regular partner appears in
-    * >= 1% of my orders"). An absolute co-occurrence threshold would
-    * drift with fact volume — double the order history and every
-    * casual pairing crosses it, densifying the graph toward complete
-    * (the synthetic corpus IS near-complete on raw co-occurrence);
-    * the ratio rule keeps edge semantics and census cost stable as
-    * facts grow, because shared counts and per-supplier totals scale
-    * together.
-    *
-    * Scale shape — the degree-ordered node-iterator (Schank & Wagner
-    * 2005): every edge is ORIENTED from its lower endpoint by
-    * (degree, id); a triangle then has exactly ONE node with both
-    * out-edges (its (deg,id)-minimum), so wedges = the self-join of
-    * the oriented edge list on that node, and each hub's fanout is
-    * bounded by its ORIENTED out-degree, O(sqrt |E|) — a star node
-    * contributes ZERO oriented wedges instead of deg^2. The closing
-    * check is one semi-join back to the canonical edge set. Edge
-    * building is per-order: order sizes are bounded (TPC-H <= 7
-    * lines), so the pair explode is linear in lineitem; the vertex
-    * set is the supplier DIMENSION, so census cost is independent of
-    * fact growth by construction.
-    *
-    * Output (one audit row): n_nodes, n_edges, n_wedges (ALL wedges,
-    * sum d(d-1)/2 — the clustering-coefficient denominator),
-    * n_triangles, global_cc_milli = (3000 * tri) div wedges.
-    */
   /** The scale-invariant co-supplier edge set shared by the triangle
     * census and the k-core peel: u < v canonical pairs whose shared
     * order count is >= strengthPpm of the smaller partner's own order
@@ -255,6 +182,41 @@ object Graph {
   private val tradePairStores =
     graft.ArtifactStore.frames("graph.tradePairs")
 
+  /** graph_triangles: exact triangle census of the co-supplier graph
+    * (suppliers linked when they ship lines of the SAME order) — the
+    * third canonical graph workload next to PageRank and connected
+    * components, and the basis of the global clustering coefficient
+    * (how clique-ish the supply network is; a spam/collusion signal on
+    * entity graphs generally).
+    *
+    * The edge rule is SCALE-INVARIANT: u and v are linked only when
+    * their shared-order count is at least `strengthPpm` of the
+    * smaller partner's own order count ("a regular partner appears in
+    * >= 1% of my orders"). An absolute co-occurrence threshold would
+    * drift with fact volume — double the order history and every
+    * casual pairing crosses it, densifying the graph toward complete
+    * (the synthetic corpus IS near-complete on raw co-occurrence);
+    * the ratio rule keeps edge semantics and census cost stable as
+    * facts grow, because shared counts and per-supplier totals scale
+    * together.
+    *
+    * Scale shape — the degree-ordered node-iterator (Schank & Wagner
+    * 2005): every edge is ORIENTED from its lower endpoint by
+    * (degree, id); a triangle then has exactly ONE node with both
+    * out-edges (its (deg,id)-minimum), so wedges = the self-join of
+    * the oriented edge list on that node, and each hub's fanout is
+    * bounded by its ORIENTED out-degree, O(sqrt |E|) — a star node
+    * contributes ZERO oriented wedges instead of deg^2. The closing
+    * check is one semi-join back to the canonical edge set. Edge
+    * building is per-order: order sizes are bounded (TPC-H <= 7
+    * lines), so the pair explode is linear in lineitem; the vertex
+    * set is the supplier DIMENSION, so census cost is independent of
+    * fact growth by construction.
+    *
+    * Output (one audit row): n_nodes, n_edges, n_wedges (ALL wedges,
+    * sum d(d-1)/2 — the clustering-coefficient denominator),
+    * n_triangles, global_cc_milli = (3000 * tri) div wedges.
+    */
   def triangleCensus(spark: SparkSession, sfDir: String,
                      strengthPpm: Long = 10000L): DataFrame = {
     // one pass feeds degrees, orientation and closure
@@ -297,29 +259,26 @@ object Graph {
     * the oracle replays rounds as chained CTEs), so the output is the
     * `rounds`-step peel, converged iff a round removes nothing.
     *
-    * Scale shape: the iterative-loop discipline of connectedComponents
-    * — the edge set localCheckpoint's per round (lineage stays flat),
-    * each round is one bounded degree aggregation plus two semi-joins
-    * on node ids, and resident state is the current edge table only.
-    * Node ids never leave the plan; nothing collects.
+    * Scale shape: each round is one bounded degree aggregation plus
+    * two semi-joins on node ids (the two reads of the survivor set
+    * share one exchange). The peeled edge table is cut within its
+    * round: the next round reads it twice, for degrees and for the
+    * semi-joins. Node ids never leave the plan; nothing collects.
     *
     * Output: (node, d) for nodes with >= 1 surviving edge after the
     * peel, d = degree in the peeled subgraph, ordered by node.
     */
   def kCore(spark: SparkSession, sfDir: String, k: Int = 3,
-            rounds: Int = 3, strengthPpm: Long = 10000L): DataFrame = {
-    var e = coSupplierEdges(spark, sfDir, strengthPpm)
-    for (_ <- 1 to rounds) {
+            rounds: Int = 3, strengthPpm: Long = 10000L): DataFrame =
+      graft.Fixpoint("kCore") { loop =>
+    loop.iterate(coSupplierEdges(spark, sfDir, strengthPpm), rounds) { (e, round) =>
       val surv = e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select("n")
-        .materialized
-      e = e.join(surv.select(col("n").as("u")), Seq("u"), "left_semi")
-        .join(surv.select(col("n").as("v")), Seq("v"), "left_semi")
-        .materialized
-    }
-    e.select(explode(array(col("u"), col("v"))).as("node"))
+      round.cut(e.join(surv.select(col("n").as("u")), Seq("u"), "left_semi")
+        .join(surv.select(col("n").as("v")), Seq("v"), "left_semi"))
+    }.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("d"))
       .orderBy("node")
   }
@@ -344,7 +303,7 @@ object Graph {
     * BIGINT.
     *
     * Scale shape: the [[pageRankFromPairs]] loop contract — the edge
-    * list is checkpointed once PER HALF-STEP KEY (a c-partitioned and
+    * list is cut once PER HALF-STEP KEY (a c-partitioned and
     * an s-partitioned copy, the CSR/CSC duplication); each half-step is
     * then one co-partitioned join of the bounded score table plus one
     * map-side-combinable sum; the 1-row max broadcasts back (never a
@@ -373,83 +332,50 @@ object Graph {
     * Returns (hub(c, score), auth(s, score)), scores in micros.
     */
   private[graft] def hitsFromPairs(pairs: DataFrame,
-                                   iters: Int): (DataFrame, DataFrame) = {
-    val (edgesByC, edgesByS) = hitsLayout(pairs)
-    // hitsFromLayout materializes its outputs flat, so the per-call
-    // CSR/CSC copies release immediately after the rounds instead of
-    // pinning executor storage until JVM exit (ADVICE r12)
-    try hitsFromLayout(edgesByC, edgesByS, iters)
-    finally {
-      graft.Materialize.release(edgesByC)
-      graft.Materialize.release(edgesByS)
-    }
-  }
-
-  /** Builds the static per-run HITS edge layout. TWO checkpointed edge
-    * copies, one per half-step join key: the auth step joins hubs on c,
-    * the hub step joins auths on s — a single c-partitioned copy would
-    * re-exchange the full edge list on s EVERY round (ADVICE r9);
-    * pre-partitioning each copy once makes every half-step one
-    * co-partitioned join of the bounded score table, paid-for-once edge
-    * layout (2x edge storage, the standard CSR/CSC duplication of every
-    * graph engine), paid once per call.
-    */
-  private def hitsLayout(pairs: DataFrame): (DataFrame, DataFrame) = {
-    // already-flat input (the store-served tradePairs) is used as is —
-    // see pageRankLayout
-    val owned = !graft.Materialize.isFlat(pairs)
-    val p = if (owned) pairs.materialized else pairs
-    val parts = graft.Rebalance.edgeWidth(p.sparkSession, p.count())
-    val byC = p.repartition(parts, col("c")).materialized
-    val byS = p.repartition(parts, col("s")).materialized
-    // both copies are checkpointed flat, so an OWNED pair copy's blocks
-    // are no longer reachable — release it now (ADVICE r12)
-    if (owned) graft.Materialize.release(p)
-    (byC, byS)
-  }
-
-  private def hitsFromLayout(edgesByC: DataFrame, edgesByS: DataFrame,
-                             iters: Int): (DataFrame, DataFrame) = {
-    // materialize the PRE-rescale sum (it is referenced twice: the
-    // 1-row max subquery and the main frame — unmaterialized, the
-    // join+aggregate would run twice per half-step); the rescale
-    // output itself is referenced exactly once by the next half-step,
-    // so it rides as a shallow crossJoin over the checkpointed raw.
-    // Round 17 note: a LAZY persist was tried here instead of the eager
-    // localCheckpoint (to save one scheduled job per half-step) and
-    // measured 2.3x WORSE (3.2 -> 7.3 s) — with nothing forcing the
-    // cache, the nested adaptive broadcast subtrees re-execute uncached
-    // prefixes before each level's cache fills; the eager checkpoint is
-    // load-bearing, not overhead.
-    val interm = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def rescaled(df: DataFrame, key: String): DataFrame = {
-      val r = df.materialized
-      interm += r
-      val mx = r.agg(max(col("raw")).as("mx"))
-      r.crossJoin(broadcast(mx))
+                                   iters: Int): (DataFrame, DataFrame) =
+      graft.Fixpoint("hits") { loop =>
+    val (edgesByC, edgesByS) = hitsLayout(pairs, loop)
+    // the PRE-rescale sum is referenced twice (the 1-row max subquery
+    // and the main frame), so it is cut within its round; the rescale
+    // output is referenced once by the next half-step, so it rides as a
+    // shallow crossJoin over the cut. A lazy persist in place of the
+    // eager cut measured 2.3x worse (3.2 -> 7.3 s): with nothing forcing
+    // the cache, the nested adaptive broadcast subtrees re-execute
+    // uncached prefixes before each level's cache fills.
+    def rescaled(raw: DataFrame, key: String): DataFrame = {
+      val mx = raw.agg(max(col("raw")).as("mx"))
+      raw.crossJoin(broadcast(mx))
         .select(col(key),
           expr("(1000000 * cast(raw as decimal(38,0))) div mx").as("score"))
     }
-    var hub = edgesByC.select("c").distinct()
-      .withColumn("score", lit(1000000L))
+    def summed(edges: DataFrame, scores: DataFrame, by: String, to: String) =
+      edges.join(scores, Seq(by)).groupBy(to)
+        .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
     var auth: DataFrame = null
-    for (i <- 1 to iters) {
-      auth = rescaled(
-        edgesByC.join(hub, Seq("c"))
-          .groupBy("s")
-          .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "s")
-      hub = rescaled(
-        edgesByS.join(auth, Seq("s"))
-          .groupBy("c")
-          .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "c")
+    val hub = loop.iterate(edgesByC.select("c").distinct()
+        .withColumn("score", lit(1000000L)), iters) { (hub, round) =>
+      auth = rescaled(round.cut(summed(edgesByC, hub, "c", "s")), "s")
+      rescaled(round.cut(summed(edgesByS, auth, "s", "c")), "c")
     }
-    // flatten the outputs, then release the 2×iters per-half-step raw
-    // frames — without this each call leaks O(iters · |nodes|) blocks
-    // until JVM exit (ADVICE r12, same class as the layout frames)
-    val hubOut = hub.materialized
-    val authOut = auth.materialized
-    interm.foreach(graft.Materialize.release)
-    (hubOut, authOut)
+    (loop.cut(hub), loop.cut(auth))
+  }
+
+  /** Builds the static per-run HITS edge layout. TWO cut edge copies,
+    * one per half-step join key: the auth step joins hubs on c, the hub
+    * step joins auths on s — a single c-partitioned copy would
+    * re-exchange the full edge list on s EVERY round; pre-partitioning
+    * each copy once makes every half-step one co-partitioned join of the
+    * bounded score table (2x edge storage, the standard CSR/CSC
+    * duplication of every graph engine), paid once per call.
+    */
+  private def hitsLayout(pairs: DataFrame,
+                         loop: graft.Fixpoint): (DataFrame, DataFrame) = {
+    // already-flat input (the store-served tradePairs) is used as is —
+    // see pageRankLayout
+    val p = if (graft.Materialize.isFlat(pairs)) pairs else loop.cut(pairs)
+    val parts = graft.Rebalance.edgeWidth(p.sparkSession, p.count())
+    (loop.cut(p.repartition(parts, col("c"))),
+      loop.cut(p.repartition(parts, col("s"))))
   }
 
   /** graph_communities: community detection via SYNCHRONOUS label
@@ -476,7 +402,7 @@ object Graph {
     * collapse to one partial row per (node, label) per input partition,
     * so a star hub costs |labels-seen| rows, not degree. Each round
     * references the label table exactly once — lineage linear in
-    * rounds, no per-round checkpoint needed.
+    * rounds, so the default 3 rounds run uncut.
     *
     * Output: (node, community) for every node with >= 1 qualified edge,
     * ordered by node; community = the converged label (communities are
@@ -495,18 +421,19 @@ object Graph {
       .union(e.select(col("v").as("src"), col("u").as("dst")))
       .materialized
     // the symmetric view lists every node as src at least once
-    var labels = sym.select(col("src").as("n")).distinct()
+    val init = sym.select(col("src").as("n")).distinct()
       .withColumn("label", col("n"))
-    for (_ <- 1 to rounds) {
-      labels = sym
-        .join(labels.select(col("n").as("dst"), col("label")), Seq("dst"))
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("best"))
-        .select(col("src").as("n"), (-col("best.neg")).as("label"))
+    graft.Fixpoint("communities") { loop =>
+      loop.iterate(init, rounds) { (labels, _) =>
+        sym
+          .join(labels.select(col("n").as("dst"), col("label")), Seq("dst"))
+          .groupBy(col("src"), col("label"))
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy(col("src"))
+          .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("best"))
+          .select(col("src").as("n"), (-col("best.neg")).as("label"))
+      }.select(col("n").as("node"), col("label").as("community"))
+        .orderBy("node")
     }
-    labels.select(col("n").as("node"), col("label").as("community"))
-      .orderBy("node")
   }
 }

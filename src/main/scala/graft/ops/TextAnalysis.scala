@@ -338,14 +338,14 @@ object TextAnalysis {
   /** The default retrieval workload for `bm25TopK` / `streamBm25`:
     * five 3-term queries DERIVED from the corpus itself — query i's
     * terms are the 3 lexicographically largest distinct tokens of the
-    * i-th smallest doc with doc_id % 100 == 0. Derived, not hardcoded
-    * (round 16): a fixed term list is vacuously 0-row on any corpus
+    * i-th smallest doc with doc_id % 100 == 0. Derived, not hardcoded,
+    * because a fixed term list is vacuously 0-row on any corpus
     * with a different vocabulary (the Zipf retrieval corpus made the
     * old "spark table join" workload score nothing), while this rule
     * is deterministic on every corpus, stays FIXED as replication
     * grows the corpus (the 5 source docs are the smallest ids), and
     * the oracle mirrors it exactly (same sort, same slice). ASCII
-    * assumption (ADVICE r16): the "same string order both sides"
+    * assumption: the "same string order both sides"
     * invariant holds because Spark sorts by UTF-16 code units and
     * DuckDB by UTF-8 bytes — identical orders ONLY over ASCII; a
     * non-ASCII vocabulary can rank U+E000..U+FFFF vs supplementary-
@@ -705,7 +705,7 @@ object TextAnalysis {
     */
   // private[graft]: the oracle SQL (SparkEntry.hybridLexCtes) interpolates
   // this same constant — one definition for both sides of the gate, so a
-  // retune can never surface as an opaque oracle-hash mismatch (ADVICE r15)
+  // retune can never surface as an opaque oracle-hash mismatch
   private[graft] val hybridMaxQueryTerms = 32
 
   private def hybridLexRanks(spark: SparkSession, sfDir: String,
@@ -813,7 +813,7 @@ object TextAnalysis {
     // a workload with zero corpus-matching terms percolates nothing —
     // return the empty relation rather than unrolling an empty struct
     // array (explode of a zero-field array types as VOID and fails
-    // analysis; surfaced by a vocabulary-disjoint corpus, round 16)
+    // analysis; a vocabulary-disjoint corpus surfaced it)
     if (qdim.isEmpty)
       return docs.select(col("doc_id"), lit(0L).as("query_id"),
         lit(0L).as("score_micro")).filter(lit(false))
@@ -890,16 +890,14 @@ object TextAnalysis {
     * rounds iterate on the DISTINCT-WORD table (~10^6 rows at any
     * corpus size), exactly what production BPE trainers do. Per round:
     * one map-side-combinable pair-count aggregate (cardinality bounded
-    * by |vocab|^2, in practice tiny), one TakeOrdered(1) for the
-    * winner, and one narrow per-row projection applying the merge as an
-    * `aggregate` fold — no join back, because the winning pair is
-    * pulled to the driver as a ONE-ROW scalar and folded in as
-    * literals, the same bounded-driver-action discipline as
-    * connectedComponents' convergence sum. That also keeps the evolving
-    * table's lineage LINEAR (one reference per round; see the CC
-    * docstring for why a per-round double reference is fatal), with
-    * persist/unpersist of the tracked handle bounding resident state at
-    * ~2 word tables.
+    * by |vocab|^2, in practice tiny) whose winner is read as a one-row
+    * minimum in the job that cuts it, and one narrow per-row projection
+    * applying the merge as an `aggregate` fold — no join back, because
+    * the winning pair is pulled to the driver as a ONE-ROW scalar and
+    * folded in as literals, the same bounded-driver-action discipline
+    * as connectedComponents' convergence sum. That also keeps the
+    * evolving table's lineage LINEAR (one reference per round), and
+    * graft.Fixpoint cuts it every few rounds.
     *
     * The fold is exact greedy BPE: scanning left to right, merge when
     * the accumulator's last atom is `pl` and the current atom is `pr`.
@@ -919,11 +917,6 @@ object TextAnalysis {
       .toDF("round", "pl", "pr", "cnt").orderBy("round")
   }
 
-  /** The training loop behind [[bpeTrain]], returning the merge table
-    * as driver-side values so [[bpeEncode]] can fold the learned merges
-    * into a narrow per-document projection as plan literals. m bounded
-    * one-row driver actions (see the bpeTrain docstring).
-    */
   /** Train-once-per-run BPE merge store (the bm25Store pattern applied
     * to the tokenizer): training is deterministic given the corpus, and
     * every consumer of a trained tokenizer — encode, fertility,
@@ -939,6 +932,11 @@ object TextAnalysis {
   private val bpeMergeStores =
     new graft.ArtifactStore[Seq[(Long, String, String, Long)]](
       "text.bpeMerges")(_ => ())
+  /** The training loop behind [[bpeTrain]], returning the merge table
+    * as driver-side values so [[bpeEncode]] can fold the learned merges
+    * into a narrow per-document projection as plan literals. m bounded
+    * one-row driver reads (see the bpeTrain docstring).
+    */
   private[graft] def bpeTrainMerges(spark: SparkSession, sfDir: String,
                                     m: Int): Seq[(Long, String, String, Long)] =
     bpeMergeStores.getOrBuild(spark, sfDir, Seq("documents"), m) {
@@ -946,59 +944,34 @@ object TextAnalysis {
     }
 
   private def bpeTrainMergesUncached(spark: SparkSession, sfDir: String,
-                                     m: Int): Seq[(Long, String, String, Long)] = {
-    import org.apache.spark.sql.DataFrame
+                                     m: Int): Seq[(Long, String, String, Long)] =
+      graft.Fixpoint("bpeTrain") { loop =>
     val chars = transform(sequence(lit(1), length(col("word"))),
       i => col("word").substr(i, lit(1)))
-    var words: DataFrame = table(spark, sfDir, "documents")
+    val words = loop.cut(table(spark, sfDir, "documents")
       .select(explode(filter(split(lower(col("text")), " "),
         t => length(t) > 0)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("word"), col("freq"), chars.as("syms"))
-      .persist()
-    var pinned = words
+      .select(col("word"), col("freq"), chars.as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var r = 1
-    while (r <= m) {
+    loop.iterate(words, m) { (words, round) =>
       val pairs = transform(sequence(lit(0), size(col("syms")) - 2),
         i => struct(get(col("syms"), i).as("pl"), get(col("syms"), i + 1).as("pr")))
-      val win = words.filter(size(col("syms")) >= 2)
+      val counts = words.filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(pairs).as("p"))
         .groupBy(col("p.pl").as("pl"), col("p.pr").as("pr"))
         .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pl").asc, col("pr").asc)
-        .limit(1).head() // one bounded driver row per round (see above)
-      val (pl, pr, cnt) = (win.getString(0), win.getString(1), win.getLong(2))
-      merges += ((r.toLong, pl, pr, cnt))
+      // the winner: highest count, ties by (pl, pr) ascending
+      val win = round.read(counts,
+        min(struct(-col("cnt"), col("pl"), col("pr")))).getStruct(0)
+      val (pl, pr, cnt) = (win.getString(1), win.getString(2), -win.getLong(0))
+      merges += ((round.n.toLong, pl, pr, cnt))
       val merged = aggregate(col("syms"), array().cast("array<string>"),
         (acc, x) => when(get(acc, size(acc) - 1) === lit(pl) && x === lit(pr),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(pl + pr))))
           .otherwise(concat(acc, array(x))))
-      // lineage TRUNCATION every 8th round (the connectedComponents
-      // discipline): each round nests the previous round's cached plan,
-      // and AQE's explain rendering walks both the initial and final
-      // physical plan of every nested adaptive subtree — exponential in
-      // nesting depth. m=3 defaults never notice; a user training a
-      // real vocabulary (m in the hundreds) must not hit a 2^m wall.
-      val truncate = r % 8 == 0
-      val next =
-        if (truncate) {
-          val t = words.select(col("word"), col("freq"), merged.as("syms"))
-            .materialized
-          pinned.unpersist()
-          pinned = t // not persisted: the final unpersist is a no-op
-          t
-        } else {
-          val t = words.select(col("word"), col("freq"), merged.as("syms")).persist()
-          t.count() // materialize before releasing the previous round
-          pinned.unpersist()
-          pinned = t
-          t
-        }
-      words = next
-      r += 1
+      words.select(col("word"), col("freq"), merged.as("syms"))
     }
-    pinned.unpersist()
     merges.toSeq
   }
 
@@ -1434,7 +1407,7 @@ object TextAnalysis {
     * The native Deflater is released via a TASK COMPLETION LISTENER, not
     * by draining the iterator: a downstream `limit`/take abandons the
     * iterator mid-partition, and an end-of-iterator release would strand
-    * the native buffer until GC (ADVICE r6). The listener fires on every
+    * the native buffer until GC. The listener fires on every
     * task exit path — drained, limited, failed — which is the cleanup
     * contract any native-resource seam on this codebase should copy.
     */

@@ -7,13 +7,13 @@ import scala.collection.mutable
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, window}
+import org.apache.spark.sql.functions.{col, count, lit, window}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
-import graft.ops.UrlCount
+import graft.ops.{Dedup, UrlCount}
 import graft.streaming.StreamingOps
 
 /** Spark-native analog of the reference's failure-injection suite
@@ -30,6 +30,8 @@ object FaultToleranceSpec {
   // (local mode: tasks run in this JVM)
   val failedOnce = new AtomicBoolean(false)
   val streamFailedOnce = new AtomicBoolean(false)
+  val roundFailures = new java.util.concurrent.atomic.AtomicInteger(0)
+  val roundFailedOnce = new AtomicBoolean(false)
 }
 
 class FaultToleranceSpec extends SparkSpec
@@ -142,5 +144,61 @@ class FaultToleranceSpec extends SparkSpec
         s"$sink: ${chain.map(_.getClass.getName)}")
       assert(sessions.forall(_.streams.active.isEmpty), s"$sink left a query running")
     }
+  }
+
+  test("a task failure inside a two-star round is retried and changes neither labels nor rounds") {
+    import spark.implicits._
+    // chain 1-2-...-32 plus a star on 100: the chain needs several
+    // rounds, and every job over the input fails partition 0 once,
+    // after it has handed its rows on
+    val edges = ((1L until 32L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (100L, 102L))).toDF("doc_a", "doc_b").repartition(4)
+    def flaky(df: DataFrame): DataFrame = df.mapPartitions { it =>
+      val ctx = TaskContext.get
+      val fail = ctx.attemptNumber == 0 && ctx.partitionId == 0
+      new Iterator[org.apache.spark.sql.Row] {
+        def hasNext: Boolean = {
+          val more = it.hasNext
+          if (!more && fail) {
+            FaultToleranceSpec.roundFailures.incrementAndGet()
+            throw new RuntimeException("injected two-star round failure")
+          }
+          more
+        }
+        def next(): org.apache.spark.sql.Row = it.next()
+      }
+    }(Encoders.row(df.schema))
+    val (clean, cleanRounds) = Dedup.twoStarWithRounds(edges.localCheckpoint())
+    FaultToleranceSpec.roundFailures.set(0)
+    val (got, rounds) = Dedup.twoStarWithRounds(flaky(edges))
+    assert(FaultToleranceSpec.roundFailures.get > 0, "failure was injected")
+    assert(got.collect().toSeq === clean.collect().toSeq)
+    assert(rounds === cleanRounds)
+  }
+
+  test("a retried task inside an observed round does not count its rows twice") {
+    import spark.implicits._
+    // the round's rows pass the observed count before the injected
+    // throw, so a metric merged from the failed attempt would make round
+    // 1's count differ from round 0's and push convergence to round 3
+    FaultToleranceSpec.roundFailedOnce.set(false)
+    val init = (1 to 40).toDF("n").repartition(4)
+    val rounds = Fixpoint("flakyRound") { loop =>
+      loop.iterate(init, 5, Some(Fixpoint.Until(count(lit(1))))) { (df, _) =>
+        df.mapPartitions { it =>
+          val rows = it.toVector
+          val ctx = TaskContext.get
+          val fail = ctx.attemptNumber == 0 && ctx.partitionId == 0 &&
+            FaultToleranceSpec.roundFailedOnce.compareAndSet(false, true)
+          rows.iterator ++ Iterator.single(()).flatMap { _ =>
+            if (fail) throw new RuntimeException("injected observed-round failure")
+            Iterator.empty
+          }
+        }(Encoders.row(df.schema))
+      }
+      loop.rounds
+    }
+    assert(FaultToleranceSpec.roundFailedOnce.get, "failure was injected")
+    assert(rounds === 1)
   }
 }

@@ -5,13 +5,14 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards for the single homes of four mechanisms:
+/** Source guards for the single homes of five mechanisms:
   * `StreamingOps.drain` is the only main code that starts and waits on
   * a stream, `SparkSpec.tempDir` is the only way a spec makes a temp dir
   * (so every one lands under the root deleted at shutdown), the
   * bench's `Census` is the only listener, drained through one bridge,
-  * and `StreamingOps` alone sets a stream's state-store provider, per
-  * stream, with no override knob.
+  * `StreamingOps` alone sets a stream's state-store provider, per
+  * stream, with no override knob, and `Fixpoint` alone caches, releases
+  * and gives up on an iterative loop's rounds.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -105,5 +106,18 @@ class SourceGuardSpec extends AnyFunSuite {
       .filter(f => Files.readString(f.toPath).contains("stateStore.providerClass"))
       .map(_.getName)
     assert(namers === Seq("StreamingOps.scala"))
+  }
+
+  test("the operators neither persist nor unpersist, and only Fixpoint gives up on a loop") {
+    val cachers = for {
+      f <- sources("src/main/scala/graft/ops")
+      text = Files.readString(f.toPath)
+      m <- Seq(".persist(", ".unpersist(") if text.contains(m)
+    } yield s"$m in ${f.getName}"
+    assert(cachers.isEmpty)
+    val throwers = sources("src/main/scala")
+      .filter(f => Files.readString(f.toPath).contains("did not converge"))
+      .map(_.getName)
+    assert(throwers === Seq("Fixpoint.scala"))
   }
 }
