@@ -48,9 +48,11 @@ final class Fixpoint private (name: String) {
   def rounds: Int = round
 
   /** Cut `df` for the rest of the run: a static side every round reads,
-    * or a result that must be flat. */
+    * or a result that must be flat. A state [[iterate]] already cut is
+    * held as it is, not cut again. */
   def cut(df: DataFrame): DataFrame = {
-    val c = Materialize(df)
+    val own = live.indexWhere(_._2 eq df)
+    val c = if (own >= 0) live.remove(own)._2 else Materialize(df)
     held += c
     c
   }
@@ -64,6 +66,9 @@ final class Fixpoint private (name: String) {
   def iterate(init: DataFrame, maxIters: Int, until: Option[Until] = None)
              (step: (DataFrame, Round) => DataFrame): DataFrame = {
     round = 0
+    // an init this loop cut is superseded by the first state cut
+    val own = held.indexWhere(_ eq init)
+    if (own >= 0) live += 0 -> held.remove(own)
     var (state, scalar) = until match {
       case Some(u) => track(init, Some(u.scalar))
       case None => (init, Row.empty)
@@ -81,7 +86,7 @@ final class Fixpoint private (name: String) {
           supersede(state)
         case None if round % CutEvery == 0 =>
           // a step that already cut its own output is not cut again
-          state = if (Materialize.isFlat(next)) next else track(next, None)._1
+          state = if (live.exists(_._2 eq next)) next else track(next, None)._1
           supersede(state)
         case None => state = next
       }

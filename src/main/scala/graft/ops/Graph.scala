@@ -416,24 +416,22 @@ object Graph {
   /** Core LPA rounds over an arbitrary canonical (u, v) edge list —
     * package-visible so GraphSpec can pin hand-computed labels on a
     * barbell graph. */
-  private[graft] def communitiesFromEdges(e: DataFrame, rounds: Int): DataFrame = {
-    val sym = e.select(col("u").as("src"), col("v").as("dst"))
-      .union(e.select(col("v").as("src"), col("u").as("dst")))
-      .materialized
+  private[graft] def communitiesFromEdges(e: DataFrame, rounds: Int): DataFrame =
+      graft.Fixpoint("communities") { loop =>
+    val sym = loop.cut(e.select(col("u").as("src"), col("v").as("dst"))
+      .union(e.select(col("v").as("src"), col("u").as("dst"))))
     // the symmetric view lists every node as src at least once
     val init = sym.select(col("src").as("n")).distinct()
       .withColumn("label", col("n"))
-    graft.Fixpoint("communities") { loop =>
-      loop.iterate(init, rounds) { (labels, _) =>
-        sym
-          .join(labels.select(col("n").as("dst"), col("label")), Seq("dst"))
-          .groupBy(col("src"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("src"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("best"))
-          .select(col("src").as("n"), (-col("best.neg")).as("label"))
-      }.select(col("n").as("node"), col("label").as("community"))
-        .orderBy("node")
-    }
+    loop.iterate(init, rounds) { (labels, _) =>
+      sym
+        .join(labels.select(col("n").as("dst"), col("label")), Seq("dst"))
+        .groupBy(col("src"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy(col("src"))
+        .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("best"))
+        .select(col("src").as("n"), (-col("best.neg")).as("label"))
+    }.select(col("n").as("node"), col("label").as("community"))
+      .orderBy("node")
   }
 }

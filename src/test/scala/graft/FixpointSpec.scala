@@ -71,6 +71,24 @@ class FixpointSpec extends SparkSpec {
       Similarity.ivfAnnKMeans(spark, embDir, centroidMod = 10, rounds = 5))
   }
 
+  test("a cut init goes at the first state cut, and a cut state is held as it is") {
+    val before = storedIds()
+    val out = Fixpoint("toy") { loop =>
+      val init = loop.cut(spark.range(100).toDF("n"))
+      val initIds = planRddIds(init)
+      // a projection over a cut still plans flat; the filter makes each
+      // round a step of real lineage, as the operators' rounds are
+      val s = loop.iterate(init, 4) { (df, _) =>
+        df.select((col("n") + 1).as("n")).filter(col("n") > 0) }
+      assert(eventually(!storedIds().exists(initIds)),
+        "the init cut outlived the round-4 state cut")
+      assert(loop.cut(s) eq s, "the round-4 state was cut twice")
+      s
+    }
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq === (4L until 104L))
+    assert(eventually((storedIds() -- before -- planRddIds(out)).isEmpty))
+  }
+
   test("a convergent loop that runs out of rounds throws, naming the loop") {
     val cc = intercept[IllegalStateException](
       Dedup.connectedComponents(chain(10), maxIters = 2))
